@@ -24,21 +24,15 @@ from real_time_fraud_detection_system_spark.session import (
 )
 
 # Headline MEMBERSHIP RULE (tests/test_bench_headline.py pins it):
-#   1. every query in operators.ROUND_CHANGED (new or rewritten this
-#      round) enters the round it changes -- rewritten-for-scale code
-#      must be measured the same round (the ann_ivf_topk lesson: its
-#      521 s pre-kernel cost went unmeasured while it sat outside this
-#      list);
-#   2. every operator family (module with QUERIES) keeps at least one
+#   1. every operator family (module with QUERIES) keeps at least one
 #      member, so a family-wide regression cannot hide;
-#   3. members accumulate -- a query leaves only if deregistered (the
-#      per-round additions below are the audit trail);
-#   4. deliberately-quadratic teaching variants (dedup_ngram_jaccard,
+#   2. deliberately-quadratic teaching variants (dedup_ngram_jaccard,
 #      embedding_near_dup, dedup_simhash16) stay OUT -- their scale
 #      paths (dedup_minhash_lsh, ann_lsh_bucketed, dedup_simhash) are
 #      in; at bench scale the guards would refuse them anyway.
+# The names are kept stable so BENCH_r*.json files stay comparable.
 # The full registry is measured by tools/scale_sweep.py; this list is
-# the per-round regression gate, not the coverage sweep.
+# the regression gate, not the coverage sweep.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -72,7 +66,6 @@ HEADLINE = [
     "ann_lsh_bucketed",
     "multimodal_features",
     "multimodal_frames",
-    # round-5 additions
     "tfidf_top_terms",
     "semantic_dedup_clusters",
     "dedup_minhash_clusters",
@@ -83,24 +76,17 @@ HEADLINE = [
     "predictions_profile",
     "event_gap_buckets",
     "shuffle_balance_profile",
-    # round-6 additions (q20 joined after its semi-join pushdown fix
-    # so the plan change stays measured round-over-round)
     "dedup_incremental",
     "split_leakage_check",
     "pii_scrub_stats",
     "embedding_outliers",
     "bigram_lm_score",
     "q20_excess_stock_suppliers",
-    # round-6 late additions: ann_ivf_topk enters the headline with its
-    # kernelized assignment (its pre-kernel 100x cost -- 521 s -- went
-    # unmeasured precisely because it sat outside this list; anything
-    # rewritten for scale belongs HERE so regressions stay visible)
     "ann_ivf_topk",
     "ann_recall_eval",
     "crossdoc_ngram_share",
     "supplier_pagerank",
     "dedup_containment",
-    # round-6 continuation additions
     "token_concentration_bins",
     "cluster_safe_split",
     "minhash_lsh_recall",
@@ -124,9 +110,6 @@ HEADLINE = [
     "part_cooccurrence_topk",
     "time_weighted_value",
     "fk_integrity_check",
-    # round-7 additions: the two new corpus operators, plus
-    # dedup_signal_crosstab (now riding the sig/pairs/semlabels memos
-    # -- rewritten-for-scale queries belong here so regressions show)
     "exact_substring_spans",
     "dsir_importance_bins",
     "dedup_signal_crosstab",
@@ -135,8 +118,6 @@ HEADLINE = [
     "dedup_keep_best",
     "packing_budget_sweep",
     "minhash_est_vs_exact",
-    # round-8 additions: SCD2 history + PIT enrichment (storage-layer
-    # temporal surface), Zipf source screen, Chao1 dedup estimator
     "scd2_priority_history",
     "pit_event_enrichment",
     "zipf_alpha_by_source",
@@ -145,89 +126,42 @@ HEADLINE = [
     "kmv_source_overlap",
     "activity_shape_matches",
     "shape_match_recall",
-    # round-9 additions: the containment-candidacy recall gate (new),
-    # and shard_overlap now that it rides the shared source-shingle
-    # census memo (rewritten for scale -> measured; its twin
-    # kmv_source_overlap is already above)
     "containment_recall",
     "shard_overlap",
-    # rule-2 backfill: the windows/OLAP family had no headline member
-    # (found by the new membership test)
     "part_rankings",
-    # round-9 new registrations (rule 1): the banding-parameter pricing
-    # table and the int8-retrieval recall gate
     "lsh_band_sweep",
     "ann_int8_recall",
     "corpus_snapshot_diff",
     "snapshot_novelty",
-    # round-10 new registrations (rule 1): duplication provenance of a
-    # new dump's added docs against the base snapshot; the TwoNN
-    # intrinsic-dimension estimate; the max-epoch token allocation plan
     "added_dup_against_base",
     "intrinsic_dim_twonn",
     "source_epoch_plan",
-    # ...and the per-source quality-PSI leg of the snapshot census
     "snapshot_quality_drift",
-    # ...and the embedding-space class-separability gate
     "label_centroid_separation",
-    # ...and the deterministic A-Res weighted sampler
     "weighted_sample_topk",
-    # ...and the exact (recall-1.0) prefix-filter similarity join
     "dedup_prefix_filter",
-    # ...and BM25 lexical retrieval (fresh + postings-index probe --
-    # the round-12 persist-once/probe-many pair; the gap between the
-    # two IS the measured value of the persisted lexical index)
     "bm25_topk",
     "bm25_indexed_topk",
     "bm25_batch_topk",
     "text_index_stats",
-    # ...and perceptual dedup for the multimodal columns (round-12:
-    # real P6/WAV decode -> integer aHash / energy-envelope dHash ->
-    # 3-of-6-block candidacy)
     "dedup_phash",
     "dedup_audio_fp",
     "dedup_video_fp",
-    # ...and the explode-free grouped bootstrap (round-12 reshape:
-    # per-replica map-side aggregate sums, zero row fanout)
     "bootstrap_fraud_ci",
-    # ...and U-shaped multi-touch attribution
     "position_attribution",
-    # ...and the opening-path session census
     "top_session_paths",
-    # ...and the exactly-replayed HyperLogLog cardinality audit
     "hll_shingle_cardinality",
-    # round-11 new registrations (rule 1): the tombstone/compaction
-    # accounting of the persisted dedup index (removals leg of the
-    # incremental-ingest story), and the BM25+IVF reciprocal-rank
-    # hybrid retrieval fusion
     "index_tombstone_stats",
     "hybrid_topk",
-    # round-13 (rule 1): the ANN member of the index-lifecycle
-    # accounting triple (packing_budget_sweep, also round-13-changed,
-    # is already a headline member above), and the discovered-terms
-    # probe of the postings index
     "ann_index_stats",
     "bm25_discovered_topk",
-    # round-13 optimization rewrites not already members (rule 1:
-    # rewritten-for-scale queries are measured the round they change;
-    # outputs byte-identical, plans/r13/ holds the evidence)
     "bpe_token_stats",
     "dup_rate_by_source",
     "peak_concurrency",
     "wire_format_roundtrip",
-    # late round-13 rewrite (rule 1): shares the unordered
-    # _simhash_fp_frame body with dedup_clusters
     "simhash_fingerprints",
-    # round-13 optimization second pass (rule 1): bounded-frame caches
-    # landed in these two non-member rewrites (event_comovement_corr /
-    # weekly_retention_cohorts / activity_shape_buckets et al. are
-    # members already)
     "event_type_affinity",
     "cusum_changepoints",
-    # round-14 (rule 1): re-attestation of the round-13 part_triangles
-    # rewrite (3x SHUFFLE_HASH, commit 6623642) that missed
-    # ROUND_CHANGED/window/HEADLINE that round (r13 verdict What's
-    # wrong #2) -- measured here for the first time
     "part_triangles",
 ]
 

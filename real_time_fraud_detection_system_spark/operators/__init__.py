@@ -2,7 +2,7 @@
 taking (spark, sf_dir) -> DataFrame) and ORACLE (name -> DuckDB SQL).
 
 ``all_queries()`` / ``all_oracles()`` merge the registries for
-``__spark_entry__``.
+``__spark_entry__`` in module order, then each module's dict order.
 """
 
 from __future__ import annotations
@@ -13,410 +13,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _modules():
-    from . import relational
+    from . import (
+        anomaly, corpusops, dedup, layout, metrics, mlqueries, multimodal,
+        relational, sessionize, similarity, sketches, skew, stats, temporal,
+        textops, tpch_extra, windows,
+    )
 
-    mods = [relational]
-    for name in ("metrics", "dedup", "similarity", "textops", "corpusops", "sessionize", "multimodal", "windows", "temporal", "mlqueries", "tpch_extra", "skew", "anomaly", "layout", "sketches", "stats"):
-        try:
-            mods.append(__import__(f"{__name__}.{name}", fromlist=[name]))
-        except ImportError:
-            pass
-    return mods
-
-
-# The external driver verifies the FIRST 50 registry entries (dict order)
-# against DuckDB. The window rotates every round under one rule:
-# NEWEST-FIRST, THEN OLDEST-VERDICT. Concretely: (a) queries added or
-# changed this round (no valid driver verdict), then (b) the queries
-# whose last driver verdict is oldest (round 3: the 32 queries verified
-# only in round 1), then (c) one representative per operator family not
-# already covered, then (d) filler from the recently-green set --
-# swapped out first when (a) grows. tests/test_registry.py asserts every
-# family has a representative in the first 50.
-DRIVER_SAMPLE = 50
-
-# Queries whose CODE changed this round (new registrations or rewritten
-# internals). The current round's list is the head of PRIORITY (the
-# driver re-verifies changed code first) AND a bench-headline
-# obligation: tests/test_bench_headline.py asserts every member is in
-# bench.py HEADLINE, so anything rewritten for scale gets measured the
-# same round it changes (the round-6 lesson: ann_ivf_topk's 521 s
-# pre-kernel cost went unmeasured precisely because it sat outside the
-# headline). The dict is keyed by ROUND so a forgotten reset is
-# DETECTABLE, not silent (ADVICE r9): tests/test_registry.py asserts
-# ROUND == 1 + the newest CORRECTNESS_r*.json on disk, so a stale
-# round number fails the suite at round start.
-ROUND = 14
-_ROUND_CHANGED_BY_ROUND: dict[int, list[str]] = {
-    11: [
-        # snapshot_quality_drift: per-bucket PSI terms now quantized
-        # to 1e-9 fixed-point BIGINT before the per-source sum
-        # (ADVICE r10 -- the repo's integer-before-sum convention);
-        # source_epoch_plan: dead Window binding deleted (plan
-        # unchanged; re-attested out of caution).
-        "snapshot_quality_drift", "source_epoch_plan",
-        # NEW round-11 registration: the tombstone/compaction
-        # accounting of the persisted dedup index (the registry form
-        # of tombstone_dedup_index / live_dedup_index /
-        # compact_dedup_index -- the removals leg the incremental
-        # ingest story was missing; round-10 verdict Next #4).
-        "index_tombstone_stats",
-        # NEW round-11 registration: reciprocal-rank fusion of the
-        # BM25 lexical ranking and the IVF semantic ranking
-        # (integer-exact RRF -- the canonical hybrid-search primitive;
-        # round-10 verdict Next #5).
-        "hybrid_topk",
-        # REWRITTEN for scale: the exact set-similarity join gained
-        # PPJoin's positional filter (overlap bound from matching
-        # prefix positions) -- 7.8M -> 2.49M verified candidates,
-        # 21.9 -> 18.6 s at 100x, recall still 1.0 (purely
-        # conservative pruning; brute-force equality re-tested).
-        "dedup_prefix_filter",
-    ],
-    # Round 12 (grows as operators land -- round-11 verdict Next
-    # #3/#4):
-    12: [
-        # NEW: bm25_topk answered from the memoized postings index --
-        # the registry face of the persisted lexical index family
-        # (persist_text_index / bm25_search / text_index_sink_writer
-        # / tombstone+compact legs, all library+test).
-        "bm25_indexed_topk",
-        # REFACTORED: bm25_topk's scoring core factored into
-        # _bm25_rank (shared with the indexed probe) -- values
-        # unchanged (equality pinned in tests/test_text_index.py);
-        # re-attested per the rewritten-internals rule.
-        "bm25_topk",
-        # NEW: perceptual-hash image dedup -- real P6 decode ->
-        # 60-cell integer aHash -> the dedup_simhash 3-of-6-block
-        # candidacy; every image's brightness-shifted re-encode twin
-        # caught at Hamming 0 (the invariance is exact in BIGINT
-        # arithmetic on both engines).
-        "dedup_phash",
-        # REWRITTEN for scale: the explode-free grouped bootstrap --
-        # each replica's weighted num/den is its own map-side
-        # aggregate expression, so the 300M-row x16 fanout (the
-        # sweep's standing worst, 34.1 s) never materializes; md5
-        # draws and integer sums byte-identical, output unchanged
-        # (round-11 verdict What's wrong #3).
-        "bootstrap_fraud_ci",
-        # NEW: batch lexical retrieval -- Q fixed term queries
-        # answered from ONE shared postings slice (per-term tf/df
-        # computed once for the term union, per-query integer scoring
-        # from a broadcast (q_id, t) map) -- the 'audit many topics'
-        # amortization the persisted index exists for.
-        "bm25_batch_topk",
-        # NEW: the lexical member of the uniform index-lifecycle
-        # accounting (the dedup index has index_tombstone_stats; all
-        # three persisted indexes now share a registry-checked
-        # removal story): exact BIGINT posting/token/vocabulary cost
-        # of tombstoning one dump's removals.
-        "text_index_stats",
-        # NEW: the perceptual family's AUDIO member -- real RIFF/WAV
-        # chunk-walk decode (payloads wrapped JVM-side into true 8-bit
-        # PCM containers) -> 61-window energy-envelope dHash (delta
-        # bits, DC-offset-invariant by exact BIGINT cancellation) ->
-        # the same 3-of-6-block candidacy.
-        "dedup_audio_fp",
-        # NEW: the perceptual family's VIDEO member, completing the
-        # modality triple -- frame-sampled clip dedup (stub frame
-        # extraction per the multimodal contract, real plumbing):
-        # per-frame 24-bit brightness-invariant aHash, clips joined
-        # on exact (frame_position, frame_hash), pairs at >= 6/8
-        # matching positions; flat (hash-0) frames excluded from the
-        # join on both engines (the quadratic guard for near-empty
-        # clip slices -- output-neutral on the fixtures).
-        "dedup_video_fp",
-        # REFACTORED: the exactly-once fingerprint pair join-back
-        # (candidacy on distinct fingerprints + the self-pair filter)
-        # factored into dedup.wide_pair_join / _duck_wide_pair_select,
-        # now shared verbatim by dedup_simhash / dedup_phash /
-        # dedup_audio_fp on both engines -- values unchanged;
-        # re-attested per the rewritten-internals rule.
-        "dedup_simhash",
-    ],
-    # Round 13 (grows as operators land -- round-12 verdict Next
-    # #1/#3/#4 + ADVICE):
-    13: [
-        # ORACLE REWRITTEN (the round's only red driver row -- a
-        # DuckDB OOM inside the oracle's per-row token-list
-        # materialization, not an engine wrong-answer): token counts
-        # now pure length arithmetic, nothing but (doc_id, source, n)
-        # survives the first CTE; output byte-identical (pinned in
-        # tests). At window index 0 so the driver re-attests first.
-        "packing_budget_sweep",
-        # NEW: the ANN member of the uniform index-lifecycle
-        # accounting triple (dedup: index_tombstone_stats, text:
-        # text_index_stats): exact BIGINT accounting of tombstoning
-        # one dump's removed vectors against the persisted IVF index
-        # -- member rows tombstoned vs live, cells emptied, ppm.
-        "ann_index_stats",
-        # REWRITTEN: real container decode -- clips now wrapped
-        # JVM-side into true YUV4MPEG2 (Y4M) mono containers and the
-        # kernel runs the packaged y4m_frames chunk-walk parse
-        # (header params + per-FRAME marker walk, malformed ->
-        # NotImplementedError) instead of slicing fixed byte spans;
-        # frame grid switched to the container's equal-size frames.
-        "dedup_video_fp",
-        # REWRITTEN: video rows take the same real Y4M parse (frame
-        # bytes from the container walk); image/audio rows keep the
-        # strided-span fallback -- the per-modality split the codec
-        # registry exists for.
-        "multimodal_frames",
-        # REWRITTEN: the perceptual pair queries now filter to
-        # single-byte (ASCII) text on BOTH engines -- the engine
-        # fingerprints UTF-8 bytes while the oracle indexes
-        # characters, so multi-byte rows would silently diverge
-        # (ADVICE r12); the filter makes the assumption structural.
-        # Output-neutral on the fixtures (corpus is ASCII; pinned).
-        "dedup_phash", "dedup_audio_fp",
-        # REWRITTEN: truncated-P6 guard (ppm_pixels validates the
-        # pixel section length, short payloads -> the documented
-        # undecodable-row skip instead of a kernel ValueError,
-        # ADVICE r12) + the 'video' slot of the codec registry now
-        # ships the packaged Y4M decoder by default (raw video rows
-        # still fall back: not a Y4M container).
-        "multimodal_features",
-        # NEW: the registry face of the ARBITRARY-term probe path
-        # (round-12 verdict Next #8): the term set is discovered at
-        # run time from the postings index (the BM25_DISC_TERMS_K
-        # mid-frequency terms with df closest to
-        # n_docs DIV BM25_DISC_DF_DIV, exact BIGINT distance), then
-        # scored through the shared _bm25_rank integer core via a
-        # broadcast picked-term join -- the dynamic-term analogue of
-        # the pushed In-filter no fixed-literal query exercises.
-        "bm25_discovered_topk",
-        # ---- round-13 OPTIMIZATION rewrites (plan/internal changes,
-        # outputs byte-identical -- each re-verified against the
-        # DuckDB oracle when it landed; re-attested per the
-        # rewritten-internals rule; evidence in OPTIMIZATION_r13.md
-        # and plans/r13/):
-        # codegen bigram shingles, then (third pass) the whole count
-        # stage as one map-only Arrow kernel of exact int64s
-        "repetition_stats",
-        # point estimate rides the replica aggregate (one events scan)
-        "bootstrap_fraud_ci",
-        # both sweep-line boundaries explode off one row
-        "peak_concurrency",
-        # one from_json parse replaces two get_json_object parses
-        "wire_format_roundtrip",
-        # corpus x anchor distances as a pruned Arrow kernel
-        "intrinsic_dim_twonn",
-        # dup filter as count() OVER (PARTITION BY h): one shingle pass
-        "exact_substring_spans",
-        # one left join + single aggregate per relation (child scanned
-        # once, not twice)
-        "fk_integrity_check",
-        # SHUFFLE_HASH orders join; aggregate reuses the partitioning
-        "q21_sole_late_supplier",
-        # prefix frame cache()d across the candidate self-join
-        "dedup_prefix_filter",
-        # regex alternation decomposed into split + translate/length
-        "bpe_token_stats",
-        # df as count() OVER (PARTITION BY term): one explode pass
-        "tfidf_top_terms",
-        # _bm25_rank df leg window form (one corpus explode) -- shared
-        # by every lexical entry point
-        "bm25_topk", "bm25_indexed_topk", "hybrid_topk",
-        # no-op candidate distinct dropped; in-place kernel buffers
-        "ann_knn_join", "ann_ivf_topk",
-        # SHUFFLE_HASH candidate pair join (whole wide-fp family)
-        "dedup_simhash", "dedup_clusters_wide",
-        # unordered cached cluster body feeds the rollup once
-        "dup_rate_by_source",
-        # bounded 16-bit edge set enumerated driver-side in numpy
-        # (184 block-confined XOR masks, min-label fixpoint; edge
-        # relation provably identical to the old block self-join) +
-        # the unordered _simhash_fp_frame body shared with
-        # simhash_fingerprints (public sort unchanged)
-        "dedup_clusters", "simhash_fingerprints",
-        # one cached _sax_words frame feeds all three legs (the match
-        # stage split into _shape_matches_frame; public behavior
-        # unchanged) -- shape_match_recall also covers its r8-cohort
-        # slot at (b)
-        "shape_match_recall", "activity_shape_matches",
-        # reporting stage reshaped: one (cid, label) aggregate rolled
-        # up per cid via whole-partition windows (the old stats/lab
-        # pair each re-ran the Arrow assignment kernel over every
-        # vector); integer rollup pinned to the two-aggregate form in
-        # tests
-        "kmeans_fixedpoint",
-        # ---- round-13 optimization, second pass (resumed session):
-        # per-iteration nodes LEFT JOIN dropped (symmetric edge table
-        # => contrib covers every node every round); dup_rate's
-        # root_min rename skip rides the dup_rate_by_source entry above
-        "supplier_pagerank",
-        # bounded centroid (|labels| x dims) and intra (O(labels))
-        # frames cache()d -- uncached, their five/two consumers each
-        # re-ran the full corpus posexplode underneath (the plan
-        # scanned embeddings 10x; 46.1 -> 1.4 s best-of-2 at the 100x
-        # replica)
-        "label_centroid_separation",
-        # the one-row per-dim [min],[max] stats frame cache()d -- both
-        # consumers of the reconstructed frame re-ran the corpus
-        # posexplode + min/max pass to rebuild it (26.4 -> 11.0 s)
-        "ann_int8_recall",
-        # bounded-frame cache()s (same pattern): the days x types daily
-        # grid (6 events scans -> 1), the basket projection (4 -> 1),
-        # the (user, week) distinct frame (3 -> 1), the O(days) daily
-        # rate + cusum frames (4 -> 1), and _sax_words' (user, segment)
-        # count frame (4 -> 2, shared by the whole shape family --
-        # activity_shape_matches / shape_match_recall are already
-        # listed above)
-        "event_comovement_corr", "event_type_affinity",
-        "weekly_retention_cohorts", "cusum_changepoints",
-        "activity_shape_buckets",
-        # ---- round-13 optimization, third pass (second resumed
-        # session; repetition_stats' kernel rewrite and
-        # peak_concurrency's window drop ride their entries above):
-        # cr/ct merged into one conditional-sum rollup, tot folded
-        # from the bounded per-bucket frame (4 checkpoint scans -> 2)
-        "dsir_importance_bins",
-        # both bigram passes as map-only Arrow count kernels (map-side
-        # partial aggregation in Python; integer multiplicities keep
-        # the sums exact)
-        "bigram_lm_score",
-    ],
-    # Round 14 (optimization round 2 of 2 -- grows as optimizations
-    # land; round-13 verdict Next list):
-    14: [
-        # RE-ATTESTATION (round-13 verdict What's wrong #2): rewritten
-        # in round 13 (SHUFFLE_HASH on all three joins, commit 6623642)
-        # but never added to ROUND_CHANGED/window/HEADLINE -- the
-        # driver has not attested the hinted form. Code unchanged this
-        # round; bookkeeping repair at window index 0.
-        "part_triangles",
-        # REWRITTEN (r13 verdict Next #3): per-iteration rounds now
-        # broadcast the O(nodes) scores frame against a dst-partitioned
-        # edge cache (size-guarded on the measured node count,
-        # PR_BCAST_MAX_NODES; sort-merge fallback above it) -- the
-        # scores-side shuffle + both per-round sorts gone, partial-agg
-        # exchange shrunk 32x. 30.8 -> 18.9 s same-session A/B at 100x.
-        "supplier_pagerank",
-        # REWRITTEN (r13 verdict Next #5): the 16-way conv/CASE-ladder
-        # + 34-sum hash aggregate moved into one map-only Arrow kernel
-        # of exact int64 per-day partials (md5 stays JVM-side as one
-        # 64-byte blob per event); bit-identity pinned by the
-        # searchsorted/uint32 parity test. 14.2 -> 3.4 s at 100x.
-        "bootstrap_fraud_ci",
-        # REWRITTEN: the BPE alternation regex decomposed into split +
-        # translate/length arithmetic -- the identity bpe_token_stats
-        # proved in round 13, applied to its second consumer (oracle
-        # still runs the regex). 6.2 -> 2.1 s at 100x. Was already in
-        # the (b) stale cohort this window; moved up to (a).
-        "token_fertility",
-        # REWRITTEN (r13 verdict Next #7 / watch-list): the unbounded
-        # O(docs x prefix tokens) prefix frame now persists DISK_ONLY
-        # instead of cache() -- A/B at 100x: 34.8 (deser memory) vs
-        # 24.3 s (serialized disk, page-cache-backed); the scale-safe
-        # posture for the family's one unbounded materialization.
-        # Second pass: df as count(*) OVER (PARTITION BY h) instead of
-        # groupBy+join-back (the tfidf precedent) -- one h-keyed
-        # exchange of the token frame instead of two. 25.5 -> 14.9 s
-        # both-orders best-of-2 at 100x.
-        "dedup_prefix_filter",
-        # REWRITTEN (ADVICE r13 #1): the bigram kernels flush their
-        # Counter/list accumulators at a 2M-entry bound (no more
-        # unbounded per-batch state), and the census no longer ships
-        # the redundant w1 column (substring_index recovers it
-        # JVM-side). Time a wash at 100x (8.3 -> 8.05 s); the change
-        # is worker-memory robustness + halved census Arrow bytes.
-        "bigram_lm_score",
-        # REWRITTEN: the totals leg counts added shingles as
-        # sum(size(hsh)) on the un-exploded index rows instead of
-        # re-running the whole explode subtree a second time (guide
-        # 2.4). Warm best-of-2 a wash (6.28 -> 6.11 s at 100x); cold
-        # first-run 12.5 -> 7.0 s -- one fewer corpus pass.
-        "snapshot_novelty",
-        # REWRITTEN (ADVICE r13 #3): bstats (the bounded DSIR_B-row
-        # conditional-sum rollup) is now cache()d so the tot aggregate
-        # stops re-aggregating it from its own scan of the 16M-row
-        # checkpoint -- the r13 "4 -> 2 scans" claim was really 3;
-        # with the cache it is exactly 2 (plan-verified: two
-        # InMemoryTableScans over one shared cached relation).
-        "dsir_importance_bins",
-        # REWRITTEN (guide §2.2): the per-day sweep-line is now
-        # hierarchical -- boundary points partition by (day, hour), an
-        # O(days x 24) exclusive prefix over per-bucket net deltas
-        # restores day-global concurrency exactly; sweep parallelism no
-        # longer capped at the calendar-day count (30 tasks at 100x).
-        # 8.3 -> 4.7 s both-orders best-of-2; row-identical at
-        # sf0.01/sf0.1/100x.
-        "peak_concurrency",
-        # ORACLE-SQL-ONLY (ADVICE r13 #2): WHERE text IS NOT NULL added
-        # to the repetition oracle so the kernel/oracle shared
-        # null-text semantics are structural instead of resting on the
-        # catalog invariant (which a new test also pins). Engine query
-        # unchanged; re-attested because the driver's oracle text
-        # changed (the packing_budget_sweep r13 precedent).
-        "repetition_stats",
-    ],
-}
-ROUND_CHANGED = _ROUND_CHANGED_BY_ROUND[ROUND]
-
-PRIORITY = [
-    # (a) CHANGED IN ROUND 14 (see _ROUND_CHANGED_BY_ROUND[14]) --
-    #     part_triangles at index 0 (the round-13 bookkeeping hole's
-    #     re-attest, verdict What's wrong #2); grows as round-14
-    #     optimizations land, displacing filler from the tail of (d)
-    #     to keep the window at exactly 50.
-    *ROUND_CHANGED,
-    # (b) the oldest-verdict cohort (verdict-union histogram after
-    #     round 13 reads r8=9, r9=31, r10=40, r11=41, r12=31, r13=50;
-    #     tools/staleness.py): the whole 9-member r8 remainder (the
-    #     queue the round-13 window displaced), then activity_islands
-    #     and the r9 cohort in name order.
-    "seasonal_hour_baseline", "shingle_df_curve", "skyline_parts",
-    "supplier_bfs_hops", "time_weighted_value",
-    "token_concentration_bins", "velocity_profile",
-    "zipf_alpha_by_source",
-    # (token_fertility moved up to (a): rewritten this round)
-    "activity_islands", "ann_cosine_topk", "corpus_snapshot_diff",
-    "corpus_token_stats", "customer_rollup", "customers_without_orders",
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_simhash16",
-    "doc_fingerprint", "embedding_near_dup", "event_gap_buckets",
-    "lang_id_heuristic", "lang_mismatch_rate", "lsh_band_sweep",
-    "nations_with_both", "order_priority_count", "part_price_buckets",
-    "part_rankings", "pit_event_enrichment", "predictions_profile",
-    "props_json_stats", "q3_shipping_priority", "salted_value_by_type",
-    "segment_distinct_nations", "session_summary", "source_mixture_plan",
-    "text_stats", "training_frame_det",
-    # (value_percentiles, then value_drift_psi, displaced to the
-    # round-15 queue as (a) grew past the (d) filler)
-    # (c) family representatives for families (a)+(b)+(d) leave
-    #     uncovered (tests/test_registry.py gate): layout (only
-    #     layout_pruning_stats), multimodal and sketches (their
-    #     oldest-verdict members, both r10).
-    "layout_pruning_stats", "multimodal_resize",
-    "hll_shingle_cardinality",
-    # (d) filler from the round-10 cohort in name order -- swapped out
-    #     from the TAIL first as (a) grows (added_dup_against_base
-    #     displaced, then value_percentiles from the (b) tail, as the
-    #     two late round-14 entries landed).
-    # ROUND-15 QUEUE (if any; in priority order): round-15 changed code
-    # first, then value_percentiles + added_dup_against_base (displaced
-    # here), then the round-10 cohort remainder in name order from
-    # where (d) stops (corpus_quality_gate, crossdoc_ngram_share,
-    # cube_region_segment, customer_blocking_er, daily_metrics, ...),
-    # then r11/r12 cohorts -- recompute the exact staleness order from
-    # the CORRECTNESS_r*.json union at round start (tools/staleness.py).
-]
-
-
-def _ordered(merged: dict) -> dict:
-    out = {name: merged[name] for name in PRIORITY if name in merged}
-    out.update({k: v for k, v in merged.items() if k not in out})
-    return out
+    return [relational, metrics, dedup, similarity, textops, corpusops,
+            sessionize, multimodal, windows, temporal, mlqueries, tpch_extra,
+            skew, anomaly, layout, sketches, stats]
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict = {}
     for mod in _modules():
-        out.update(getattr(mod, "QUERIES", {}))
-    return _ordered(out)
+        out.update(mod.QUERIES)
+    return out
 
 
 def all_oracles() -> dict[str, str]:
     out: dict = {}
     for mod in _modules():
-        out.update(getattr(mod, "ORACLE", {}))
-    return _ordered(out)
+        out.update(mod.ORACLE)
+    return out

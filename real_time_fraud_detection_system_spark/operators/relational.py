@@ -401,6 +401,9 @@ ORDER BY nationkey
 
 # --------------------------------------------------------------------------
 # Distinct aggregation: per-segment exact distinct nation count + totals.
+# avg_acctbal is exact: cents summed as BIGINT, then the mean rounded to
+# 4 decimals (half away from zero) by integer division, so both engines
+# land on the same side of a .xxxx5 boundary (a double avg does not).
 def segment_distinct_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     return (
@@ -408,19 +411,34 @@ def segment_distinct_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.countDistinct("c_nationkey").alias("n_nations"),
             F.count("*").alias("n_customers"),
-            F.round(F.avg("c_acctbal"), 4).alias("avg_acctbal"),
+            F.sum(F.round(F.col("c_acctbal") * 100).cast("bigint")).alias("cents"),
+        )
+        .select(
+            "c_mktsegment",
+            "n_nations",
+            "n_customers",
+            (
+                F.signum("cents")
+                * F.expr("(abs(cents) * 200 + n_customers) div (2 * n_customers)")
+                / 10000
+            ).alias("avg_acctbal"),
         )
         .orderBy("c_mktsegment")
     )
 
 
 SEGMENT_DISTINCT_SQL = """
-SELECT c_mktsegment,
-       count(DISTINCT c_nationkey) AS n_nations,
-       count(*) AS n_customers,
-       round(avg(c_acctbal), 4) AS avg_acctbal
-FROM customer
-GROUP BY c_mktsegment
+SELECT c_mktsegment, n_nations, n_customers,
+       sign(cents) * ((abs(cents) * 200 + n_customers) // (2 * n_customers))
+           / 10000 AS avg_acctbal
+FROM (
+    SELECT c_mktsegment,
+           count(DISTINCT c_nationkey) AS n_nations,
+           count(*) AS n_customers,
+           sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS cents
+    FROM customer
+    GROUP BY c_mktsegment
+)
 ORDER BY c_mktsegment
 """
 

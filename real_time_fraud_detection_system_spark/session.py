@@ -56,6 +56,15 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def driver_memory() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else half of physical RAM: in local mode
+    the driver heap is also every executor's, and the other half is left
+    to the OS page cache and the Python workers."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_mb = max(1024, total // 2 // 2**20)
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{half_mb}m"
+
+
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -109,7 +118,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config(NANOS_AS_LONG, "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     # opt-in RocksDB state store for every stateful streaming query in

@@ -1,9 +1,6 @@
 """bench.py HEADLINE membership rule (stated above the list in
-bench.py): round-changed queries enter the round they change, every
-operator family keeps a member, members only accumulate, quadratic
-teaching variants stay out. These tests make the rule executable so
-BENCH_rN stays interpretable as operators accumulate (round-8 verdict:
-the membership rule was only implicit in bench.py).
+bench.py): every operator family keeps a member and quadratic teaching
+variants stay out. These tests make the rule executable.
 """
 
 import sys
@@ -11,7 +8,6 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 from real_time_fraud_detection_system_spark.operators import (
-    ROUND_CHANGED,
     _modules,
     all_queries,
 )
@@ -34,14 +30,6 @@ def test_headline_is_a_registry_subset_without_duplicates():
     assert not unknown, f"headline names not in the registry: {unknown}"
 
 
-def test_every_round_changed_query_is_headline():
-    missing = [q for q in ROUND_CHANGED if q not in HEADLINE]
-    assert not missing, (
-        "queries changed this round but not bench-measured "
-        f"(rule 1 of the HEADLINE membership rule): {missing}"
-    )
-
-
 def test_every_family_has_a_headline_member():
     head = set(HEADLINE)
     for mod in _modules():
@@ -50,7 +38,7 @@ def test_every_family_has_a_headline_member():
             continue  # family consists only of teaching variants
         if fam:
             assert fam & head, (
-                f"{mod.__name__} has no headline member (rule 2)"
+                f"{mod.__name__} has no headline member (rule 1)"
             )
 
 

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql.types import TimestampType
 
 from real_time_fraud_detection_system_spark.catalog import load_table
+from tests.conftest import SF_SMOKE
 
 _EPOCH_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z in micros
 _WANT = datetime.datetime(2024, 1, 1, 0, 0, 0)
@@ -65,14 +66,14 @@ def test_documents_text_never_null(spark):
     null-text docs like the retired explode forms, so a catalog that
     produced one would need every consumer re-audited, and this test
     is the tripwire)."""
-    from real_time_fraud_detection_system_spark.catalog import load_table
-
-    for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        import os
-
+    checked = 0
+    for sf_dir in (SF_SMOKE, os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")):
         if not os.path.isdir(sf_dir):
             continue
         n = load_table(spark, sf_dir, "documents").filter(
             "text IS NULL"
         ).count()
         assert n == 0, f"{sf_dir}: {n} null-text documents"
+        checked += 1
+    if not checked:
+        pytest.skip(f"no fixture dir present ({SF_SMOKE})")

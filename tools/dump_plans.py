@@ -2,12 +2,12 @@
 
 Usage: python tools/dump_plans.py <suffix> [sf_dir] name [name...]
 
-Writes plans/r<ROUND>/<name>_<suffix>.txt for each query (suffix is
-"before" / "after"); the optimization-round evidence the judge checks
-plan claims against. Explain output is captured from the exact frame
-the registry callable returns, on the same session config bench.py
-uses for the sf0.1 section (1 MB splits), so Exchange counts and join
-strategies match the measured runs.
+Writes plans/<name>_<suffix>.txt for each query (suffix is
+"before" / "after"): the evidence behind a plan-change claim. Explain
+output is captured from the exact frame the registry callable returns,
+on the same session config bench.py uses for the sf0.1 section (1 MB
+splits), so Exchange counts and join strategies match the measured
+runs.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from real_time_fraud_detection_system_spark.operators import ROUND, all_queries
+from real_time_fraud_detection_system_spark.operators import all_queries
 from real_time_fraud_detection_system_spark.session import cpu_count, get_spark
 
 
@@ -31,7 +31,6 @@ def main() -> int:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        f"r{ROUND}",
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(
