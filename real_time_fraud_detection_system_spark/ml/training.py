@@ -18,8 +18,10 @@ column; nothing below collects the training frame to the driver.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import threading
 import time
 
 from pyspark.ml import Pipeline, PipelineModel
@@ -149,15 +151,40 @@ def save_version(model: PipelineModel, registry_dir: str, auc: float) -> int:
 
 def promote_to_production(registry_dir: str, version: int) -> None:
     """Stage promotion: point 'Production' at a version (M7 intended
-    semantics -- latest promoted wins, prior versions implicitly archived)."""
-    with open(os.path.join(registry_dir, PRODUCTION_POINTER), "w") as f:
+    semantics -- latest promoted wins, prior versions implicitly archived).
+    The pointer is replaced atomically (temp file + rename), so a reader
+    sees the old version or the new one, never a truncated file."""
+    tmp = os.path.join(
+        registry_dir,
+        f".{PRODUCTION_POINTER}.{os.getpid()}.{threading.get_ident()}",
+    )
+    with open(tmp, "w") as f:
         f.write(str(version))
+    os.replace(tmp, os.path.join(registry_dir, PRODUCTION_POINTER))
     _mlflow_mirror_promote()
+
+
+# Loaded models kept per (JVM, version dir, metadata identity); a small
+# constant because a process serves one Production model at a time.
+_LOADED_MODELS = 4
+
+
+@functools.lru_cache(maxsize=_LOADED_MODELS)
+def _load_model(app_id: str, path: str, ino: int, mtime_ns: int) -> PipelineModel:
+    return PipelineModel.load(path)
 
 
 def load_production(spark, registry_dir: str) -> tuple[PipelineModel | None, str | None]:
     """S8: load the current Production model, or (None, None) when absent
-    (callers then use the heuristic fallback -- main.py:100-104)."""
+    (callers then use the heuristic fallback -- main.py:100-104).
+
+    Every call re-reads the pointer, so a promotion is seen by the next
+    call; the load itself is memoized on the live SparkContext and the
+    identity (inode, mtime) of the version's ``metadata``, so an
+    unchanged Production costs one read and one stat, a restarted JVM
+    never gets another JVM's model, and a registry wiped and re-trained
+    into the same ``v{n}`` reloads. Callers share the returned model, so
+    they must not set params on it."""
     pointer = os.path.join(registry_dir, PRODUCTION_POINTER)
     if not os.path.exists(pointer):
         return None, None
@@ -166,7 +193,12 @@ def load_production(spark, registry_dir: str) -> tuple[PipelineModel | None, str
     path = os.path.join(registry_dir, f"v{version}")
     if not os.path.isdir(path):
         return None, None
-    return PipelineModel.load(path), version
+    path = os.path.realpath(path)
+    meta = os.stat(os.path.join(path, "metadata"))
+    model = _load_model(
+        spark.sparkContext.applicationId, path, meta.st_ino, meta.st_mtime_ns
+    )
+    return model, version
 
 
 def train_and_register(df: DataFrame, registry_dir: str, seed: int = 42) -> dict:

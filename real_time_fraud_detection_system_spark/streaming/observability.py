@@ -7,7 +7,9 @@ table plus container logs (docker-compose.yml grafana service;
 SURVEY.md S10); Spark's native equivalent is the StreamingQueryProgress
 event stream. This module makes that stream QUERYABLE: the listener
 appends one JSON line per finished micro-batch (query id/name, batch
-id, timestamp, input rows, rows/sec, batch duration, watermark), and
+id, timestamp, input rows, rows/sec, batch duration and the phases it
+splits into, the first state operator's rows/drops/commit time,
+watermark), and
 ``ops_log_summary`` turns the log directory into the per-query health
 report (batches, rows, p50/max durations, last watermark) -- the
 "is the pipeline keeping up" table.
@@ -36,6 +38,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 
+# ops-log column -> StreamingQueryProgress.durationMs key: the phases a
+# micro-batch's triggerExecution is spent in
+PHASES = {
+    "latest_offset_ms": "latestOffset",
+    "get_batch_ms": "getBatch",
+    "query_planning_ms": "queryPlanning",
+    "add_batch_ms": "addBatch",
+    "wal_commit_ms": "walCommit",
+    "commit_offsets_ms": "commitOffsets",
+}
+
+
 class OpsLogListener(StreamingQueryListener):
     """Append one JSONL row per completed micro-batch to
     ``<log_dir>/progress.jsonl``."""
@@ -58,6 +72,8 @@ class OpsLogListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        durations = p.durationMs or {}
+        ops = p.stateOperators
         self._append(
             {
                 "event": "progress",
@@ -69,9 +85,13 @@ class OpsLogListener(StreamingQueryListener):
                 "num_input_rows": p.numInputRows,
                 "input_rows_per_second": p.inputRowsPerSecond,
                 "process_rows_per_second": p.processedRowsPerSecond,
-                "batch_duration_ms": (p.durationMs or {}).get(
-                    "triggerExecution"
+                "batch_duration_ms": durations.get("triggerExecution"),
+                **{col: durations.get(key) for col, key in PHASES.items()},
+                "state_rows_total": ops[0].numRowsTotal if ops else None,
+                "state_rows_dropped_by_watermark": (
+                    ops[0].numRowsDroppedByWatermark if ops else None
                 ),
+                "state_commit_ms": ops[0].commitTimeMs if ops else None,
                 "watermark": (p.eventTime or {}).get("watermark"),
             }
         )
@@ -100,7 +120,10 @@ OPS_LOG_SCHEMA = (
     "event string, query_id string, run_id string, name string,"
     " batch_id long, ts double, num_input_rows long,"
     " input_rows_per_second double, process_rows_per_second double,"
-    " batch_duration_ms long, watermark string, exception string"
+    " batch_duration_ms long, "
+    + "".join(f"{col} long, " for col in PHASES)
+    + "state_rows_total long, state_rows_dropped_by_watermark long,"
+    " state_commit_ms long, watermark string, exception string"
 )
 
 

@@ -296,30 +296,26 @@ def run_pipeline_with_registry(
     out_dir: str,
     checkpoint_dir: str,
     registry_dir: str,
-    refresh_every: int = 1,
     trigger_seconds: int | None = None,
 ):
     """T8: hot model reload. The reference refreshes its registry model on
     a 60 s daemon thread (main.py:132-133, 183-189); Spark has no
     mid-stream operator swap, so the pragmatic equivalent (SURVEY.md
     section 7 'what's hard') is scoring inside ``foreachBatch`` and
-    re-resolving the Production pointer every ``refresh_every`` epochs:
-    a batch DataFrame can be transformed by a freshly loaded model, the
-    streaming plan itself never changes. Dedup stays stream-side (it is
-    stateful); scoring moves batch-side."""
+    re-resolving the Production pointer every epoch: a batch DataFrame
+    can be transformed by a freshly loaded model, the streaming plan
+    itself never changes. ``load_production`` memoizes the load, so an
+    epoch under an unchanged Production pays one pointer read and one
+    stat. Dedup stays stream-side (it is stateful); scoring moves
+    batch-side."""
     from ..ml.scoring import score
     from ..ml.training import load_production
 
-    state = {"model": None, "version": None, "epochs": 0}
     sink = prediction_sink_writer(out_dir)
 
     def score_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        if state["epochs"] % refresh_every == 0:
-            state["model"], state["version"] = load_production(
-                batch_df.sparkSession, registry_dir
-            )
-        state["epochs"] += 1
-        sink(score(batch_df, state["model"], state["version"]), epoch_id)
+        model, version = load_production(batch_df.sparkSession, registry_dir)
+        sink(score(batch_df, model, version), epoch_id)
 
     writer = (
         deduplicated(transactions)

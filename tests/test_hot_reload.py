@@ -1,6 +1,7 @@
 """T8 hot-model-reload test: the registry-refreshing pipeline scores the
-first epoch with the heuristic fallback (empty registry) and later epochs
-with the newly promoted model -- no stream restart."""
+first epoch with the heuristic fallback (empty registry), later epochs
+with the newly promoted model, and after a second promotion the newer
+one -- the load memo never pins an old model."""
 
 from pyspark.sql import functions as F
 
@@ -26,9 +27,7 @@ def test_registry_refresh_switches_model_mid_stream(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(txn_schema).parquet(str(src / "*"))
-        q = run_pipeline_with_registry(
-            stream, str(out), str(ckpt), reg, refresh_every=1
-        )
+        q = run_pipeline_with_registry(stream, str(out), str(ckpt), reg)
         q.awaitTermination(120)
 
     # epoch 1: empty registry -> heuristic fallback (null model_version)
@@ -58,3 +57,22 @@ def test_registry_refresh_switches_model_mid_stream(spark, tmp_path):
     # heuristic rows keep reference semantics: proba in {0.05, 1.0}
     heur = preds.filter(F.col("model_version").isNull())
     assert heur.filter(~F.col("proba").isin(0.05, 1.0)).count() == 0
+
+    # promote v2 on the same registry and checkpoint: the next batch
+    # must be scored with it
+    train_and_register(training_frame(spark, 500, seed=4), reg)
+    transactions_batch(spark, 50, seed=5).write.parquet(str(src / "b3"))
+    run_once()
+
+    preds = spark.read.parquet(str(out))
+    # transaction_id is uuid(): read the ids back, do not re-evaluate
+    ids3 = [
+        r["transaction_id"]
+        for r in spark.read.parquet(str(src / "b3")).collect()
+    ]
+    third = preds.filter(F.col("transaction_id").isin(ids3))
+    versions3 = {r["model_version"] for r in third.select("model_version").collect()}
+    assert versions3 == {"2"}, "post-second-promotion batch scored with v2"
+    assert third.count() == 50
+    assert preds.count() == 150
+    assert preds.select("transaction_id").distinct().count() == 150

@@ -1,13 +1,21 @@
 """M2-M8 training + scoring tests (SURVEY.md section 2.8)."""
 
+import os
+import shutil
+import threading
+
 import pytest
 
+from real_time_fraud_detection_system_spark.ml import training
 from real_time_fraud_detection_system_spark.ml.scoring import (
     score,
     score_one,
 )
 from real_time_fraud_detection_system_spark.ml.training import (
+    PRODUCTION_POINTER,
     load_production,
+    promote_to_production,
+    save_version,
     train_and_register,
 )
 from real_time_fraud_detection_system_spark.sources.generators import (
@@ -106,6 +114,87 @@ def test_score_one_request_response(spark, registry):
     )
     assert set(out) == {"prediction", "proba", "model_version"}
     assert out["prediction"] in (0, 1)
+
+
+@pytest.fixture
+def model_loads(monkeypatch):
+    """Paths passed to PipelineModel.load, starting from an empty memo."""
+    loads = []
+    real_load = training.PipelineModel.load
+
+    def counting_load(path):
+        loads.append(path)
+        return real_load(path)
+
+    monkeypatch.setattr(training.PipelineModel, "load", counting_load)
+    training._load_model.cache_clear()
+    yield loads
+    training._load_model.cache_clear()
+
+
+def test_load_production_memo_hits_while_pointer_unchanged(
+    spark, tmp_path, model_loads
+):
+    reg = str(tmp_path / "registry")
+    train_and_register(training_frame(spark, 500, seed=3), reg)
+    first, version = load_production(spark, reg)
+    assert version == "1"
+    for _ in range(3):
+        model, version = load_production(spark, reg)
+        assert model is first and version == "1"
+    assert len(model_loads) == 1
+
+    # promoting v2 is seen by the very next call
+    save_version(first, reg, auc=0.5)
+    promote_to_production(reg, 2)
+    second, version = load_production(spark, reg)
+    assert version == "2" and second is not first
+    assert len(model_loads) == 2
+
+    # a wiped registry re-trained into the same v1 reloads
+    shutil.rmtree(reg)
+    assert train_and_register(training_frame(spark, 500, seed=4), reg)[
+        "version"
+    ] == 1
+    third, version = load_production(spark, reg)
+    assert version == "1" and third is not first
+    assert len(model_loads) == 3
+
+
+def test_load_production_absent_pointer_or_version(spark, tmp_path, model_loads):
+    reg = tmp_path / "registry"
+    reg.mkdir()
+    assert load_production(spark, str(reg)) == (None, None)
+    promote_to_production(str(reg), 9)  # pointer to a version never saved
+    assert load_production(spark, str(reg)) == (None, None)
+    assert model_loads == []
+
+
+def test_promotion_replaces_pointer_atomically(tmp_path):
+    reg = str(tmp_path)
+    pointer = os.path.join(reg, PRODUCTION_POINTER)
+    promote_to_production(reg, 1)
+    seen = set()
+    done = threading.Event()
+
+    def reader():
+        while not done.is_set():
+            with open(pointer) as f:
+                seen.add(f.read())
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        for i in range(300):
+            promote_to_production(reg, 1 + i % 2)
+    finally:
+        done.set()
+        t.join(timeout=30)
+    assert not t.is_alive()
+    assert seen <= {"1", "2"}, "a reader saw a truncated pointer"
+    with open(pointer) as f:
+        assert f.read() == "2"
+    assert os.listdir(reg) == [PRODUCTION_POINTER], "no temp file left behind"
 
 
 def test_mlflow_mirror_gating(monkeypatch):

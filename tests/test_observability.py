@@ -10,6 +10,7 @@ def test_ops_log_accounts_every_batch(spark, tmp_path):
         register,
     )
     from real_time_fraud_detection_system_spark.streaming.observability import (
+        PHASES,
         OpsLogListener,
         ops_log_summary,
         read_ops_log,
@@ -24,6 +25,7 @@ def test_ops_log_accounts_every_batch(spark, tmp_path):
             .option("rowsPerBatch", "40")
             .option("maxRows", "120")
             .load()
+            .dropDuplicates(["id"])
             .writeStream.format("noop")
             .queryName("opslog_probe")
             .option("checkpointLocation", str(tmp_path / "ck"))
@@ -48,6 +50,16 @@ def test_ops_log_accounts_every_batch(spark, tmp_path):
     rows = raw.collect()
     assert sum(r["num_input_rows"] for r in rows) == 120
     assert all(r["name"] == "opslog_probe" for r in rows)
+    # the full durationMs phase map, each phase inside the trigger
+    for r in rows:
+        phases = [r[col] for col in PHASES]
+        assert None not in phases, r
+        assert sum(phases) <= r["batch_duration_ms"], r
+    # the dedup's state: every distinct id is held, none dropped
+    last = max(rows, key=lambda r: r["batch_id"])
+    assert last["state_rows_total"] == 120
+    assert all(r["state_rows_dropped_by_watermark"] == 0 for r in rows)
+    assert all(r["state_commit_ms"] is not None for r in rows)
 
     summary = ops_log_summary(spark, str(tmp_path / "ops")).filter(
         "total_rows > 0"
