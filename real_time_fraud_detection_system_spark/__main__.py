@@ -19,8 +19,8 @@ and Airflow DAGs -- locally or via spark-submit on a cluster:
                               search it (build once, query all day)
   dedup-index build|probe     persist the bucketed MinHash index /
                               dedup an arriving shard against it
-  retention                   drop prediction-store day partitions
-                              older than --keep-days
+  retention                   drop prediction-store event_date
+                              partitions older than --keep-days
   compact                     rewrite a partitioned store's small
                               files (streaming-append hygiene)
 
@@ -35,6 +35,7 @@ import json
 import sys
 
 from .session import default_sf_dir
+from .storage import STORE_PARTITION_COL
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -95,7 +96,7 @@ def _build_parser() -> argparse.ArgumentParser:
                          " store's max day)")
     cp = sub.add_parser("compact")
     cp.add_argument("--store-dir", required=True)
-    cp.add_argument("--partition-col", default="event_date")
+    cp.add_argument("--partition-col", default=STORE_PARTITION_COL)
     cp.add_argument("--target-rows-per-file", type=int, default=1_000_000)
     zo = sub.add_parser("zorder")
     zo.add_argument("--table", default="events")

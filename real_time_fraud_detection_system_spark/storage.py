@@ -15,6 +15,9 @@ serve the key joins.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -33,7 +36,6 @@ def write_bucketed(
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     # the in-memory catalog forgets tables across sessions but their
     # warehouse directories survive -- clear any orphaned location
-    import shutil
     from urllib.parse import urlparse
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
@@ -63,20 +65,58 @@ class ConcurrentAppend(CompactionError):
 
 COMPACTION_LOCK = "_COMPACTION_LOCK"
 
+# the prediction store's date partition column: the sink writes it,
+# compaction and the retention sweep read it
+STORE_PARTITION_COL = "event_date"
+
 
 def compaction_locked(store_dir: str) -> bool:
     """True while a compaction rewrite holds the store. Cooperative
     writers (prediction_sink_writer) check this and fail loudly rather
     than appending rows the in-flight rewrite would silently drop."""
-    import os
-
     return os.path.exists(os.path.join(store_dir, COMPACTION_LOCK))
+
+
+def commit_epoch(out_dir: str, epoch_id: int, write) -> bool:
+    """The one exactly-once commit for epoch-keyed foreachBatch file
+    sinks: Spark replays an uncommitted epoch under the SAME epoch_id,
+    so the sink is made idempotent on that id (Structured Streaming,
+    SIGMOD 2018).
+
+    Unless ``out_dir/_epochs/<epoch_id>`` exists, ``write(staging)``
+    writes the epoch into a cleared ``out_dir/_staging/<epoch_id>``,
+    then the marker is created -- the commit point. Then, every time,
+    each staged file (``.crc`` sidecars included) moves to the same
+    relative path under ``out_dir`` and the staging dir is removed.
+    A replay before the marker redoes the epoch; a replay after it
+    finishes the moves. Both dirs start with ``_``, so Spark readers
+    skip them; part-file names are unique per write job, so moves
+    never clobber another epoch's files. foreachBatch runs on the
+    driver, so plain os calls cover local and DFS-mounted stores.
+
+    Returns True if this call wrote the epoch."""
+    staging = os.path.join(out_dir, "_staging", str(epoch_id))
+    marker_dir = os.path.join(out_dir, "_epochs")
+    marker = os.path.join(marker_dir, str(epoch_id))
+    wrote = not os.path.exists(marker)
+    if wrote:
+        shutil.rmtree(staging, ignore_errors=True)
+        write(staging)
+        os.makedirs(marker_dir, exist_ok=True)
+        open(marker, "w").close()
+    for d, _, files in os.walk(staging):
+        dest = os.path.join(out_dir, os.path.relpath(d, staging))
+        os.makedirs(dest, exist_ok=True)
+        for f in files:
+            os.replace(os.path.join(d, f), os.path.join(dest, f))
+    shutil.rmtree(staging, ignore_errors=True)
+    return wrote
 
 
 def compact_partitions(
     spark: SparkSession,
     store_dir: str,
-    partition_col: str = "event_date",
+    partition_col: str = STORE_PARTITION_COL,
     target_rows_per_file: int = 1_000_000,
     _pre_write_hook=None,
 ) -> dict:
@@ -114,7 +154,6 @@ def compact_partitions(
     counts.
     """
     import glob
-    import os
 
     from pyspark.sql import functions as F
 
@@ -225,6 +264,23 @@ def bucketed_orders_lineitem(
 
 
 # --------------------------------------------------------------------------
+def _swap_in(spark: SparkSession, merged: DataFrame, dim_dir: str) -> int:
+    """Write ``merged`` to a sibling staging dir, count it, then swap it
+    in for ``dim_dir``; the swap is the commit point. Returns the row
+    count."""
+    staging = dim_dir.rstrip("/") + ".staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    merged.write.mode("overwrite").parquet(staging)
+    n = spark.read.parquet(staging).count()
+    old = dim_dir.rstrip("/") + ".old"
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(dim_dir):
+        os.rename(dim_dir, old)
+    os.rename(staging, dim_dir)
+    shutil.rmtree(old, ignore_errors=True)
+    return n
+
+
 def merge_dimension(
     spark: SparkSession, dim_dir: str, updates: DataFrame, key: str
 ) -> int:
@@ -244,9 +300,6 @@ def merge_dimension(
     daily_metrics_upsert's dynamic-partition overwrite instead.
 
     Returns the merged row count."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     if os.path.isdir(dim_dir):
@@ -256,17 +309,7 @@ def merge_dimension(
         ).unionByName(updates)
     else:
         merged = updates
-    staging = dim_dir.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    old = dim_dir.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(dim_dir):
-        os.rename(dim_dir, old)
-    os.rename(staging, dim_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return n
+    return _swap_in(spark, merged, dim_dir)
 
 
 def merge_dimension_scd2(
@@ -296,9 +339,6 @@ def merge_dimension_scd2(
     shape). Attribute equality uses a null-safe struct compare over
     every column except the key and the effective timestamp. Returns
     the merged row count (history rows included)."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -380,17 +420,7 @@ def merge_dimension_scd2(
         ).cast("timestamp").alias("valid_to"),
     )
     merged = opened if kept is None else kept.unionByName(opened)
-    staging = dim_dir.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    old = dim_dir.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(dim_dir):
-        os.rename(dim_dir, old)
-    os.rename(staging, dim_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return n
+    return _swap_in(spark, merged, dim_dir)
 
 
 def point_in_time_join(

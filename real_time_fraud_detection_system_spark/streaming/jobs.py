@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage import STORE_PARTITION_COL, commit_epoch
+
 
 def daily_metrics_frame(predictions: DataFrame, days_filter=None) -> DataFrame:
     """A4: the grouped aggregation (COUNT + AVG x3 by day)."""
@@ -231,9 +233,9 @@ def expectations_sink_writer(report_dir: str, rules, dead_letter_dir=None):
     stream. The streaming third of the expectations story: the query
     REPORTS, the gate ENFORCES, this sink MONITORS continuously.
 
-    Dynamic-partition idempotence is not needed: epoch_id rides every
-    report row, so replays are distinguishable downstream; dead-letter
-    rows carry epoch_id + rule for the same reason."""
+    Each output commits through ``storage.commit_epoch``, so a replayed
+    epoch adds no second report or dead-letter copy; every row carries
+    its epoch_id."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # coalesce(sum, 0): an EMPTY micro-batch aggregates sum to NULL,
@@ -248,36 +250,39 @@ def expectations_sink_writer(report_dir: str, rules, dead_letter_dir=None):
         aggs.append(F.count("*").alias("_n"))
         wide = batch_df.agg(*aggs)
         stack = ", ".join(f"'{n}', {n}" for n, _ in rules)
-        (
-            wide.selectExpr(
-                f"stack({len(rules)}, {stack}) AS (rule, n_violations)",
-                "_n AS n_rows",
-            )
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(report_dir)
+        report = wide.selectExpr(
+            f"stack({len(rules)}, {stack}) AS (rule, n_violations)",
+            "_n AS n_rows",
+        )
+        commit_epoch(
+            report_dir,
+            epoch_id,
+            report.withColumn("epoch_id", F.lit(epoch_id)).write.parquet,
         )
         if dead_letter_dir is not None:
             bad = " OR ".join(f"({pred})" for _, pred in rules)
-            (
+            commit_epoch(
+                dead_letter_dir,
+                epoch_id,
                 batch_df.filter(F.expr(bad))
                 .withColumn("epoch_id", F.lit(epoch_id))
-                .write.mode("append")
-                .parquet(dead_letter_dir)
+                .write.parquet,
             )
 
     return write_batch
 
 
 def profile_sink_writer(partials_dir: str, cols):
-    """foreachBatch hook: append one partial row per micro-batch."""
+    """foreachBatch hook: one partial row per micro-batch, committed
+    through ``storage.commit_epoch`` so a replay is not counted twice."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+        commit_epoch(
+            partials_dir,
+            epoch_id,
             profile_partial(batch_df, cols)
             .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(partials_dir)
+            .write.parquet,
         )
 
     return write_batch
@@ -289,35 +294,22 @@ def profile_from_partials(spark: SparkSession, partials_dir: str, cols) -> DataF
     )
 
 
-# ==========================================================================
-# Streaming incremental dedup (the dedup.py shard-vs-index path as a
-# foreachBatch job): each arriving micro-batch of documents dedups
-# against the persisted MinHash signature index, appends exactly the
-# verified pairs its arrival adds, then appends its signatures.
-#
-# Exactly-once under at-least-once foreachBatch replays, without a
-# transaction: (1) signatures enter the index through the anti-join
-# (update_signature_index semantics), so a replayed batch contributes
-# no new index rows and its `fresh` set is EMPTY; (2) pairs write with
-# dynamic-partition overwrite keyed by epoch_id (the daily-metrics A7
-# idempotent-upsert pattern) BEFORE the index append -- a crash between
-# the two replays the batch with the index still pre-batch, recomputing
-# the identical pair set into the same epoch partition.
-
-
 def retention_sweep(
     spark: SparkSession, store_dir: str, keep_days: int, today=None
 ) -> dict:
     """Partition-TTL for the date-partitioned prediction store: drop
-    whole day= partitions strictly older than ``keep_days`` before
+    whole ``event_date=`` partitions (STORE_PARTITION_COL, written by
+    prediction_sink_writer) strictly older than ``keep_days`` before
     ``today`` (defaults to the store's own max day, so replays of old
     data can't silently wipe newer history on a machine with a wrong
     clock). Deleting by PARTITION DIRECTORY is the parquet-native form
     of the reference's row DELETE (SURVEY T3: drop-after-midnight) --
     no rewrite, no tombstones, partition pruning makes the deleted
-    range unreadable atomically per day.
+    range unreadable atomically per day. The null-date partition
+    (``__HIVE_DEFAULT_PARTITION__``) has no age and is left alone.
 
-    Returns {"deleted": [...], "kept": n} for the scheduler's log."""
+    Returns {"deleted": [...], "kept": n} (n counts dated partitions)
+    for the scheduler's log."""
     import datetime as dt
 
     jvm = spark.sparkContext._jvm
@@ -328,11 +320,16 @@ def retention_sweep(
     fs = root.getFileSystem(conf)
     if not fs.exists(root):
         return {"deleted": [], "kept": 0}
+    prefix = f"{STORE_PARTITION_COL}="
     days = []
     for st in fs.listStatus(root):
         name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("day="):
-            days.append(name[len("day="):])
+        if (
+            st.isDirectory()
+            and name.startswith(prefix)
+            and name != prefix + "__HIVE_DEFAULT_PARTITION__"
+        ):
+            days.append(name[len(prefix):])
     if not days:
         return {"deleted": [], "kept": 0}
     if today is None:
@@ -343,7 +340,7 @@ def retention_sweep(
     deleted = []
     for d in sorted(days):
         if dt.date.fromisoformat(d) < cutoff:
-            fs.delete(path_cls(root, f"day={d}"), True)
+            fs.delete(path_cls(root, prefix + d), True)
             deleted.append(d)
     return {"deleted": deleted, "kept": len(days) - len(deleted)}
 
@@ -413,7 +410,17 @@ def ann_index_sink_writer(
 
 
 def dedup_index_sink_writer(index_dir: str, pairs_dir: str):
-    """foreachBatch hook over a (doc_id, text) document stream."""
+    """foreachBatch hook over a (doc_id, text) document stream (the
+    dedup.py shard-vs-index path as a streaming job): each micro-batch
+    dedups against the persisted MinHash signature index, writes the
+    verified pairs its arrival adds under ``pairs_dir/epoch_id=N``,
+    then appends its signatures to the index.
+
+    Exactly-once under replays: signatures enter the index through an
+    anti-join, so a full replay finds nothing fresh and writes nothing;
+    the pairs commit through ``storage.commit_epoch`` BEFORE the index
+    append, so a crash between the two replays the batch with the index
+    still pre-batch and the committed pairs are not written twice."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.errors import AnalysisException
@@ -422,7 +429,6 @@ def dedup_index_sink_writer(index_dir: str, pairs_dir: str):
             incremental_dedup_pairs,
             signature_index,
         )
-        from ..session import conf_override
 
         spark = batch_df.sparkSession
         new_sigs = signature_index(batch_df).cache()
@@ -439,16 +445,14 @@ def dedup_index_sink_writer(index_dir: str, pairs_dir: str):
             # before this batch mutates it
             if fresh.isEmpty():
                 return  # full replay: everything already indexed
-            with conf_override(
-                spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            ):
-                (
-                    incremental_dedup_pairs(index, fresh)
-                    .withColumn("epoch_id", F.lit(int(epoch_id)))
-                    .write.mode("overwrite")
-                    .partitionBy("epoch_id")
-                    .parquet(pairs_dir)
-                )
+            commit_epoch(
+                pairs_dir,
+                epoch_id,
+                incremental_dedup_pairs(index, fresh)
+                .withColumn("epoch_id", F.lit(int(epoch_id)))
+                .write.partitionBy("epoch_id")
+                .parquet,
+            )
             fresh.write.mode("append").parquet(index_dir)
         finally:
             new_sigs.unpersist()
@@ -469,43 +473,25 @@ def ingest_census_sink_writer(index_dir: str, census_dir: str):
     dump boundary. Usually composed with dedup_index_sink_writer over
     the same stream (census first, then the index append).
 
-    VALUE-STABLE under at-least-once retry BY FIRST-WRITE-WINS
-    (ADVICE r10): an epoch whose census partition is already committed
-    is skipped outright, so a crash-retry that re-delivers epoch N
-    AFTER the composed index writer already appended N's docs cannot
-    rewrite N's census as all-'replayed' and erase its original
-    'added' mass -- foreachBatch re-delivers the same rows for the
-    same epoch_id, so the committed census is still the truth.
-    (Partition-directory presence implies a successful job commit:
-    dynamic partition overwrite stages under a job-scoped temp dir and
-    moves files only on commit, so a crashed first attempt leaves no
-    partition to defer to.) The committed-epoch probe is a single
-    filesystem exists() on the epoch's partition path -- NOT a read of
-    the whole census dataset, whose file listing grows O(#epochs) per
-    trigger (ADVICE r11). Consequence: intentionally RE-pricing an
-    epoch re-delivered under the same epoch_id requires deleting its
-    `epoch_id=N` partition directory first. The membership anti-join
+    VALUE-STABLE under at-least-once retry BY FIRST-WRITE-WINS: the
+    census lands under ``census_dir/epoch_id=N`` through
+    ``storage.commit_epoch``, so once epoch N is committed a
+    crash-retry that re-delivers it AFTER the composed index writer
+    already appended N's docs cannot rewrite N's census as
+    all-'replayed' and erase its original 'added' mass --
+    foreachBatch re-delivers the same rows for the same epoch_id, so
+    the committed census is still the truth. Consequence:
+    intentionally RE-pricing an epoch re-delivered under the same
+    epoch_id requires deleting its ``_epochs/N`` marker and
+    ``epoch_id=N`` partition first. The membership anti-join
     probes only the index's doc_id column -- with the index persisted
     doc_id-bucketed, a shard's census costs the shard, not the
     corpus."""
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def write(batch_df: DataFrame, epoch_id: int, staging: str) -> None:
         from pyspark.errors import AnalysisException
 
-        from ..session import conf_override
-
         spark = batch_df.sparkSession
-        # first write wins: epoch already priced -> keep it (O(1)
-        # partition-path metadata probe, not a dataset listing)
-        jvm = spark.sparkContext._jvm
-        part = jvm.org.apache.hadoop.fs.Path(
-            f"{census_dir}/epoch_id={int(epoch_id)}"
-        )
-        fs = part.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
-        if fs.exists(part):
-            return
         docs = batch_df.select("doc_id", "source", "n_chars")
         try:
             idx_ids = spark.read.parquet(index_dir).select("doc_id")
@@ -528,14 +514,12 @@ def ingest_census_sink_writer(index_dir: str, census_dir: str):
             )
             .withColumn("epoch_id", F.lit(int(epoch_id)))
         )
-        with conf_override(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            (
-                census.write.mode("overwrite")
-                .partitionBy("epoch_id")
-                .parquet(census_dir)
-            )
+        census.write.partitionBy("epoch_id").parquet(staging)
+
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        commit_epoch(
+            census_dir, epoch_id, lambda d: write(batch_df, epoch_id, d)
+        )
 
     return write_batch
 
@@ -660,45 +644,31 @@ def hybrid_query_sink_writer(
     on both legs by construction.
 
     VALUE-STABLE under at-least-once retry BY FIRST-WRITE-WINS (the
-    ingest_census_sink_writer discipline): an epoch whose result
-    partition is already committed is skipped via an O(1)
-    partition-path probe -- a replayed epoch must serve the answers
+    ingest_census_sink_writer discipline, through
+    ``storage.commit_epoch``): a replayed epoch must serve the answers
     its first delivery committed, even if either index absorbed new
     docs in between (re-scoring would silently change an
-    already-served result set). Empty batches no-op."""
+    already-served result set). Empty batches write nothing."""
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def write(batch_df: DataFrame, epoch_id: int, staging: str) -> None:
         from ..operators.similarity import hybrid_search_batch
-        from ..session import conf_override
 
-        spark = batch_df.sparkSession
-        jvm = spark.sparkContext._jvm
-        part = jvm.org.apache.hadoop.fs.Path(
-            f"{out_dir}/epoch_id={int(epoch_id)}"
-        )
-        fs = part.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
-        if fs.exists(part):
-            return  # first write wins: epoch already answered
         if batch_df.isEmpty():
             return
         kwargs = {} if k is None else {"k": k}
         results = hybrid_search_batch(
-            spark,
+            batch_df.sparkSession,
             batch_df.select("q_id", "terms", "emb"),
             text_prefix=text_prefix,
             ann_prefix=ann_prefix,
             **kwargs,
         ).withColumn("epoch_id", F.lit(int(epoch_id)))
-        with conf_override(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            (
-                results.write.mode("overwrite")
-                .partitionBy("epoch_id")
-                .parquet(out_dir)
-            )
+        results.write.partitionBy("epoch_id").parquet(staging)
+
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        commit_epoch(
+            out_dir, epoch_id, lambda d: write(batch_df, epoch_id, d)
+        )
 
     return write_batch
 

@@ -159,53 +159,42 @@ def scored_stream(transactions: DataFrame, model=None, model_version=None) -> Da
 
 
 def prediction_sink_writer(out_dir: str):
-    """S5: foreachBatch writer appending to the date-partitioned parquet
-    prediction store, exactly-once via the standard batchId-dedup
-    pattern: Spark replays an uncommitted epoch UNDER THE SAME epoch_id
-    after a crash, so a per-epoch marker written after a successful
-    append turns the replay into a no-op instead of a duplicate append.
-    (Without it, a crash between the append and the checkpoint commit
-    re-appends the whole micro-batch on restart -- at-least-once, the
-    reference's guarantee, not this engine's.) Markers live under
-    ``out_dir/_epochs`` -- underscore-prefixed, so store scans ignore
-    them; foreachBatch runs driver-side, so plain os file ops cover
-    local/DFS-mounted stores (an object-store deployment swaps these two
-    helpers for put/head-object on the same layout).
+    """S5: foreachBatch writer into the date-partitioned parquet
+    prediction store, exactly-once through ``storage.commit_epoch``.
+
+    A replayed epoch whose commit already happened writes nothing, but
+    still executes the full plan (noop sink): the stateful dedup
+    upstream must see every partition processed or the state-store
+    commit validator fails the batch.
 
     Cooperates with storage.compact_partitions: while the store's
     compaction lock is up, appending would hand rows to a rewrite that
     silently drops them, so the batch raises instead -- the checkpoint
     has not committed this epoch, so a restart replays it loss-free
     after the lock clears."""
-    import os
-
-    marker_dir = os.path.join(out_dir, "_epochs")
+    from ..storage import (
+        STORE_PARTITION_COL,
+        CompactionInProgress,
+        commit_epoch,
+        compaction_locked,
+    )
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..storage import CompactionInProgress, compaction_locked
-
         if compaction_locked(out_dir):
             raise CompactionInProgress(
                 f"prediction store {out_dir} is being compacted; "
                 "refusing to append (epoch will replay after restart)"
             )
-        marker = os.path.join(marker_dir, str(epoch_id))
-        if os.path.exists(marker):
-            # crash-replay of an epoch whose append completed: skip the
-            # store append, but still execute the full plan (noop sink)
-            # -- the stateful operators upstream (dedup) must see every
-            # partition processed or the state-store commit validator
-            # fails the batch ("returning from the function early")
+
+        def write(staging: str) -> None:
+            (
+                batch_df.withColumn(STORE_PARTITION_COL, F.to_date("event_time"))
+                .write.partitionBy(STORE_PARTITION_COL)
+                .parquet(staging)
+            )
+
+        if not commit_epoch(out_dir, epoch_id, write):
             batch_df.write.format("noop").mode("overwrite").save()
-            return
-        (
-            batch_df.withColumn("event_date", F.to_date("event_time"))
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(out_dir)
-        )
-        os.makedirs(marker_dir, exist_ok=True)
-        open(marker, "w").close()
 
     return write_batch
 

@@ -132,115 +132,6 @@ def sessionize_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame
 
 
 # ==========================================================================
-# transformWithStateInPandas twin of the sessionizer: Spark 4's
-# successor API for custom streaming state (typed state primitives +
-# explicit event-time timers instead of the single implicit timeout).
-# Same semantics as _sessionize_fn -- interval-merge under the gap
-# rule, emit everything but the most recent session, close the open
-# session when the watermark passes end + gap -- asserted row-equal to
-# the applyInPandasWithState path by the replay test. Kept beside it
-# (not replacing it) so both API generations stay exercised.
-#
-# RUNTIME DEPENDENCY: Spark's transformWithState driver/worker protocol
-# is protobuf-based (pyspark/sql/streaming/proto/StateMessage_pb2);
-# containers without google.protobuf can IMPORT and plan this operator
-# but the query fails at start. The parity test importorskips on
-# protobuf, mirroring the live-Kafka tier's env gating (README).
-
-
-def _closed_pdf(rows: list) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [r[0] for r in rows],
-            "session_start": [pd.Timestamp(r[1], unit="us") for r in rows],
-            "session_end": [pd.Timestamp(r[2], unit="us") for r in rows],
-            "n_events": [r[3] for r in rows],
-            "total_value": [r[4] for r in rows],
-        }
-    )
-
-
-def _gap_ms(end_us: int) -> int:
-    return end_us // 1000 + SESSION_GAP_S * 1000
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class _SessionProcessor(StatefulProcessor):
-    """StatefulProcessor: per-user open session in a ValueState, one
-    event-time timer at (session_end + gap). Re-merging input deletes
-    the superseded timer; a stale timer that still fires is guarded by
-    comparing its expiry to the CURRENT session's close time."""
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.state = handle.getValueState("open_session", STATE_SCHEMA)
-
-    def close(self) -> None:
-        pass
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        events = []
-        for pdf in rows:
-            for ts, val in zip(pdf["ts"], pdf["value"]):
-                events.append((int(ts.value // 1000), float(val)))
-        items = [[us, us, 1, v] for us, v in sorted(events)]
-        prior = self.state.get()
-        if prior is not None:
-            s0, s1, n, tv = prior
-            items.append([s0, s1, n, tv])
-            items.sort(key=lambda it: (it[0], it[1]))
-            self.handle.deleteTimer(_gap_ms(s1))
-        gap_us = SESSION_GAP_S * _US
-        merged: list[list] = []
-        for it in items:
-            if merged and it[0] <= merged[-1][1] + gap_us:
-                last = merged[-1]
-                last[1] = max(last[1], it[1])
-                last[2] += it[2]
-                last[3] += it[3]
-            else:
-                merged.append(it)
-        closed = [(user_id, *m) for m in merged[:-1]]
-        if merged:
-            cur = merged[-1]
-            self.state.update(tuple(cur))
-            self.handle.registerTimer(_gap_ms(cur[1]))
-        if closed:
-            yield _closed_pdf(closed)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        prior = self.state.get()
-        if prior is not None and expiredTimerInfo.getExpiryTimeInMs() >= (
-            _gap_ms(prior[1])
-        ):
-            self.state.clear()
-            yield _closed_pdf([(key[0], *prior)])
-
-
-def sessionize_stream_tws(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """``sessionize_stream`` on the transformWithStateInPandas API --
-    identical (ts, user_id, value) -> closed-sessions contract."""
-    proc = _SessionProcessor()
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=SESSION_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-# ==========================================================================
 # Streaming arrival-process monitor: the streaming-native twin of
 # operators/temporal.py event_gap_buckets (same bucket edges, same
 # later-event attribution). Per-user state holds the last FINALIZED

@@ -1,8 +1,11 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests live in, ahead of any installed or other copy
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from real_time_fraud_detection_system_spark.session import get_spark
 

@@ -3,9 +3,6 @@ hand-built corpus (the sf fixtures barely exercise dup_within_dump),
 including the pair-end-in-neither-snapshot exclusion."""
 
 import hashlib
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from real_time_fraud_detection_system_spark.operators.corpusops import (
     added_dup_against_base,

@@ -3,10 +3,6 @@ bench.py): every operator family keeps a member and quadratic teaching
 variants stay out. These tests make the rule executable.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from real_time_fraud_detection_system_spark.operators import (
     _modules,
     all_queries,

@@ -126,13 +126,21 @@ def test_cli_index_lifecycle(spark, sf_dir):
 
 
 def test_cli_retention(spark, tmp_path):
-    from pyspark.sql import functions as F
+    """retention sweeps the store layout serve writes."""
+    from real_time_fraud_detection_system_spark.streaming.pipeline import (
+        prediction_sink_writer,
+    )
 
     store = str(tmp_path / "preds")
-    for d in ("2024-01-01", "2024-01-10"):
-        spark.range(5).select(F.col("id"), F.lit(d).alias("day")).write.mode(
-            "append"
-        ).partitionBy("day").parquet(store)
+    sink = prediction_sink_writer(store)
+    for i, d in enumerate(("2024-01-01", "2024-01-10")):
+        sink(
+            spark.range(5).selectExpr(
+                "CAST(id AS STRING) AS transaction_id",
+                f"TIMESTAMP'{d} 12:00:00' AS event_time",
+            ),
+            i,
+        )
     code, lines = _run([
         "retention", "--predictions-dir", store, "--keep-days", "5",
     ])

@@ -2,10 +2,6 @@
 two component rankings -- no scoring of its own, no doubles, absence
 contributes zero."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from real_time_fraud_detection_system_spark.operators.similarity import (
     HYBRID_QVEC,
     HYBRID_RRF_K,

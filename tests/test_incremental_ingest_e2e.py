@@ -5,11 +5,7 @@ persisted streaming dedup index -- every stage is individually tested
 elsewhere; this proves the composition a pipeline owner actually runs.
 """
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from real_time_fraud_detection_system_spark.corpus_pipeline import (
     prepare_corpus,

@@ -209,23 +209,39 @@ def test_profile_partial_normalizes_signed_zero(spark):
 
 
 def test_retention_sweep_drops_only_expired_partitions(spark, tmp_path):
-    """Partitions strictly older than the cutoff vanish, newer ones
-    survive byte-for-byte, the anchor defaults to the store's own max
-    day, and a second run is a no-op."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
+    """On a store written by prediction_sink_writer: partitions strictly
+    older than the cutoff vanish, newer ones survive, the anchor
+    defaults to the store's own max day, the null-date partition is
+    left alone, and a second run is a no-op."""
+    import os
 
     from real_time_fraud_detection_system_spark.streaming.jobs import (
         retention_sweep,
     )
+    from real_time_fraud_detection_system_spark.streaming.pipeline import (
+        prediction_sink_writer,
+    )
 
     store = str(tmp_path / "preds")
+    sink = prediction_sink_writer(store)
     days = ["2024-01-01", "2024-01-05", "2024-01-09", "2024-01-10"]
     for i, d in enumerate(days):
-        spark.range(10 + i).select(
-            F.col("id"), F.lit(d).alias("day")
-        ).write.mode("append").partitionBy("day").parquet(store)
+        sink(
+            spark.range(10 + i).selectExpr(
+                "CAST(id AS STRING) AS transaction_id",
+                f"TIMESTAMP'{d} 12:00:00' AS event_time",
+            ),
+            i,
+        )
+    # a malformed event without a time lands in the null-date partition
+    sink(
+        spark.createDataFrame(
+            [("bad", None)], "transaction_id string, event_time timestamp"
+        ),
+        len(days),
+    )
+    null_part = os.path.join(store, "event_date=__HIVE_DEFAULT_PARTITION__")
+    assert os.path.isdir(null_part)
 
     # anchor defaults to max day (2024-01-10); keep 7 days -> cutoff
     # 2024-01-03: only 2024-01-01 is strictly older
@@ -234,9 +250,10 @@ def test_retention_sweep_drops_only_expired_partitions(spark, tmp_path):
     left = spark.read.parquet(store)
     # the partition column reads back as DATE: compare isoformats
     assert {
-        str(r["day"]) for r in left.select("day").distinct().collect()
-    } == {"2024-01-05", "2024-01-09", "2024-01-10"}
-    assert left.count() == 11 + 12 + 13
+        str(r["event_date"])
+        for r in left.select("event_date").distinct().collect()
+    } == {"2024-01-05", "2024-01-09", "2024-01-10", "None"}
+    assert left.count() == 11 + 12 + 13 + 1
 
     # idempotent re-run
     assert retention_sweep(spark, store, keep_days=7) == {
@@ -245,6 +262,7 @@ def test_retention_sweep_drops_only_expired_partitions(spark, tmp_path):
     # explicit anchor: everything before 2024-01-09 goes
     out = retention_sweep(spark, store, keep_days=1, today="2024-01-10")
     assert out["deleted"] == ["2024-01-05"]
+    assert os.path.isdir(null_part)
     # empty/missing store: graceful
     assert retention_sweep(spark, str(tmp_path / "nope"), 7) == {
         "deleted": [], "kept": 0

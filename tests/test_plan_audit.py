@@ -3,9 +3,12 @@ physical plans contain CARTESIAN / NLJ / GLOBALWIN / 1PART patterns must
 equal the reviewed allowlist in tools/plan_audit.py. A new flag means a
 scale regression to justify (add to ALLOWLIST with a comment) or fix."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from plan_audit import ALLOWLIST, _docbcast, plan_of, sweep  # noqa: E402
 

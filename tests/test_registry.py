@@ -24,6 +24,15 @@ from real_time_fraud_detection_system_spark.operators import (  # noqa: E402
 )
 
 
+def test_package_is_imported_from_this_checkout():
+    """The suite tests the package beside it, whichever directory the
+    checkout lives in (conftest puts the tests' parent dir first)."""
+    import real_time_fraud_detection_system_spark as pkg
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert os.path.abspath(pkg.__file__).startswith(repo + os.sep)
+
+
 def test_every_query_has_an_oracle_in_same_order():
     """Same name set; dict order is module order on both sides, and
     within a module QUERIES and ORACLE may list names differently."""

@@ -12,12 +12,19 @@ partition/offset/timestamp metadata); a file stream over them feeds
     proven via recentProgress input counts);
   * duplicate transaction_ids arriving after a restart are still
     dropped (dedup state survives in the checkpoint);
-  * a crash AFTER the sink append but BEFORE the epoch commit replays
-    the SAME epoch on restart, and the sink's batchId marker makes the
-    replay a no-op -- zero duplicate predictions (exactly-once).
+  * a crash replays the SAME epoch on restart, and the sink's
+    ``storage.commit_epoch`` makes the store exactly-once at every
+    crash point: after the epoch's files are staged but before its
+    marker (the replay redoes the epoch), after the marker midway
+    through moving the staged files into the store (the replay rolls
+    the moves forward), and after the whole write returned but before
+    Spark commits the epoch (the replay writes nothing);
+  * the same holds for another epoch-keyed sink: a replayed
+    profile_sink_writer epoch is not counted twice.
 """
 
 import datetime
+import os
 
 import pytest
 
@@ -141,6 +148,134 @@ def test_crash_after_append_replays_exactly_once(spark, tmp_path):
     store = spark.read.parquet(out)
     assert store.count() == 20  # no duplicate appends from the replay
     assert store.select("transaction_id").distinct().count() == 20
+
+
+def _crash_in_second_segment(spark, monkeypatch, seg, out, ckpt, name, fake):
+    """Drain a first segment cleanly, then a second one with
+    ``os.<name>`` replaced by ``fake(real, *args)`` until the query
+    fails. The patch is undone before returning."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    _write_segment(spark, seg, range(0, 10))
+    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    _write_segment(spark, seg, range(10, 20))
+    real = getattr(os, name)
+    monkeypatch.setattr(os, name, lambda *a, **k: fake(real, *a, **k))
+    q = run_pipeline(_replayed_transactions(spark, seg), out, ckpt)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(180)
+    monkeypatch.undo()
+
+
+def test_crash_before_marker_redoes_the_epoch(spark, tmp_path, monkeypatch):
+    """Crash after an epoch's files are written but before its commit
+    marker exists: the restart redoes the epoch, and the store holds
+    each transaction_id once (an append-then-marker sink holds that
+    epoch's rows twice here)."""
+    seg, out, ckpt = (
+        str(tmp_path / "segments"),
+        str(tmp_path / "store"),
+        str(tmp_path / "ckpt"),
+    )
+    crashed = []
+
+    def makedirs(real, path, *a, **k):
+        if os.path.basename(path) == "_epochs" and not crashed:
+            crashed.append(path)
+            raise OSError("injected crash before the epoch marker")
+        return real(path, *a, **k)
+
+    _crash_in_second_segment(
+        spark, monkeypatch, seg, out, ckpt, "makedirs", makedirs
+    )
+    assert crashed
+
+    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    store = spark.read.parquet(out)
+    assert store.count() == 20
+    assert store.select("transaction_id").distinct().count() == 20
+
+
+def test_crash_midway_through_moves_rolls_forward(
+    spark, tmp_path, monkeypatch
+):
+    """Crash after an epoch's marker, with one staged file moved into
+    the store and the rest still staged: the restart finishes the
+    moves, so the store holds all 20 ids once and nothing is left
+    under _staging."""
+    seg, out, ckpt = (
+        str(tmp_path / "segments"),
+        str(tmp_path / "store"),
+        str(tmp_path / "ckpt"),
+    )
+    moved = []
+
+    def replace(real, src, dst, *a, **k):
+        if "_staging" in str(src):
+            if moved:
+                raise OSError("injected crash midway through the moves")
+            moved.append(src)
+        return real(src, dst, *a, **k)
+
+    _crash_in_second_segment(
+        spark, monkeypatch, seg, out, ckpt, "replace", replace
+    )
+    assert len(moved) == 1
+    (staged,) = os.listdir(os.path.join(out, "_staging"))
+    assert os.path.exists(os.path.join(out, "_epochs", staged))
+    assert os.listdir(os.path.join(out, "_staging", staged))
+
+    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    store = spark.read.parquet(out)
+    assert store.count() == 20
+    assert store.select("transaction_id").distinct().count() == 20
+    assert os.listdir(os.path.join(out, "_staging")) == []
+
+
+def test_profile_sink_replay_is_not_counted_twice(spark, tmp_path):
+    """Crash after profile_sink_writer's write for epoch 0 returned,
+    before Spark commits the epoch: the replay must not add a second
+    partial, so the merged n_rows is the 4 rows streamed, not 6."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from real_time_fraud_detection_system_spark.streaming.jobs import (
+        profile_from_partials,
+        profile_sink_writer,
+    )
+
+    cols = [("user_id", "num")]
+    schema = "ts timestamp, user_id long"
+    src, partials = tmp_path / "src", str(tmp_path / "partials")
+    for i in range(2):
+        spark.createDataFrame(
+            [(TS, 2 * i), (TS, 2 * i + 1)], schema
+        ).coalesce(1).write.parquet(str(src / f"b{i}"))
+    real_sink = profile_sink_writer(partials, cols)
+    crashed = []
+
+    def crashing_sink(batch_df, epoch_id):
+        real_sink(batch_df, epoch_id)
+        if not crashed:
+            crashed.append(epoch_id)
+            raise RuntimeError("injected crash after the sink's write")
+
+    def run(sink):
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+            .writeStream.option("checkpointLocation", str(tmp_path / "ckpt"))
+            .foreachBatch(sink)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    with pytest.raises(StreamingQueryException):
+        run(crashing_sink).awaitTermination(120)
+    assert crashed == [0]
+    run(real_sink).awaitTermination(120)
+    prof = profile_from_partials(spark, partials, cols).first()
+    assert prof["n_rows"] == 4
 
 
 def test_kafka_peek_newest_first_over_recorded_segment(spark, tmp_path):

@@ -5,12 +5,8 @@ documents table -- and the diff must survive the production route:
 two versions written to and read back from the snapshots.py manifest
 store (round-9 verdict, What's missing #2)."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from real_time_fraud_detection_system_spark.catalog import load_table
 from real_time_fraud_detection_system_spark.operators.corpusops import (

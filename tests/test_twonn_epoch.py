@@ -2,11 +2,7 @@
 source_epoch_plan (hand-computed integer arithmetic on a skewed
 corpus) -- the two round-10 planning/geometry operators."""
 
-import sys
-
 import numpy as np
-
-sys.path.insert(0, "/root/repo")
 
 from real_time_fraud_detection_system_spark.operators.corpusops import (
     source_epoch_plan,

@@ -35,7 +35,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -116,6 +117,6 @@ def build(src: str, out: str, factor: int = 10) -> None:
 
 if __name__ == "__main__":
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale/sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scale", "sf1")
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     build(src, out, factor)

@@ -30,9 +30,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from real_time_fraud_detection_system_spark.operators import all_queries
 from real_time_fraud_detection_system_spark.session import cpu_count, get_spark
