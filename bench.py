@@ -178,11 +178,12 @@ def bench_streaming_ingest(spark, seconds: int = 20) -> float:
     (micro-batches run seconds at this rate on a loaded machine)."""
     import tempfile
 
+    from real_time_fraud_detection_system_spark.ml.scoring import score
     from real_time_fraud_detection_system_spark.sources.generators import (
         transactions_stream,
     )
     from real_time_fraud_detection_system_spark.streaming.pipeline import (
-        scored_stream,
+        deduplicated,
     )
 
     counts = {"n": 0, "t_last": None}
@@ -203,7 +204,9 @@ def bench_streaming_ingest(spark, seconds: int = 20) -> float:
     ckpt = tempfile.mkdtemp(prefix="bench_ingest_ckpt_")
     try:
         q = (
-            scored_stream(transactions_stream(spark, rows_per_second=1000000))
+            score(deduplicated(
+                transactions_stream(spark, rows_per_second=1000000)
+            ))
             .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .foreachBatch(count_batch)

@@ -12,7 +12,8 @@ and Airflow DAGs -- locally or via spark-submit on a cluster:
   score-one JSON              score one transaction (POST /predict)
   serve                       score a stream to the prediction store
                               (fraud_service hot path; rate source by
-                              default, Kafka via --brokers)
+                              default, Kafka via --brokers, files via
+                              --landing-dir; ops log in <out-dir>/_ops)
   daily-metrics               upsert day-grain metrics (metrics DAG)
   dq                          run the data-quality checks (DQ DAG)
   ann-index build|search      persist the bucketed IVF index / top-k
@@ -32,10 +33,15 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from .session import default_sf_dir
 from .storage import STORE_PARTITION_COL
+
+# serve runs until stopped: a processing-time trigger, since the rate
+# source cannot drain with availableNow (Spark would run one batch)
+SERVE_TRIGGER_SECONDS = 1
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -157,32 +163,43 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
         print(json.dumps(result, default=str), file=out)
         return 0
     if args.cmd == "serve":
+        from .streaming.observability import OpsLogListener
+        from .streaming.pipeline import (
+            file_drop_source,
+            kafka_source,
+            valid_transactions,
+        )
+
         if args.brokers:
-            from .streaming.pipeline import kafka_source, parse_transactions
-
-            raw = kafka_source(eng.spark, args.brokers, args.topic)
-            txns = parse_transactions(raw)
-        elif args.landing_dir:
-            from .streaming.pipeline import (
-                file_drop_source,
-                parse_transactions,
+            txns = valid_transactions(
+                kafka_source(eng.spark, args.brokers, args.topic)
             )
-
-            txns = parse_transactions(
+        elif args.landing_dir:
+            txns = valid_transactions(
                 file_drop_source(eng.spark, args.landing_dir)
-            ).filter("NOT _corrupt").drop("_corrupt", "raw_payload")
+            )
         else:
             from .sources.generators import transactions_stream
 
             txns = transactions_stream(
                 eng.spark, rows_per_second=args.rows_per_second
             )
-        query = eng.run_stream(txns, args.out_dir, args.checkpoint_dir)
-        if args.timeout_s is not None:
-            query.awaitTermination(args.timeout_s)
-            query.stop()
-        else:
-            query.awaitTermination()
+        # the ops log lives beside the store; removed afterwards so a
+        # caller sharing the session does not keep the listener
+        listener = OpsLogListener(os.path.join(args.out_dir, "_ops"))
+        eng.spark.streams.addListener(listener)
+        try:
+            query = eng.run_stream(
+                txns, args.out_dir, args.checkpoint_dir,
+                trigger_seconds=SERVE_TRIGGER_SECONDS,
+            )
+            if args.timeout_s is not None:
+                query.awaitTermination(args.timeout_s)
+                query.stop()
+            else:
+                query.awaitTermination()
+        finally:
+            eng.spark.streams.removeListener(listener)
         return 0
     if args.cmd == "daily-metrics":
         preds = eng.spark.read.parquet(args.predictions_dir)

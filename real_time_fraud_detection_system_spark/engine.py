@@ -58,8 +58,6 @@ class Engine:
     def load_model(self):
         from .ml.training import load_production
 
-        if self.registry_dir is None:
-            return None, None
         return load_production(self.spark, self.registry_dir)
 
     def score(self, df: DataFrame) -> DataFrame:
@@ -91,18 +89,14 @@ class Engine:
         transactions: DataFrame,
         out_dir: str,
         checkpoint_dir: str,
-        **kwargs,
+        trigger_seconds: int | None = None,
     ):
-        if self.registry_dir is not None:
-            from .streaming.pipeline import run_pipeline_with_registry
+        from .streaming.pipeline import run_pipeline_with_registry
 
-            return run_pipeline_with_registry(
-                transactions, out_dir, checkpoint_dir, self.registry_dir,
-                **kwargs,
-            )
-        from .streaming.pipeline import run_pipeline
-
-        return run_pipeline(transactions, out_dir, checkpoint_dir, **kwargs)
+        return run_pipeline_with_registry(
+            transactions, out_dir, checkpoint_dir, self.registry_dir,
+            trigger_seconds,
+        )
 
     # -- scheduled jobs -----------------------------------------------------
     def daily_metrics_upsert(

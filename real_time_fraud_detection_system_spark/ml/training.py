@@ -174,9 +174,12 @@ def _load_model(app_id: str, path: str, ino: int, mtime_ns: int) -> PipelineMode
     return PipelineModel.load(path)
 
 
-def load_production(spark, registry_dir: str) -> tuple[PipelineModel | None, str | None]:
-    """S8: load the current Production model, or (None, None) when absent
-    (callers then use the heuristic fallback -- main.py:100-104).
+def load_production(
+    spark, registry_dir: str | None
+) -> tuple[PipelineModel | None, str | None]:
+    """S8: load the current Production model, or (None, None) when there
+    is no registry or no Production model in it (callers then use the
+    heuristic fallback -- main.py:100-104).
 
     Every call re-reads the pointer, so a promotion is seen by the next
     call; the load itself is memoized on the live SparkContext and the
@@ -185,6 +188,8 @@ def load_production(spark, registry_dir: str) -> tuple[PipelineModel | None, str
     never gets another JVM's model, and a registry wiped and re-trained
     into the same ``v{n}`` reloads. Callers share the returned model, so
     they must not set params on it."""
+    if registry_dir is None:
+        return None, None
     pointer = os.path.join(registry_dir, PRODUCTION_POINTER)
     if not os.path.exists(pointer):
         return None, None

@@ -80,8 +80,3 @@ def assert_no_cartesian(df: DataFrame) -> None:
 
 def count_exchanges(df: DataFrame) -> int:
     return simple_plan(df).count("Exchange")
-
-
-def assert_whole_stage_codegen(df: DataFrame) -> None:
-    plan = simple_plan(df)
-    assert "WholeStageCodegen" in plan, f"no codegen span:\n{plan}"

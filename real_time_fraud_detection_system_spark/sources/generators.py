@@ -32,11 +32,8 @@ def _amount(seed: int):
     return F.round(F.when(spike, base * mult).otherwise(base), 2)
 
 
-def transactions_batch(
-    spark: SparkSession, n: int, seed: int = 42, tz: str = PRODUCER_TZ
-) -> DataFrame:
-    """Batch variant of the S1 producer: n simulated card transactions."""
-    df = spark.range(n)
+def _transactions(df: DataFrame, ts, seed: int, tz: str) -> DataFrame:
+    """The S1 columns over any frame, stamped with the ``ts`` column."""
     return df.select(
         F.expr("uuid()").alias("transaction_id"),
         _amount(seed).alias("amount"),
@@ -45,12 +42,17 @@ def transactions_batch(
             .cast("int")
             .alias("num_items"),
             F.rand(seed + 4).alias("merchant_risk"),
-            F.hour(F.from_utc_timestamp(F.current_timestamp(), tz))
-            .cast("double")
-            .alias("hour"),
+            F.hour(F.from_utc_timestamp(ts, tz)).cast("double").alias("hour"),
         ).alias("features"),
-        F.current_timestamp().alias("event_time"),
+        ts.alias("event_time"),
     )
+
+
+def transactions_batch(
+    spark: SparkSession, n: int, seed: int = 42, tz: str = PRODUCER_TZ
+) -> DataFrame:
+    """Batch variant of the S1 producer: n simulated card transactions."""
+    return _transactions(spark.range(n), F.current_timestamp(), seed, tz)
 
 
 def transactions_stream(
@@ -65,20 +67,7 @@ def transactions_stream(
         .option("rowsPerSecond", rows_per_second)
         .load()
     )
-    return rate.select(
-        F.expr("uuid()").alias("transaction_id"),
-        _amount(seed).alias("amount"),
-        F.struct(
-            F.greatest(F.lit(1), F.round(F.randn(seed + 3) + 2.0, 0))
-            .cast("int")
-            .alias("num_items"),
-            F.rand(seed + 4).alias("merchant_risk"),
-            F.hour(F.from_utc_timestamp(F.col("timestamp"), tz))
-            .cast("double")
-            .alias("hour"),
-        ).alias("features"),
-        F.col("timestamp").alias("event_time"),
-    )
+    return _transactions(rate, F.col("timestamp"), seed, tz)
 
 
 def training_frame(spark: SparkSession, n: int = 5000, seed: int = 42) -> DataFrame:

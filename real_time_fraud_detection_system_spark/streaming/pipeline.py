@@ -5,8 +5,15 @@ loop, per-event JSON parse, coerce, score, one INSERT per event, offsets
 auto-committed (at-least-once, duplicates possible). The Spark pipeline is
 the strict upgrade documented in SURVEY.md T2/T3: checkpointed offsets +
 watermarked dropDuplicates on transaction_id => effectively exactly-once
-into an idempotent date-partitioned parquet sink, with a dead-letter
-branch for poison messages (T6) instead of log-and-skip.
+into an idempotent date-partitioned parquet sink.
+
+One function starts the scoring stream: ``run_pipeline_with_registry``
+(scoring inside foreachBatch, with the heuristic when there is no
+registry). Every wire source (Kafka, the landing dir) goes through
+``valid_transactions`` first, so rows flagged corrupt (T6) are dropped
+before dedup and the store's schema does not depend on the source.
+Persisting those rows as dead letters is still open (ROADMAP
+direction 3).
 
 Scale posture: maxOffsetsPerTrigger bounds micro-batch size; the sink
 appends set-oriented (no per-row INSERT); date partitioning replaces the
@@ -43,8 +50,8 @@ WATERMARK = "10 minutes"
 
 def parse_transactions(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """P1/T6: permissive JSON parse of the wire format. Returns parsed
-    rows with a ``_corrupt`` flag; callers route corrupt rows to the
-    dead-letter sink instead of the reference's log-and-skip
+    rows with the ``raw_payload`` and a ``_corrupt`` flag, so a caller
+    can see corrupt rows instead of the reference's log-and-skip
     (main.py:233-235)."""
     parsed = raw.withColumn(
         "parsed",
@@ -59,15 +66,26 @@ def parse_transactions(raw: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
+def valid_transactions(raw: DataFrame) -> DataFrame:
+    """The ingest transform of every wire source: parse, drop the rows
+    flagged ``_corrupt`` (so no null ``transaction_id`` or
+    ``event_time`` reaches the store), keep exactly the
+    TRANSACTION_SCHEMA fields."""
+    return (
+        parse_transactions(raw)
+        .filter(~F.col("_corrupt"))
+        .select(*TRANSACTION_SCHEMA.fieldNames())
+    )
+
+
 def file_drop_source(
     spark: SparkSession, landing_dir: str, max_files_per_trigger: int = 10
 ) -> DataFrame:
     """Landing-zone ingestion: a file stream over newline-delimited
     JSON payloads dropped into a directory -- the broker-less third
-    ingestion path beside the rate source (tests) and Kafka
-    (integration-gated). Each line is one wire payload; rows flow
-    through the SAME parse_transactions dead-letter path as the Kafka
-    value column, so corrupt lines surface instead of vanishing.
+    ingestion path beside the rate source and Kafka. Each line is one
+    wire payload, so it goes through the same valid_transactions as
+    the Kafka value column.
     maxFilesPerTrigger bounds per-micro-batch work exactly like
     maxOffsetsPerTrigger does on the broker path."""
     return (
@@ -86,8 +104,8 @@ def kafka_source(
     max_offsets_per_trigger: int = 100_000,
 ) -> DataFrame:
     """S3: Kafka JSON consumer. Requires the spark-sql-kafka package on
-    the classpath (not in this container -- integration-gated; the rate
-    source drives all local tests)."""
+    the classpath; without a broker, tests/test_replay_resume.py feeds
+    recorded wire segments through the same valid_transactions."""
     return (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
@@ -139,7 +157,7 @@ def kafka_peek(
     return peek_newest(raw, n)
 
 
-def kafka_sink_options(df: DataFrame, brokers: str, topic: str) -> DataFrame:
+def kafka_sink_options(df: DataFrame) -> DataFrame:
     """S2: serialize to the wire format for a Kafka sink."""
     return df.select(F.to_json(F.struct("*")).alias("value"))
 
@@ -149,13 +167,6 @@ def deduplicated(transactions: DataFrame) -> DataFrame:
     return transactions.withWatermark("event_time", WATERMARK).dropDuplicates(
         ["transaction_id"]
     )
-
-
-def scored_stream(transactions: DataFrame, model=None, model_version=None) -> DataFrame:
-    """Score the (already parsed) stream with the shared scorer."""
-    from ..ml.scoring import score
-
-    return score(deduplicated(transactions), model, model_version)
 
 
 def prediction_sink_writer(out_dir: str):
@@ -199,62 +210,6 @@ def prediction_sink_writer(out_dir: str):
     return write_batch
 
 
-def jdbc_prediction_sink(
-    url: str,
-    table: str,
-    properties: dict | None = None,
-    writer=None,
-):
-    """S5 JDBC variant: foreachBatch writer appending each micro-batch to
-    a relational table, completing parity with the reference's per-event
-    Postgres INSERT loop (main.py:236-254) as ONE set-oriented append per
-    epoch. DB-gated: no JDBC driver ships in this container, so tests
-    inject ``writer`` (a fn(batch_df) fake); production uses the default
-    ``DataFrameWriter.jdbc`` path with e.g.
-    url='jdbc:postgresql://host/db', properties={'user': ..., 'driver':
-    'org.postgresql.Driver'}.
-
-    At-least-once into the table (a replayed epoch re-appends); pair with
-    a transaction_id unique index + ON CONFLICT DO NOTHING materialized
-    view, or the parquet sink, where exactly-once matters."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if writer is not None:
-            writer(batch_df)
-        else:
-            batch_df.write.jdbc(
-                url, table, mode="append", properties=properties or {}
-            )
-
-    return write_batch
-
-
-def run_pipeline(
-    transactions: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    model=None,
-    model_version=None,
-    trigger_seconds: int | None = None,
-    sink=None,
-):
-    """Wire the hot path end-to-end and start it. Returns the
-    StreamingQuery; S10 status = query.status / lastProgress.
-    ``sink`` overrides the default prediction_sink_writer(out_dir)
-    foreachBatch fn (tests use it to inject crash faults)."""
-    scored = scored_stream(transactions, model, model_version)
-    writer = (
-        scored.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink or prediction_sink_writer(out_dir))
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def risk_band_dim(spark: SparkSession) -> DataFrame:
     """Static 10-row merchant-risk-band dimension (the SURVEY section 2.4
     'natural extension': enrich the stream against a broadcast dim)."""
@@ -284,10 +239,16 @@ def run_pipeline_with_registry(
     transactions: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    registry_dir: str,
+    registry_dir: str | None = None,
     trigger_seconds: int | None = None,
 ):
-    """T8: hot model reload. The reference refreshes its registry model on
+    """Start the scoring stream: dedup, score, prediction_sink_writer.
+    Returns the StreamingQuery (S10 status = query.status /
+    lastProgress). Without ``trigger_seconds`` it drains what is
+    available and stops; with no ``registry_dir`` it scores with the
+    heuristic.
+
+    T8: hot model reload. The reference refreshes its registry model on
     a 60 s daemon thread (main.py:132-133, 183-189); Spark has no
     mid-stream operator swap, so the pragmatic equivalent (SURVEY.md
     section 7 'what's hard') is scoring inside ``foreachBatch`` and
@@ -297,6 +258,8 @@ def run_pipeline_with_registry(
     epoch under an unchanged Production pays one pointer read and one
     stat. Dedup stays stream-side (it is stateful); scoring moves
     batch-side."""
+    # resolved at call time, so tests and tracers can patch score,
+    # load_production and prediction_sink_writer on their modules
     from ..ml.scoring import score
     from ..ml.training import load_production
 
@@ -317,63 +280,6 @@ def run_pipeline_with_registry(
     else:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_stream_click_purchase_join(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "5 minutes"
-) -> DataFrame:
-    """Stream-stream inner join: purchases matched to the same user's
-    clicks from the preceding `horizon`. Both sides carry watermarks so
-    the join state is bounded -- Spark retains click state only until
-    the purchase-side watermark passes click_ts + horizon, then evicts.
-    The batch twin is operators/temporal.clicks_before_errors (bucketed
-    interval join); this is the streaming-native path.
-
-    Inputs: clicks(user_id, click_ts) and purchases(user_id,
-    purchase_ts, amount); a ``user_id`` column is renamed internally to
-    the prefixed join keys, and already-prefixed inputs
-    (c_user_id/p_user_id) pass through unchanged. Output keeps the
-    prefixed keys (both sides survive the inner join).
-    """
-    c = clicks.withColumnRenamed("user_id", "c_user_id").withWatermark(
-        "click_ts", horizon
-    )
-    p = purchases.withColumnRenamed("user_id", "p_user_id").withWatermark(
-        "purchase_ts", horizon
-    )
-    return p.join(
-        c,
-        F.expr(
-            "p_user_id = c_user_id AND "
-            f"click_ts >= purchase_ts - INTERVAL {horizon} AND "
-            "click_ts < purchase_ts"
-        ),
-        "inner",
-    )
-
-
-def session_window_counts(
-    events: DataFrame, gap: str = "30 minutes"
-) -> DataFrame:
-    """Native session_window streaming aggregation (dynamic gap-based
-    windows) -- the built-in counterpart of streaming/stateful.py's
-    custom applyInPandasWithState sessionizer. Emits one row per closed
-    session in append mode once the watermark passes the gap."""
-    return (
-        events.withWatermark("ts", gap)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
 
 
 def windowed_counts(transactions: DataFrame) -> DataFrame:

@@ -1,8 +1,12 @@
 """CLI surface (__main__.py): each reference entry point drives the
 engine through the subcommand a migrating user would run."""
 
+import datetime
 import io
 import json
+import os
+
+import pytest
 
 from real_time_fraud_detection_system_spark.__main__ import main
 
@@ -149,9 +153,15 @@ def test_cli_retention(spark, tmp_path):
     assert info["deleted"] == ["2024-01-01"] and info["kept"] == 1
 
 
-def test_cli_serve_from_landing_dir(spark, sf_dir, tmp_path):
-    """serve --landing-dir ingests dropped payload files end to end
-    into the prediction store."""
+CORRUPT_PAYLOADS = [
+    "{not json at all",
+    json.dumps({"amount": 1.0, "event_time": "2024-01-01T00:00:00Z"}),
+    json.dumps({"transaction_id": "no-event-time", "amount": 2.0}),
+]
+
+
+def _payloads(spark, n: int) -> list[str]:
+    """n wire payloads from the engine's own Kafka serializer."""
     from real_time_fraud_detection_system_spark.sources.generators import (
         transactions_batch,
     )
@@ -159,27 +169,118 @@ def test_cli_serve_from_landing_dir(spark, sf_dir, tmp_path):
         kafka_sink_options,
     )
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    payloads = [
+    return [
         r["value"]
-        for r in kafka_sink_options(
-            transactions_batch(spark, 25), "x:9092", "t"
-        ).collect()
+        for r in kafka_sink_options(transactions_batch(spark, n)).collect()
     ]
-    (landing / "drop.json").write_text("\n".join(payloads))
-    out_dir = str(tmp_path / "preds")
-    code, lines = _run([
-        "--sf-dir", sf_dir, "serve",
-        "--landing-dir", str(landing),
+
+
+def _serve(sf_dir, root, timeout_s: int, *source) -> str:
+    """Run ``serve`` for timeout_s seconds; return its store dir."""
+    out_dir = str(root / "preds")
+    code, _ = _run([
+        "--sf-dir", sf_dir, "serve", *source,
         "--out-dir", out_dir,
-        "--checkpoint-dir", str(tmp_path / "ckpt"),
-        "--timeout-s", "45",
+        "--checkpoint-dir", str(root / "ckpt"),
+        "--timeout-s", str(timeout_s),
     ])
     assert code == 0
+    return out_dir
+
+
+@pytest.fixture(scope="module")
+def rate_store(spark, sf_dir, tmp_path_factory):
+    """The store of one ``serve`` run over the default rate source."""
+    return _serve(sf_dir, tmp_path_factory.mktemp("serve_rate"), 15)
+
+
+def test_cli_serve_from_landing_dir(spark, sf_dir, tmp_path):
+    """serve --landing-dir ingests dropped payload files end to end
+    into the prediction store, and logs every micro-batch's progress
+    to <out-dir>/_ops."""
+    from real_time_fraud_detection_system_spark.streaming.observability import (
+        read_ops_log,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "drop.json").write_text("\n".join(_payloads(spark, 25)))
+    listeners = spark._jsparkSession.streams().listListeners()
+    out_dir = _serve(sf_dir, tmp_path, 30, "--landing-dir", str(landing))
     got = spark.read.parquet(out_dir)
     assert got.count() == 25
     assert "proba" in got.columns
+    progress = read_ops_log(spark, os.path.join(out_dir, "_ops")).filter(
+        "event = 'progress'"
+    ).collect()
+    assert progress
+    assert sum(r["num_input_rows"] for r in progress) == 25
+    # serve removes its listener before it returns
+    assert len(spark._jsparkSession.streams().listListeners()) == len(
+        listeners
+    )
+
+
+def test_cli_serve_rate_source_keeps_running(spark, rate_store):
+    """serve over the rate source runs micro-batches until --timeout-s
+    and leaves rows in the store (the rate source cannot drain with an
+    availableNow trigger: Spark would run a single batch and stop)."""
+    assert spark.read.parquet(rate_store).count() > 0
+
+
+def test_cli_serve_sources_share_one_store_schema(
+    spark, sf_dir, tmp_path, rate_store
+):
+    """A recorded Kafka-wire segment (through valid_transactions), a
+    landing dir (through serve) and the rate source give stores with
+    one schema; the corrupt payloads reach none of them."""
+    from real_time_fraud_detection_system_spark.streaming.jobs import (
+        dq_checks,
+    )
+    from real_time_fraud_detection_system_spark.streaming.pipeline import (
+        run_pipeline_with_registry,
+        valid_transactions,
+    )
+
+    lines = _payloads(spark, 20) + CORRUPT_PAYLOADS
+    wire_schema = (
+        "key binary, value binary, topic string, partition int, "
+        "offset long, timestamp timestamp, timestampType int"
+    )
+    ts = datetime.datetime(2025, 1, 1, 12, 0, 0)
+    seg = str(tmp_path / "segment")
+    spark.createDataFrame(
+        [
+            (None, bytearray(v.encode()), "transactions", 0, i, ts, 0)
+            for i, v in enumerate(lines)
+        ],
+        wire_schema,
+    ).coalesce(1).write.parquet(seg)
+    wire_store = str(tmp_path / "wire" / "preds")
+    q = run_pipeline_with_registry(
+        valid_transactions(spark.readStream.schema(wire_schema).parquet(seg)),
+        wire_store,
+        str(tmp_path / "wire" / "ckpt"),
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "drop.json").write_text("\n".join(lines))
+    landing_store = _serve(
+        sf_dir, tmp_path / "landed", 30, "--landing-dir", str(landing)
+    )
+
+    stores = [wire_store, landing_store, rate_store]
+    frames = [spark.read.parquet(d) for d in stores]
+    assert frames[0].schema == frames[1].schema == frames[2].schema
+    for d, df in zip(stores, frames):
+        assert not {"raw_payload", "_corrupt"} & set(df.columns)
+        assert df.filter("transaction_id IS NULL").count() == 0
+        assert not [n for n in os.listdir(d) if "__HIVE_DEFAULT" in n]
+    assert frames[0].count() == frames[1].count() == 20
+    assert dq_checks(frames[0])["null_ids"] == 0
 
 
 def test_cli_compact(spark, tmp_path):

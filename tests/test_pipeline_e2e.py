@@ -15,7 +15,7 @@ from real_time_fraud_detection_system_spark.streaming.jobs import (
     dq_checks,
 )
 from real_time_fraud_detection_system_spark.streaming.pipeline import (
-    run_pipeline,
+    run_pipeline_with_registry,
 )
 
 TXN_SCHEMA = (
@@ -32,7 +32,7 @@ def test_stream_to_store_to_jobs(spark, tmp_path):
     txns.write.parquet(str(src / "b1"))
 
     stream = spark.readStream.schema(TXN_SCHEMA).parquet(str(src / "*"))
-    q = run_pipeline(stream, str(out), str(ckpt))
+    q = run_pipeline_with_registry(stream, str(out), str(ckpt))
     q.awaitTermination(120)
 
     preds = spark.read.parquet(str(out))

@@ -5,8 +5,9 @@ live broker exists to test here (VERDICT r2 gap #1).
 The harness writes parquet "segments" whose schema is exactly what
 ``spark.readStream.format('kafka')`` emits (key/value binary + topic/
 partition/offset/timestamp metadata); a file stream over them feeds
-``parse_transactions`` -- the same code the Kafka source feeds -- and
-``run_pipeline``'s checkpoint provides the resume contract:
+``valid_transactions`` -- the same code the Kafka source feeds in
+``serve`` -- and ``run_pipeline_with_registry``'s checkpoint provides
+the resume contract:
 
   * restart picks up AFTER the last committed segment (no reprocessing,
     proven via recentProgress input counts);
@@ -30,11 +31,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from real_time_fraud_detection_system_spark.streaming import pipeline
 from real_time_fraud_detection_system_spark.streaming.pipeline import (
     kafka_sink_options,
-    parse_transactions,
-    prediction_sink_writer,
-    run_pipeline,
+    run_pipeline_with_registry,
+    valid_transactions,
 )
 
 KAFKA_WIRE_SCHEMA = (
@@ -59,7 +60,7 @@ def _write_segment(spark, seg_dir: str, ids: range) -> None:
         (f"T{i:04d}", 10.0 + i, (1 + i % 5, 0.25, 12.0), TS) for i in ids
     ]
     txns = spark.createDataFrame(rows, TXN_SCHEMA)
-    wire = kafka_sink_options(txns, "replay:9092", "transactions").select(
+    wire = kafka_sink_options(txns).select(
         F.lit(None).cast("binary").alias("key"),
         F.encode("value", "UTF-8").alias("value"),
         F.lit("transactions").alias("topic"),
@@ -71,16 +72,14 @@ def _write_segment(spark, seg_dir: str, ids: range) -> None:
     wire.coalesce(1).write.mode("append").parquet(seg_dir)
 
 
-def _replayed_transactions(spark, seg_dir: str):
-    raw = (
+def _start(spark, seg_dir: str, out: str, ckpt: str):
+    """Start the scoring stream over the recorded segments."""
+    replayed = valid_transactions(
         spark.readStream.schema(KAFKA_WIRE_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(seg_dir)
     )
-    parsed = parse_transactions(raw)
-    return parsed.filter(~F.col("_corrupt")).select(
-        "transaction_id", "amount", "features", "event_time"
-    )
+    return run_pipeline_with_registry(replayed, out, ckpt)
 
 
 def _drain(q) -> int:
@@ -96,13 +95,13 @@ def test_restart_resumes_after_committed_offsets(spark, tmp_path):
         str(tmp_path / "ckpt"),
     )
     _write_segment(spark, seg, range(0, 30))
-    n_in = _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    n_in = _drain(_start(spark, seg, out, ckpt))
     assert n_in == 30
     assert spark.read.parquet(out).count() == 30
 
     # second incarnation: 20 new ids + 10 replayed duplicates
     _write_segment(spark, seg, range(20, 50))
-    n_in = _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    n_in = _drain(_start(spark, seg, out, ckpt))
     # resume read ONLY the new segment (30 rows), not the committed one
     assert n_in == 30
     store = spark.read.parquet(out)
@@ -111,7 +110,7 @@ def test_restart_resumes_after_committed_offsets(spark, tmp_path):
     assert store.select("transaction_id").distinct().count() == 50
 
 
-def test_crash_after_append_replays_exactly_once(spark, tmp_path):
+def test_crash_after_append_replays_exactly_once(spark, tmp_path, monkeypatch):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     seg, out, ckpt = (
@@ -120,31 +119,36 @@ def test_crash_after_append_replays_exactly_once(spark, tmp_path):
         str(tmp_path / "ckpt"),
     )
     _write_segment(spark, seg, range(0, 10))
-    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    _drain(_start(spark, seg, out, ckpt))
     assert spark.read.parquet(out).count() == 10
 
     # crash AFTER the sink append, BEFORE Spark commits the epoch: the
     # worst-case window for duplicate predictions
     _write_segment(spark, seg, range(10, 20))
-    real_sink = prediction_sink_writer(out)
+    real_writer = pipeline.prediction_sink_writer
     crashed = {"done": False}
 
-    def crashing_sink(batch_df, epoch_id):
-        real_sink(batch_df, epoch_id)
-        if not crashed["done"]:
-            crashed["done"] = True
-            raise RuntimeError("injected crash between append and commit")
+    def crashing_writer(out_dir):
+        real_sink = real_writer(out_dir)
 
-    q = run_pipeline(
-        _replayed_transactions(spark, seg), out, ckpt, sink=crashing_sink
-    )
+        def write_batch(batch_df, epoch_id):
+            real_sink(batch_df, epoch_id)
+            if not crashed["done"]:
+                crashed["done"] = True
+                raise RuntimeError("injected crash between append and commit")
+
+        return write_batch
+
+    monkeypatch.setattr(pipeline, "prediction_sink_writer", crashing_writer)
+    q = _start(spark, seg, out, ckpt)
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(180)
     assert crashed["done"]
+    monkeypatch.undo()
 
     # restart: Spark replays the uncommitted epoch under the SAME id;
     # the sink's batchId marker turns the replay into a no-op
-    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    _drain(_start(spark, seg, out, ckpt))
     store = spark.read.parquet(out)
     assert store.count() == 20  # no duplicate appends from the replay
     assert store.select("transaction_id").distinct().count() == 20
@@ -157,11 +161,11 @@ def _crash_in_second_segment(spark, monkeypatch, seg, out, ckpt, name, fake):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     _write_segment(spark, seg, range(0, 10))
-    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    _drain(_start(spark, seg, out, ckpt))
     _write_segment(spark, seg, range(10, 20))
     real = getattr(os, name)
     monkeypatch.setattr(os, name, lambda *a, **k: fake(real, *a, **k))
-    q = run_pipeline(_replayed_transactions(spark, seg), out, ckpt)
+    q = _start(spark, seg, out, ckpt)
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(180)
     monkeypatch.undo()
@@ -190,7 +194,7 @@ def test_crash_before_marker_redoes_the_epoch(spark, tmp_path, monkeypatch):
     )
     assert crashed
 
-    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    _drain(_start(spark, seg, out, ckpt))
     store = spark.read.parquet(out)
     assert store.count() == 20
     assert store.select("transaction_id").distinct().count() == 20
@@ -225,7 +229,7 @@ def test_crash_midway_through_moves_rolls_forward(
     assert os.path.exists(os.path.join(out, "_epochs", staged))
     assert os.listdir(os.path.join(out, "_staging", staged))
 
-    _drain(run_pipeline(_replayed_transactions(spark, seg), out, ckpt))
+    _drain(_start(spark, seg, out, ckpt))
     store = spark.read.parquet(out)
     assert store.count() == 20
     assert store.select("transaction_id").distinct().count() == 20
@@ -296,7 +300,7 @@ def test_kafka_peek_newest_first_over_recorded_segment(spark, tmp_path):
     txns = spark.createDataFrame(rows, TXN_SCHEMA)
     # broker timestamp tracks the event minute so newest-first is
     # observable; one garbage record lands SECOND-newest
-    wire = kafka_sink_options(txns, "replay:9092", "transactions").select(
+    wire = kafka_sink_options(txns).select(
         F.encode("value", "UTF-8").alias("value"),
         F.get_json_object(F.col("value"), "$.event_time").alias("_et"),
     ).select(

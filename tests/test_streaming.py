@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_spark.streaming.pipeline import (
     parse_transactions,
-    prediction_sink_writer,
-    run_pipeline,
-    scored_stream,
+    run_pipeline_with_registry,
 )
 from real_time_fraud_detection_system_spark.sources.generators import (
     transactions_stream,
@@ -62,7 +60,7 @@ def test_streaming_dedup_exactly_once(spark, tmp_path):
     )
     df.write.parquet(src_dir)
     stream = spark.readStream.schema(df.schema).parquet(src_dir)
-    q = run_pipeline(stream, out_dir, ckpt)
+    q = run_pipeline_with_registry(stream, out_dir, ckpt)
     q.awaitTermination(120)
     result = spark.read.parquet(out_dir)
     assert result.count() == 2
@@ -76,14 +74,7 @@ def test_rate_source_scored_stream(spark, tmp_path):
     # sink with the full predictions schema
     stream = transactions_stream(spark, rows_per_second=500)
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        scored_stream(stream)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(prediction_sink_writer(out_dir))
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
+    q = run_pipeline_with_registry(stream, out_dir, ckpt, trigger_seconds=1)
     try:
         import time
 
@@ -149,7 +140,7 @@ def test_kafka_sink_wire_format(spark):
     )
 
     txns = transactions_batch(spark, 5, seed=11)
-    wire = kafka_sink_options(txns, "broker:9092", "transactions")
+    wire = kafka_sink_options(txns)
     assert wire.columns == ["value"]
     back = parse_transactions(wire)
     rows = back.collect()
@@ -164,11 +155,7 @@ def test_streaming_query_status_surface(spark, tmp_path):
     from real_time_fraud_detection_system_spark.sources.generators import (
         transactions_stream,
     )
-    from real_time_fraud_detection_system_spark.streaming.pipeline import (
-        run_pipeline,
-    )
-
-    q = run_pipeline(
+    q = run_pipeline_with_registry(
         transactions_stream(spark, rows_per_second=100),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
@@ -185,42 +172,17 @@ def test_streaming_query_status_surface(spark, tmp_path):
         q.stop()
 
 
-def test_jdbc_prediction_sink_appends_each_epoch(spark, tmp_path):
-    """S5 JDBC variant (db-gated: no JDBC driver in this container, so a
-    fake writer captures what the default path would hand to
-    DataFrameWriter.jdbc): one set-oriented append per micro-batch."""
-    from real_time_fraud_detection_system_spark.sources.generators import (
-        transactions_batch,
-    )
-    from real_time_fraud_detection_system_spark.streaming.pipeline import (
-        jdbc_prediction_sink,
-    )
-
-    seen = []
-    sink = jdbc_prediction_sink(
-        "jdbc:postgresql://db/frauddb", "predictions",
-        writer=lambda df: seen.append(df.count()),
-    )
-    batch = transactions_batch(spark, 25, seed=7)
-    sink(batch, epoch_id=0)
-    sink(batch.limit(10), epoch_id=1)
-    assert seen == [25, 10]
-
-
 def test_file_drop_source_end_to_end(spark, tmp_path):
     """Landing-zone ingestion: JSON payload lines dropped as files flow
     through the same parse -> dead-letter -> score path as the broker
     wire; corrupt lines surface flagged instead of vanishing."""
-    from pyspark.sql import functions as F
-
+    from real_time_fraud_detection_system_spark.ml.scoring import score
     from real_time_fraud_detection_system_spark.sources.generators import (
         transactions_batch,
     )
     from real_time_fraud_detection_system_spark.streaming.pipeline import (
         file_drop_source,
         kafka_sink_options,
-        parse_transactions,
-        scored_stream,
     )
 
     landing = tmp_path / "landing"
@@ -228,7 +190,7 @@ def test_file_drop_source_end_to_end(spark, tmp_path):
     txns = transactions_batch(spark, 40)
     payloads = [
         r["value"]
-        for r in kafka_sink_options(txns, "x:9092", "t").collect()
+        for r in kafka_sink_options(txns).collect()
     ]
     (landing / "a.json").write_text("\n".join(payloads[:20]))
     (landing / "b.json").write_text(
@@ -243,7 +205,7 @@ def test_file_drop_source_end_to_end(spark, tmp_path):
         clean = parsed.filter("NOT _corrupt")
         got["parsed"] += clean.count()
         got["scored"] += (
-            scored_stream(clean).filter(F.col("proba").isNotNull()).count()
+            score(clean).filter(F.col("proba").isNotNull()).count()
         )
         parsed.unpersist()
 
