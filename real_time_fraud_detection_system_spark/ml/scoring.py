@@ -81,28 +81,30 @@ def score(df: DataFrame, model: PipelineModel | None = None,
 
 def score_one(spark, model, transaction: dict) -> dict:
     """EP2 (S9): the request/response surface -- score a single JSON
-    transaction through the same engine code path on a 1-row DataFrame."""
+    transaction through the same engine code path on a 1-row DataFrame.
+
+    The amount is read from the JSON payload by Spark's JSON reader, as
+    the wire parse reads it (a string or boolean amount reads as null),
+    and project_features then applies P5 (null -> 0.0), so a request
+    scores exactly like the same payload arriving on the stream."""
     import json as _json
 
-    row = {
-        "transaction_id": str(transaction.get("transaction_id")),
-        "amount": float(transaction.get("amount", 0.0)),
-        "features": {
-            k: float(v)
-            for k, v in (transaction.get("features") or {}).items()
-            if isinstance(v, (int, float))
-        },
+    features = {
+        k: float(v)
+        for k, v in (transaction.get("features") or {}).items()
+        if isinstance(v, (int, float))
     }
     df = spark.createDataFrame(
         [
             (
-                row["transaction_id"],
-                row["amount"],
-                row["features"],
+                str(transaction.get("transaction_id")),
+                features,
                 _json.dumps(transaction),
             )
         ],
-        "transaction_id string, amount double, features map<string,double>, raw_payload string",
+        "transaction_id string, features map<string,double>, raw_payload string",
+    ).withColumn(
+        "amount", F.from_json("raw_payload", "amount double")["amount"]
     )
     out = score(df, model).select("prediction", "proba", "model_version").first()
     return {

@@ -31,13 +31,11 @@ MEMO_VERSION = 1
 # entries retained (older evicted by LRU mtime). The artifact family
 # has grown to ~13 kinds (sig/pairs/postings/bm25stats/srcsh/srcpairs/
 # rarecand/semlabels/kmvsketch/orderitems/tradew + per-variant keys) x
-# 5 SF replicas (sf0.001/sf0.01 tests+oracle, sf0.1/sf1/sf10 bench) =
-# ~65 live entries; at the old cap of 40 a full multi-scale bench run
-# THRASHED -- the sf1 section's fresh builds LRU-evicted the sf10
-# entries mid-run and the sf10 section then spent 693 s rebuilding
-# them inside its own deadline (round-13 second-pass exhibit: 96 of
-# 128 sf10 queries recorded -1 "not run"). 96 = the live set + one
-# full replica of headroom; entries are per-SF parquet dirs, ~1-2 GB
+# 5 SF replicas (sf0.001/sf0.01 tests+oracle, sf0.1/sf1/sf10 timing) =
+# ~65 live entries; at a cap of 40, timing one replica after another
+# THRASHED -- the sf1 builds LRU-evicted the sf10 entries, which were
+# then rebuilt mid-run (693 s measured at sf10). 96 = the live set +
+# one full replica of headroom; entries are per-SF parquet dirs, ~1-2 GB
 # total at the 100x replica -- retention is an operational constant
 # for the snapshot-index store, not a per-host tune.
 MEMO_KEEP = 96
@@ -167,9 +165,9 @@ def memo_parquet(
         _evict(root)
     else:
         # LRU, not FIFO: refresh the entry's mtime on every hit so a
-        # hot artifact built long ago outlives colder newer ones (a
-        # full multi-scale bench run cycles > a dozen entries; evicting
-        # by creation time thrashed in-use indexes mid-run)
+        # hot artifact built long ago outlives colder newer ones (timing
+        # several replicas cycles > a dozen entries; evicting by
+        # creation time thrashed in-use indexes mid-run)
         try:
             os.utime(path, None)
         except OSError:
@@ -185,11 +183,11 @@ def prime_memos(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     once per corpus snapshot, probe it from every query" -- but a
     single-cold measured pass that happens to be the first consumer of
     an invalidated memo records the ONE-TIME build as that query's
-    cost (round-10 exhibit: kmv_source_overlap 28.7 s recorded in the
-    bench sf10 section vs 2.3 s warm, purely the census memo rebuild
-    forced by a schema change). bench.py calls this before each
-    measured section so the contract line records query cost; the
-    per-tag seconds are the audit trail of what the priming paid.
+    cost (kmv_source_overlap measured 28.7 s at sf10 vs 2.3 s warm,
+    purely the census memo rebuild forced by a schema change).
+    tools/time_queries.py calls this before its timed runs so they
+    record query cost; the per-tag seconds are the audit trail of what
+    the priming paid.
 
     Build order follows the artifact DAG (signatures before the
     census/pairs built on them), so no builder pays a dependency's

@@ -441,8 +441,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it fits executor storage at any corpus the banding itself can
     # handle. Lifetime: the returned frame is lazy, so the cache cannot
     # be unpersisted here; like contamination_check's shingle cache,
-    # reclamation is LRU eviction (and bench.py clearCache()s between
-    # queries).
+    # reclamation is LRU eviction (and tools/time_queries.py
+    # clearCache()s between queries).
     return _lsh_pairs(spark, sf_dir).orderBy("a_id", "b_id")
 
 

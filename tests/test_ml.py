@@ -1,5 +1,6 @@
 """M2-M8 training + scoring tests (SURVEY.md section 2.8)."""
 
+import json
 import os
 import shutil
 import threading
@@ -114,6 +115,36 @@ def test_score_one_request_response(spark, registry):
     )
     assert set(out) == {"prediction", "proba", "model_version"}
     assert out["prediction"] in (0, 1)
+
+
+_MISSING = object()
+
+
+@pytest.mark.parametrize(
+    "amount", [_MISSING, None, "abc", "12.5", 2000.0, True],
+    ids=["missing", "none", "abc", "numeric-string", "number", "bool"],
+)
+def test_score_one_coerces_amount_like_score(spark, registry, amount):
+    # P5: whatever the amount is, a request scores exactly like the same
+    # payload arriving on the wire and scored by score()
+    from real_time_fraud_detection_system_spark.streaming.pipeline import (
+        parse_transactions,
+    )
+
+    tx = {
+        "transaction_id": "t",
+        "features": {"num_items": 3, "merchant_risk": 0.7, "hour": 2.0},
+        "event_time": "2024-01-01T00:00:00Z",
+    }
+    if amount is not _MISSING:
+        tx["amount"] = amount
+    raw = spark.createDataFrame([(json.dumps(tx),)], "value string")
+    model, _ = load_production(spark, registry[0])
+    for m in (None, model):
+        ref = score(parse_transactions(raw), m).first()
+        out = score_one(spark, m, tx)
+        assert out["prediction"] == ref["prediction"]
+        assert out["proba"] == pytest.approx(ref["proba"], rel=1e-12)
 
 
 @pytest.fixture

@@ -5,9 +5,10 @@ Usage: python tools/dump_plans.py <suffix> [sf_dir] name [name...]
 Writes plans/<name>_<suffix>.txt for each query (suffix is
 "before" / "after"): the evidence behind a plan-change claim. Explain
 output is captured from the exact frame the registry callable returns,
-on the same session config bench.py uses for the sf0.1 section (1 MB
-splits), so Exchange counts and join strategies match the measured
-runs.
+on a session with 1 MB input splits (the sf0.1 tables are single small
+files, which the 128 MB default would read as one split each), so
+Exchange counts and join strategies match `tools/time_queries.py
+<sf_dir> --split-mb 1` runs.
 """
 
 from __future__ import annotations

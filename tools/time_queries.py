@@ -1,11 +1,19 @@
-"""Time named registry queries with the noop sink (best-of-N).
+"""Time registry queries with the noop sink (best-of-N).
 
-Usage: python tools/time_queries.py <sf_dir> [--best-of N] [--split-mb M] name...
+Usage: python tools/time_queries.py <sf_dir> [--best-of N] [--split-mb M] [name...]
 
-The per-query harness for optimization work: same session shape as
-bench.py's scale sections (fresh session, memos primed first so one-time
-index builds are not billed to the first query), per-query job
-descriptions for UI attribution (guide §1.5).
+With no names, every registered query is timed. The queries share one
+fresh session whose memos are primed first, so one-time index builds are
+not billed to the first query that reads them; each run carries the job
+description "<name> run<i>", and the cache is cleared between queries.
+A query that raises (a quadratic guard at scale, say) is recorded as
+``ERR:<ExceptionName>`` and the run goes on. One line per query as it
+finishes, then one JSON line {name: seconds or "ERR:..."}.
+
+The noop sink, not collect: output-heavy queries (full signature
+tables, per-doc frames) measure several times slower under collect,
+which mis-ranks the slow ones. The end-to-end benchmark of the fraud
+pipeline is perfbench/run.py, not this tool.
 """
 
 from __future__ import annotations
@@ -26,11 +34,15 @@ from real_time_fraud_detection_system_spark.session import cpu_count, get_spark
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*")
     ap.add_argument("--best-of", type=int, default=2)
     ap.add_argument("--split-mb", type=int, default=64)
     ap.add_argument("--no-memo", action="store_true")
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()
+    qs = all_queries()
+    unknown = [n for n in args.names if n not in qs]
+    if unknown:
+        ap.error(f"not registered: {' '.join(unknown)}")
 
     spark = get_spark(
         "time-queries",
@@ -41,24 +53,27 @@ def main() -> int:
             )
         },
     )
-    qs = all_queries()
     if not args.no_memo:
         t0 = time.time()
         prime_memos(spark, args.sf_dir)
         print(f"memo prime: {time.time() - t0:.1f}s", flush=True)
-    out = {}
-    for name in args.names:
-        best = float("inf")
-        for i in range(args.best_of):
-            spark.sparkContext.setJobDescription(f"{name} run{i}")
-            t0 = time.time()
-            qs[name](spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
+    out: dict[str, float | str] = {}
+    for name in args.names or qs:
+        try:
+            best = float("inf")
+            for i in range(args.best_of):
+                spark.sparkContext.setJobDescription(f"{name} run{i}")
+                t0 = time.time()
+                qs[name](spark, args.sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                best = min(best, time.time() - t0)
+            out[name] = round(best, 2)
+        except Exception as exc:  # noqa: BLE001 -- one failure must not end the run
+            out[name] = f"ERR:{type(exc).__name__}"
+            print(f"{name}: {exc}".splitlines()[0], file=sys.stderr, flush=True)
         spark.catalog.clearCache()
-        out[name] = round(best, 2)
-        print(f"{name} {best:.2f}", flush=True)
+        print(f"{name} {out[name]}", flush=True)
     print(json.dumps(out))
     spark.stop()
     return 0
