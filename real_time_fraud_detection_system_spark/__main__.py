@@ -17,9 +17,11 @@ and Airflow DAGs -- locally or via spark-submit on a cluster:
   daily-metrics               upsert day-grain metrics (metrics DAG)
   dq                          run the data-quality checks (DQ DAG)
   ann-index build|search      persist the bucketed IVF index / top-k
-                              search it (build once, query all day)
+                              search its untombstoned members (build
+                              once, query all day)
   dedup-index build|probe     persist the bucketed MinHash index /
-                              dedup an arriving shard against it
+                              dedup an arriving shard against its
+                              untombstoned docs
   retention                   drop prediction-store event_date
                               partitions older than --keep-days
   compact                     rewrite a partitioned store's small
@@ -290,7 +292,11 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
                           "out_dir": args.out_dir}), file=out)
         return 0
     if args.cmd == "ann-index":
-        from .operators.similarity import ann_search, persist_ann_index
+        from .operators.similarity import (
+            ann_search,
+            live_ann_members,
+            persist_ann_index,
+        )
 
         if args.action == "build":
             cents, members = persist_ann_index(
@@ -310,7 +316,7 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
         _print_df(
             ann_search(
                 eng.spark.table(f"{args.prefix}_cents"),
-                eng.spark.table(f"{args.prefix}_members"),
+                live_ann_members(eng.spark, args.prefix),
                 queries,
             ),
             args.limit, out,
@@ -323,6 +329,7 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
         from .operators.dedup import (
             _shard_pred_spark,
             incremental_dedup_pairs_indexed,
+            live_dedup_index,
             persist_dedup_index,
             signature_index,
         )
@@ -344,8 +351,7 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
             )
         _print_df(
             incremental_dedup_pairs_indexed(
-                eng.spark.table(f"{args.prefix}_sig"),
-                eng.spark.table(f"{args.prefix}_band"),
+                *live_dedup_index(eng.spark, args.prefix),
                 signature_index(shard),
             ),
             args.limit, out,

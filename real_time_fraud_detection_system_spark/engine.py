@@ -69,8 +69,8 @@ class Engine:
     def score_one(self, transaction: dict) -> dict:
         from .ml.scoring import score_one
 
-        model, _ = self.load_model()
-        return score_one(self.spark, model, transaction)
+        model, version = self.load_model()
+        return score_one(self.spark, model, transaction, version)
 
     # -- training -----------------------------------------------------------
     def train_and_register(self, n: int = 5000, seed: int = 42) -> dict:

@@ -34,24 +34,17 @@ def heuristic_proba(amount: Column) -> Column:
 
 
 def project_features(df: DataFrame) -> DataFrame:
-    """P3/P4/P5: coerce + project the open-ended features struct/map to
-    the fixed FEATURE_ORDER columns, missing keys -> 0.0, amount copied
+    """P3/P4/P5: coerce + project the parsed features struct to the
+    fixed FEATURE_ORDER columns, missing keys -> 0.0, amount copied
     into the feature set, extra keys ignored by construction."""
-    from pyspark.sql.types import MapType
-
     out = df.withColumn(
         "amount", F.coalesce(F.col("amount").cast("double"), F.lit(0.0))
     )
-    is_map = isinstance(df.schema["features"].dataType, MapType)
     for name in FEATURE_ORDER:
         if name == "amount":
             continue
-        accessor = (
-            F.col("features").getItem(name) if is_map else F.col(f"features.{name}")
-        )
-        out = out.withColumn(
-            name, F.coalesce(accessor.cast("double"), F.lit(0.0))
-        )
+        value = F.col(f"features.{name}").cast("double")
+        out = out.withColumn(name, F.coalesce(value, F.lit(0.0)))
     return out
 
 
@@ -79,34 +72,24 @@ def score(df: DataFrame, model: PipelineModel | None = None,
     return result.drop(*drop)
 
 
-def score_one(spark, model, transaction: dict) -> dict:
+def score_one(spark, model, transaction: dict,
+              model_version: str | None = None) -> dict:
     """EP2 (S9): the request/response surface -- score a single JSON
     transaction through the same engine code path on a 1-row DataFrame.
 
-    The amount is read from the JSON payload by Spark's JSON reader, as
-    the wire parse reads it (a string or boolean amount reads as null),
-    and project_features then applies P5 (null -> 0.0), so a request
-    scores exactly like the same payload arriving on the stream."""
-    import json as _json
+    The request is parsed by ``parse_transactions``, the wire parse of
+    the stream, so a request scores exactly like the same payload
+    arriving on the stream."""
+    import json
 
-    features = {
-        k: float(v)
-        for k, v in (transaction.get("features") or {}).items()
-        if isinstance(v, (int, float))
-    }
-    df = spark.createDataFrame(
-        [
-            (
-                str(transaction.get("transaction_id")),
-                features,
-                _json.dumps(transaction),
-            )
-        ],
-        "transaction_id string, features map<string,double>, raw_payload string",
-    ).withColumn(
-        "amount", F.from_json("raw_payload", "amount double")["amount"]
+    from ..streaming.pipeline import parse_transactions
+
+    raw = spark.createDataFrame([(json.dumps(transaction),)], "value string")
+    out = (
+        score(parse_transactions(raw), model, model_version)
+        .select("prediction", "proba", "model_version")
+        .first()
     )
-    out = score(df, model).select("prediction", "proba", "model_version").first()
     return {
         "prediction": int(out["prediction"]),
         "proba": float(out["proba"]),

@@ -1484,8 +1484,12 @@ def incremental_dedup_pairs(index: DataFrame, new_sigs: DataFrame) -> DataFrame:
     )
 
 
+# part table -> bucket keys of the persisted dedup index
+_INDEX_PARTS = {"sig": ["doc_id"], "band": ["band", "bkey"]}
+
+
 def persist_dedup_index(
-    docs: DataFrame, prefix: str = "dedup_idx", n_buckets: int = 8
+    docs: DataFrame, prefix: str = "dedup_idx"
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize the corpus dedup index as the two BUCKETED tables
     the daily-ingest probe reads (the layout the incremental-path
@@ -1501,12 +1505,11 @@ def persist_dedup_index(
     from ..storage import write_bucketed
 
     sig = signature_index(docs)
-    sig_t = write_bucketed(sig, f"{prefix}_sig", ["doc_id"], n_buckets)
+    sig_t = write_bucketed(sig, f"{prefix}_sig", _INDEX_PARTS["sig"])
     band_t = write_bucketed(
         _band_table(sig).select("band", "bkey", "doc_id"),
         f"{prefix}_band",
-        ["band", "bkey"],
-        n_buckets,
+        _INDEX_PARTS["band"],
     )
     return sig_t, band_t
 
@@ -1568,96 +1571,43 @@ def tombstone_dedup_index(
     spark: SparkSession, removed_ids: DataFrame, prefix: str = "dedup_idx"
 ) -> int:
     """Record removed/changed doc_ids against the persisted dedup
-    index WITHOUT rewriting it (the day-2 removal path the round-10
-    verdict ordered; reference parallel: the reference's own
-    drop-after-day-boundary retention delete, Data_quality_checks.py,
-    generalized to the corpus index). Appends the ids to the
-    ``{prefix}_tomb`` side table; ``live_dedup_index`` filters them at
-    probe time and ``compact_dedup_index`` folds them into a rewrite.
-    Idempotent per id (duplicates collapse at read time). Returns the
-    number of NEW tombstones recorded.
+    index WITHOUT rewriting it (the day-2 removal path; reference
+    parallel: the reference's own drop-after-day-boundary retention
+    delete, Data_quality_checks.py, generalized to the corpus index):
+    ``storage.tombstone_ids`` into ``{prefix}_tomb``; ``live_dedup_index``
+    filters them at probe time and ``compact_dedup_index`` folds them
+    into a rewrite. Returns the number of NEW tombstones recorded.
 
     Removal never creates dedup pairs -- a verified pair is decided
     by its two endpoints alone -- so tombstoning only ever DELETES
-    index rows/edges; that is why an O(removed)-row side table plus
-    an anti-join is exact, with no re-pricing of the corpus."""
-    tomb = f"{prefix}_tomb"
-    ids = removed_ids.select("doc_id").distinct()
-    if spark.catalog.tableExists(tomb):
-        ids = ids.join(spark.table(tomb), "doc_id", "left_anti")
-        ids = ids.localCheckpoint()  # pin: read the table once, pre-append
-        n_new = ids.count()
-        if n_new:
-            ids.write.mode("append").format("parquet").saveAsTable(tomb)
-        return n_new
-    n_new = ids.count()
-    ids.write.format("parquet").saveAsTable(tomb)
-    return n_new
+    index rows/edges; that is why the side table is exact, with no
+    re-pricing of the corpus."""
+    from ..storage import tombstone_ids
+
+    return tombstone_ids(spark, removed_ids, prefix, "doc_id")
 
 
 def live_dedup_index(
     spark: SparkSession, prefix: str = "dedup_idx"
 ) -> tuple[DataFrame, DataFrame]:
     """The persisted dedup index MINUS its tombstones: (signature
-    table, band table) views for the probe path. The anti-join's
-    build side is the O(removed)-row tombstone table (AQE broadcasts
-    it at size), so the index side still scans bucketed with zero
-    exchange -- the persist_dedup_index property the plan tests pin
-    -- and a shard probe against a tombstoned index costs the shard
-    plus the tombstone count, never the corpus."""
-    tomb = f"{prefix}_tomb"
-    sig_t = spark.table(f"{prefix}_sig")
-    band_t = spark.table(f"{prefix}_band")
-    if spark.catalog.tableExists(tomb):
-        dead = spark.table(tomb).select("doc_id").distinct()
-        sig_t = sig_t.join(dead, "doc_id", "left_anti")
-        band_t = band_t.join(dead, "doc_id", "left_anti")
-    return sig_t, band_t
+    table, band table) views for the probe path (``storage.live_index``),
+    still scanned bucketed with zero exchange -- the
+    persist_dedup_index property the plan tests pin."""
+    from ..storage import live_index
+
+    return live_index(spark, prefix, _INDEX_PARTS, "doc_id")
 
 
-def compact_dedup_index(
-    spark: SparkSession, prefix: str = "dedup_idx", n_buckets: int = 8
-) -> dict:
-    """Fold the tombstones into the persisted index: rewrite the
-    signature and band tables without the tombstoned doc_ids, drop
-    the tombstone table, and return the exact funnel (rows before /
-    tombstoned / after per table). Run it when the tombstone side
-    table has grown enough that probe-time anti-joins cost more than
-    one rewrite -- the classic LSM compaction trade. The rewrite
-    stages live rows to a scratch parquet dir first (the bucketed
-    rewrite cannot read the table it is overwriting), then re-buckets
-    with the SAME keys/bucket count, so probe plans keep their
-    zero-index-side-exchange shape."""
-    import shutil
-    import tempfile
+def compact_dedup_index(spark: SparkSession, prefix: str = "dedup_idx") -> dict:
+    """Fold the tombstones into the persisted index
+    (``storage.compact_index``): rewrite the signature and band tables
+    without the tombstoned doc_ids, drop the tombstone table, and
+    return the exact funnel (rows before / after / dropped per table,
+    n_tombstones)."""
+    from ..storage import compact_index
 
-    from ..storage import write_bucketed
-
-    tomb = f"{prefix}_tomb"
-    funnel: dict = {"prefix": prefix}
-    dead = (
-        spark.table(tomb).select("doc_id").distinct()
-        if spark.catalog.tableExists(tomb)
-        else None
-    )
-    scratch = tempfile.mkdtemp(prefix="dedup_idx_compact_")
-    try:
-        for part, keys in (("sig", ["doc_id"]), ("band", ["band", "bkey"])):
-            t = spark.table(f"{prefix}_{part}")
-            n_before = t.count()
-            live = t.join(dead, "doc_id", "left_anti") if dead is not None else t
-            live.write.parquet(f"{scratch}/{part}")
-            staged = spark.read.parquet(f"{scratch}/{part}")
-            write_bucketed(staged, f"{prefix}_{part}", keys, n_buckets)
-            n_after = spark.table(f"{prefix}_{part}").count()
-            funnel[f"{part}_rows_before"] = n_before
-            funnel[f"{part}_rows_after"] = n_after
-            funnel[f"{part}_rows_dropped"] = n_before - n_after
-        funnel["n_tombstones"] = dead.count() if dead is not None else 0
-        spark.sql(f"DROP TABLE IF EXISTS {tomb}")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return funnel
+    return compact_index(spark, prefix, _INDEX_PARTS, "doc_id")
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

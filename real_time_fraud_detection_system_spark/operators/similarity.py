@@ -1052,9 +1052,12 @@ def ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return buckets.orderBy("occupancy_bucket")
 
 
+# part table -> bucket keys of the persisted IVF index
+_INDEX_PARTS = {"members": ["c_id"]}
+
+
 def persist_ann_index(
-    spark: SparkSession, sf_dir: str, prefix: str = "ann_idx",
-    n_buckets: int = 8,
+    spark: SparkSession, sf_dir: str, prefix: str = "ann_idx"
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize the IVF index for repeated searches: a small
     centroid table (K ~ sqrt(n) rows -- plain parquet) and the member
@@ -1084,7 +1087,7 @@ def persist_ann_index(
         F.explode(cells(F.col("emb"))).alias("c_id"),
     )
     members_t = write_bucketed(
-        members, f"{prefix}_members", ["c_id"], n_buckets
+        members, f"{prefix}_members", _INDEX_PARTS["members"]
     )
     return spark.table(f"{prefix}_cents"), members_t
 
@@ -1095,81 +1098,42 @@ def tombstone_ann_index(
     """Record removed vec_ids against the persisted IVF index WITHOUT
     rewriting it -- the ANN twin of dedup.tombstone_dedup_index (a
     takedown that deletes a doc must delete its vector too, or
-    retrieval keeps surfacing dead content). Appends to the
-    ``{prefix}_tomb`` side table, anti-join-gated per id (idempotent);
-    ``live_ann_members`` filters at search time,
-    ``compact_ann_index`` folds into a rewrite. Centroids stay fixed
-    (the ann_index_sink_writer discipline: re-train offline when
-    ivf_cell_stats says balance drifted), so removal cannot move any
-    surviving vector's cell -- which is why the side table is exact."""
-    tomb = f"{prefix}_tomb"
-    ids = removed_ids.selectExpr("vec_id AS m_id").distinct()
-    if spark.catalog.tableExists(tomb):
-        ids = ids.join(spark.table(tomb), "m_id", "left_anti")
-        ids = ids.localCheckpoint()  # pin: read the table once, pre-append
-        n_new = ids.count()
-        if n_new:
-            ids.write.mode("append").format("parquet").saveAsTable(tomb)
-        return n_new
-    n_new = ids.count()
-    ids.write.format("parquet").saveAsTable(tomb)
-    return n_new
+    retrieval keeps surfacing dead content): ``storage.tombstone_ids``
+    as m_ids into ``{prefix}_tomb``; ``live_ann_members`` filters at
+    search time, ``compact_ann_index`` folds into a rewrite.
+    Centroids stay fixed (the ann_index_sink_writer discipline:
+    re-train offline when ivf_cell_stats says balance drifted), so
+    removal cannot move any surviving vector's cell -- which is why
+    the side table is exact."""
+    from ..storage import tombstone_ids
+
+    return tombstone_ids(
+        spark, removed_ids.selectExpr("vec_id AS m_id"), prefix, "m_id"
+    )
 
 
 def live_ann_members(
     spark: SparkSession, prefix: str = "ann_idx"
 ) -> DataFrame:
-    """The persisted member table MINUS its tombstones: the frame to
-    hand ann_search. The anti-join's build side is the O(removed)-row
-    tombstone table (AQE broadcasts it at size), so the member side
-    still scans its c_id buckets with zero exchange and a search
+    """The persisted member table MINUS its tombstones
+    (``storage.live_index``): the frame to hand ann_search. The member
+    side still scans its c_id buckets with zero exchange, so a search
     costs NPROBE cells plus the tombstone count, never the corpus."""
-    members = spark.table(f"{prefix}_members")
-    tomb = f"{prefix}_tomb"
-    if spark.catalog.tableExists(tomb):
-        members = members.join(spark.table(tomb), "m_id", "left_anti")
-    return members
+    from ..storage import live_index
+
+    return live_index(spark, prefix, _INDEX_PARTS, "m_id")[0]
 
 
-def compact_ann_index(
-    spark: SparkSession, prefix: str = "ann_idx", n_buckets: int = 8
-) -> dict:
-    """Fold the tombstones into the member table: rewrite without the
-    tombstoned m_ids (same c_id clustering, so search plans keep their
-    bucketed-scan shape), drop the tombstone table, return the exact
-    row funnel. Centroids are untouched -- compaction removes rows, it
-    never re-trains."""
-    import shutil
-    import tempfile
+def compact_ann_index(spark: SparkSession, prefix: str = "ann_idx") -> dict:
+    """Fold the tombstones into the member table
+    (``storage.compact_index``): rewrite without the tombstoned m_ids
+    (same c_id clustering, so search plans keep their bucketed-scan
+    shape), drop the tombstone table, return the exact row funnel.
+    Centroids are untouched -- compaction removes rows, it never
+    re-trains."""
+    from ..storage import compact_index
 
-    from ..storage import write_bucketed
-
-    tomb = f"{prefix}_tomb"
-    dead = (
-        spark.table(tomb).select("m_id").distinct()
-        if spark.catalog.tableExists(tomb)
-        else None
-    )
-    t = spark.table(f"{prefix}_members")
-    n_before = t.count()
-    live = t.join(dead, "m_id", "left_anti") if dead is not None else t
-    scratch = tempfile.mkdtemp(prefix="ann_idx_compact_")
-    try:
-        live.write.parquet(f"{scratch}/members")
-        staged = spark.read.parquet(f"{scratch}/members")
-        write_bucketed(staged, f"{prefix}_members", ["c_id"], n_buckets)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    n_after = spark.table(f"{prefix}_members").count()
-    n_tomb = dead.count() if dead is not None else 0
-    spark.sql(f"DROP TABLE IF EXISTS {tomb}")
-    return {
-        "prefix": prefix,
-        "members_rows_before": n_before,
-        "members_rows_after": n_after,
-        "members_rows_dropped": n_before - n_after,
-        "n_tombstones": n_tomb,
-    }
+    return compact_index(spark, prefix, _INDEX_PARTS, "m_id")
 
 
 def ann_search(

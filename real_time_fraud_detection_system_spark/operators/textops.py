@@ -1539,8 +1539,12 @@ FROM d_agg, p_agg, t_agg
 """
 
 
+# part table -> bucket keys of the persisted lexical index
+_INDEX_PARTS = {"post": ["t"], "doc": ["doc_id"]}
+
+
 def persist_text_index(
-    docs: DataFrame, prefix: str = "text_idx", n_buckets: int = 8
+    docs: DataFrame, prefix: str = "text_idx"
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize the corpus lexical index as the catalog tables the
     repeated-audit probe reads -- the retrieval twin of
@@ -1564,13 +1568,12 @@ def persist_text_index(
 
     spark = docs.sparkSession
     post_t = write_bucketed(
-        build_postings(docs), f"{prefix}_post", ["t"], n_buckets
+        build_postings(docs), f"{prefix}_post", _INDEX_PARTS["post"]
     )
     doc_t = write_bucketed(
         docs.selectExpr("doc_id", f"size({_TOKS}) AS dl"),
         f"{prefix}_doc",
-        ["doc_id"],
-        n_buckets,
+        _INDEX_PARTS["doc"],
     )
     spark.sql(f"DROP TABLE IF EXISTS {prefix}_stats")
     build_text_stats(docs).write.format("parquet").saveAsTable(
@@ -1584,44 +1587,29 @@ def tombstone_text_index(
 ) -> int:
     """Record removed/changed doc_ids against the persisted postings
     WITHOUT rewriting them -- the lexical twin of
-    dedup.tombstone_dedup_index. Appends to ``{prefix}_tomb``,
-    anti-join-gated per id (idempotent); ``bm25_search`` filters at
-    probe time via live_text_index and subtracts the dead docs' exact
-    (count, token) mass from the stats; ``compact_text_index`` folds
-    into a rewrite. A doc's removal only DELETES its posting rows and
-    its stats contribution -- no other doc's tf/dl changes -- which
-    is why an O(removed)-row side table is exact."""
-    tomb = f"{prefix}_tomb"
-    ids = removed_ids.select("doc_id").distinct()
-    if spark.catalog.tableExists(tomb):
-        ids = ids.join(spark.table(tomb), "doc_id", "left_anti")
-        ids = ids.localCheckpoint()  # pin: read the table once, pre-append
-        n_new = ids.count()
-        if n_new:
-            ids.write.mode("append").format("parquet").saveAsTable(tomb)
-        return n_new
-    n_new = ids.count()
-    ids.write.format("parquet").saveAsTable(tomb)
-    return n_new
+    dedup.tombstone_dedup_index: ``storage.tombstone_ids`` into
+    ``{prefix}_tomb``; ``bm25_search`` filters at probe time via
+    live_text_index and subtracts the dead docs' exact (count, token)
+    mass from the stats; ``compact_text_index`` folds into a rewrite.
+    A doc's removal only DELETES its posting rows and its stats
+    contribution -- no other doc's tf/dl changes -- which is why an
+    O(removed)-row side table is exact."""
+    from ..storage import tombstone_ids
+
+    return tombstone_ids(spark, removed_ids, prefix, "doc_id")
 
 
 def live_text_index(
     spark: SparkSession, prefix: str = "text_idx"
 ) -> tuple[DataFrame, DataFrame]:
     """The persisted lexical index MINUS its tombstones: (postings,
-    doc table) views for the probe path. The anti-join's build side
-    is the O(removed)-row tombstone table (AQE broadcasts it at
-    size), so the postings side still scans its t-buckets with zero
-    exchange and a probe costs the matching postings plus the
-    tombstone count, never the corpus."""
-    tomb = f"{prefix}_tomb"
-    post_t = spark.table(f"{prefix}_post")
-    doc_t = spark.table(f"{prefix}_doc")
-    if spark.catalog.tableExists(tomb):
-        dead = spark.table(tomb).select("doc_id").distinct()
-        post_t = post_t.join(dead, "doc_id", "left_anti")
-        doc_t = doc_t.join(dead, "doc_id", "left_anti")
-    return post_t, doc_t
+    doc table) views for the probe path (``storage.live_index``); the
+    postings still scan their t-buckets with zero exchange, so a
+    probe costs the matching postings plus the tombstone count, never
+    the corpus."""
+    from ..storage import live_index
+
+    return live_index(spark, prefix, _INDEX_PARTS, "doc_id")
 
 
 def _live_text_stats(spark: SparkSession, prefix: str) -> DataFrame:
@@ -1675,73 +1663,26 @@ def bm25_search(
     return _bm25_rank(tf, stats, k)
 
 
-def catalog_num_buckets(spark: SparkSession, table: str) -> int:
-    """The bucket count a persisted table was written with, from the
-    catalog -- the append/compact legs must preserve it (a hard-coded
-    count would silently re-bucket an index persisted with a
-    non-default n_buckets and change every probe plan built on it)."""
-    return next(
-        int(r["data_type"])
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-        if r["col_name"] == "Num Buckets"
-    )
+def compact_text_index(spark: SparkSession, prefix: str = "text_idx") -> dict:
+    """Fold the tombstones into the persisted lexical index
+    (``storage.compact_index``): rewrite postings and doc table
+    without the tombstoned doc_ids, consolidate the stats append-log
+    to ONE live row, drop the tombstone table, and return the exact
+    row funnel. The live stats are priced before the rewrite (the dead
+    docs' dl lives in the doc table) and written after it, before the
+    tombstone table is dropped."""
+    from ..storage import compact_index
 
-
-def compact_text_index(
-    spark: SparkSession, prefix: str = "text_idx",
-    n_buckets: int | None = None,
-) -> dict:
-    """Fold the tombstones into the persisted lexical index: rewrite
-    postings and doc table without the tombstoned doc_ids (same
-    bucketing keys, and the SAME bucket count -- read per part from
-    the catalog unless explicitly overridden -- so probe plans keep
-    their zero-exchange shape), consolidate the stats append-log to
-    ONE live row, drop the tombstone table, and return the exact row
-    funnel -- the dedup/ANN compaction discipline applied to
-    retrieval."""
-    import shutil
-    import tempfile
-
-    from ..storage import write_bucketed
-
-    tomb = f"{prefix}_tomb"
-    funnel: dict = {"prefix": prefix}
-    dead = (
-        spark.table(tomb).select("doc_id").distinct()
-        if spark.catalog.tableExists(tomb)
-        else None
-    )
     live_stats = _live_text_stats(spark, prefix).collect()[0]
-    scratch = tempfile.mkdtemp(prefix="text_idx_compact_")
-    try:
-        for part, keys in (("post", ["t"]), ("doc", ["doc_id"])):
-            nb = n_buckets or catalog_num_buckets(
-                spark, f"{prefix}_{part}"
-            )
-            t = spark.table(f"{prefix}_{part}")
-            n_before = t.count()
-            live = (
-                t.join(dead, "doc_id", "left_anti")
-                if dead is not None
-                else t
-            )
-            live.write.parquet(f"{scratch}/{part}")
-            staged = spark.read.parquet(f"{scratch}/{part}")
-            write_bucketed(staged, f"{prefix}_{part}", keys, nb)
-            n_after = spark.table(f"{prefix}_{part}").count()
-            funnel[f"{part}_rows_before"] = n_before
-            funnel[f"{part}_rows_after"] = n_after
-            funnel[f"{part}_rows_dropped"] = n_before - n_after
+
+    def write_stats() -> None:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_stats")
         spark.createDataFrame(
             [(live_stats["n_docs"], live_stats["sum_dl"])],
             "n_docs bigint, sum_dl bigint",
         ).write.format("parquet").saveAsTable(f"{prefix}_stats")
-        funnel["n_tombstones"] = dead.count() if dead is not None else 0
-        spark.sql(f"DROP TABLE IF EXISTS {tomb}")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return funnel
+
+    return compact_index(spark, prefix, _INDEX_PARTS, "doc_id", write_stats)
 
 
 QUERIES = {

@@ -11,6 +11,10 @@ no Exchange on either side -- the property that survives any scale-up.
 Date-partitioned + bucketed is the canonical prediction-store layout:
 partition pruning serves the time filters (SURVEY.md P12/P13), buckets
 serve the key joins.
+
+The three persisted index families (dedup, ANN, text) share one
+layout (INDEX_BUCKETS buckets, sorted on the bucket keys) and one
+tombstone lifecycle: tombstone_ids, live_index, compact_index.
 """
 
 from __future__ import annotations
@@ -21,17 +25,27 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: list[str],
-    n_buckets: int = 8,
-    sort: bool = True,
-) -> DataFrame:
-    """Persist df hash-clustered (and optionally sorted) by keys into
-    n_buckets bucket files; returns the catalog-backed table. Joins and
-    aggregations keyed on `keys` against tables bucketed with the SAME
-    bucket count skip their shuffle (and sort, if sorted)."""
+INDEX_BUCKETS = 8  # bucket count of every persisted index table
+
+
+def append_bucketed(df: DataFrame, table: str, keys: list[str]) -> None:
+    """Append df to a catalog table hash-clustered and sorted by keys
+    into INDEX_BUCKETS bucket files (creating the table if absent).
+    Each append adds bucket files and never rewrites existing ones, so
+    joins and aggregations keyed on ``keys`` keep skipping their
+    shuffle (and sort) across appends."""
+    (
+        df.write.mode("append")
+        .format("parquet")
+        .bucketBy(INDEX_BUCKETS, *keys)
+        .sortBy(*keys)
+        .saveAsTable(table)
+    )
+
+
+def write_bucketed(df: DataFrame, table: str, keys: list[str]) -> DataFrame:
+    """Replace ``table`` with df in the append_bucketed layout; returns
+    the catalog-backed table."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     # the in-memory catalog forgets tables across sessions but their
@@ -40,14 +54,97 @@ def write_bucketed(
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
-
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, *keys
-    )
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(table)
+    append_bucketed(df, table, keys)
     return spark.table(table)
+
+
+# --------------------------------------------------------------------------
+# The tombstone lifecycle of the persisted index families (dedup, ANN,
+# text). An index ``prefix`` owns bucketed part tables
+# ``{prefix}_{part}``, each carrying the family's id column, and one
+# ``{prefix}_tomb`` side table of removed ids. Removal only deletes
+# rows -- no surviving row depends on a removed one -- so an
+# O(removed)-row side table plus a probe-time anti-join is exact, and
+# compaction (the LSM trade) folds it into one rewrite when the
+# anti-join costs more than the rewrite.
+
+
+def tombstone_ids(
+    spark: SparkSession, ids: DataFrame, prefix: str, id_col: str
+) -> int:
+    """Record ``ids[id_col]`` in ``{prefix}_tomb`` without touching the
+    index. Anti-join-gated per id, so re-applying the same ids records
+    nothing; the new ids are pinned before the append, so the gate
+    reads the table once. Returns the number of NEW tombstones."""
+    tomb = f"{prefix}_tomb"
+    ids = ids.select(id_col).distinct()
+    if spark.catalog.tableExists(tomb):
+        ids = ids.join(spark.table(tomb), id_col, "left_anti")
+    ids = ids.localCheckpoint()  # pin: read the table once, pre-append
+    n_new = ids.count()
+    if n_new:
+        ids.write.mode("append").format("parquet").saveAsTable(tomb)
+    return n_new
+
+
+def live_index(
+    spark: SparkSession, prefix: str, parts, id_col: str
+) -> tuple[DataFrame, ...]:
+    """The part tables of ``prefix`` minus their tombstoned ids, in
+    ``parts`` order. The anti-join's build side is the O(removed)-row
+    tombstone table (AQE broadcasts it at size), so each part still
+    scans its buckets with zero exchange and a probe costs the probe
+    plus the tombstone count, never the index."""
+    tables = tuple(spark.table(f"{prefix}_{part}") for part in parts)
+    tomb = f"{prefix}_tomb"
+    if not spark.catalog.tableExists(tomb):
+        return tables
+    dead = spark.table(tomb).select(id_col).distinct()
+    return tuple(t.join(dead, id_col, "left_anti") for t in tables)
+
+
+def compact_index(
+    spark: SparkSession,
+    prefix: str,
+    parts: dict[str, list[str]],
+    id_col: str,
+    before_drop=None,
+) -> dict:
+    """Fold the tombstones into the index: rewrite each part table
+    ``{prefix}_{part}`` as its live_index view, re-bucketed on its
+    ``parts[part]`` keys, so probe plans keep their zero-exchange
+    shape. The live rows are staged in a scratch parquet dir first
+    (the bucketed rewrite cannot read the table it overwrites).
+    ``before_drop()``, if given, runs after the rewrite and before the
+    tombstone table is dropped. Returns the exact row funnel:
+    ``prefix``, ``{part}_rows_before`` / ``_after`` / ``_dropped`` and
+    ``n_tombstones``."""
+    import tempfile
+
+    funnel: dict = {"prefix": prefix}
+    tomb = f"{prefix}_tomb"
+    funnel["n_tombstones"] = (
+        spark.table(tomb).select(id_col).distinct().count()
+        if spark.catalog.tableExists(tomb)
+        else 0
+    )
+    lives = live_index(spark, prefix, parts, id_col)
+    scratch = tempfile.mkdtemp(prefix=f"{prefix}_compact_")
+    try:
+        for (part, keys), live in zip(parts.items(), lives):
+            n_before = spark.table(f"{prefix}_{part}").count()
+            live.write.parquet(f"{scratch}/{part}")
+            staged = spark.read.parquet(f"{scratch}/{part}")
+            n_after = write_bucketed(staged, f"{prefix}_{part}", keys).count()
+            funnel[f"{part}_rows_before"] = n_before
+            funnel[f"{part}_rows_after"] = n_after
+            funnel[f"{part}_rows_dropped"] = n_before - n_after
+        if before_drop is not None:
+            before_drop()
+        spark.sql(f"DROP TABLE IF EXISTS {tomb}")
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    return funnel
 
 
 class CompactionError(RuntimeError):
@@ -244,23 +341,6 @@ def _compact_locked(
         .parquet(store_dir)
     )
     return {"files_before": before, "files_after": n_files(), "rows": n_rows}
-
-
-def bucketed_orders_lineitem(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 8
-) -> tuple[DataFrame, DataFrame]:
-    """Bucketed copies of orders and lineitem clustered on the join key."""
-    from .catalog import load_table
-
-    orders = write_bucketed(
-        load_table(spark, sf_dir, "orders"), "orders_b", ["o_orderkey"],
-        n_buckets,
-    )
-    lineitem = write_bucketed(
-        load_table(spark, sf_dir, "lineitem"), "lineitem_b", ["l_orderkey"],
-        n_buckets,
-    )
-    return orders, lineitem
 
 
 # --------------------------------------------------------------------------

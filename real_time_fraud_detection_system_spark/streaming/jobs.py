@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..storage import STORE_PARTITION_COL, commit_epoch
+from ..storage import STORE_PARTITION_COL, append_bucketed, commit_epoch
 
 
 def daily_metrics_frame(predictions: DataFrame, days_filter=None) -> DataFrame:
@@ -345,9 +345,7 @@ def retention_sweep(
     return {"deleted": deleted, "kept": len(days) - len(deleted)}
 
 
-def ann_index_sink_writer(
-    cents_table: str, members_table: str, n_buckets: int = 8
-):
+def ann_index_sink_writer(cents_table: str, members_table: str):
     """foreachBatch hook over an (vec_id, embedding) stream: each
     arriving micro-batch assigns its vectors to the PERSISTED
     centroids (the persist_ann_index set -- centroids stay fixed as
@@ -358,9 +356,9 @@ def ann_index_sink_writer(
 
     Replay-idempotent the dedup_index_sink_writer way: members enter
     through a left-anti join on m_id pinned BEFORE the append, so an
-    at-least-once redelivery contributes zero rows. The append uses
-    the same bucketBy spec as persist_ann_index -- each batch adds new
-    bucket files, it never rewrites existing ones.
+    at-least-once redelivery contributes zero rows. The append is
+    ``storage.append_bucketed`` on persist_ann_index's c_id key -- each
+    batch adds new bucket files, it never rewrites existing ones.
 
     Visibility: a DIFFERENT SparkSession that already read the members
     table caches its file listing and will not see appended batches
@@ -371,6 +369,7 @@ def ann_index_sink_writer(
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from ..operators.similarity import (
             _DOT,
+            _INDEX_PARTS,
             _nearest_cells_udf,
         )
 
@@ -398,13 +397,7 @@ def ann_index_sink_writer(
         ).localCheckpoint()  # pin: read the table once, pre-append
         if fresh.isEmpty():
             return  # full replay: every vector already indexed
-        (
-            fresh.write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "c_id")
-            .sortBy("c_id")
-            .saveAsTable(members_table)
-        )
+        append_bucketed(fresh, members_table, _INDEX_PARTS["members"])
 
     return write_batch
 
@@ -552,20 +545,16 @@ def text_index_sink_writer(prefix: str = "text_idx"):
     the doc is genuinely absent and re-indexes with its new content.
     Replays stay no-ops: a re-delivered epoch's docs are live members
     by then, not tombstoned, so no compaction re-triggers. Empty
-    batches no-op. Appends
-    write through saveAsTable with the SAME bucket spec -- the count
-    is read from the existing table's catalog metadata, so an index
-    persisted with a non-default n_buckets keeps its layout (a
-    hard-coded count would fail the append loudly on spec mismatch)
-    -- so the probe plans keep their bucket-pruned shape across
-    appends."""
+    batches no-op. Appends go through ``storage.append_bucketed`` on
+    the persisted keys, so the probe plans keep their bucket-pruned
+    shape across appends."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from ..operators.textops import (
+            _INDEX_PARTS,
             _TOKS,
             build_postings,
             build_text_stats,
-            catalog_num_buckets,
         )
 
         spark = batch_df.sparkSession
@@ -595,25 +584,16 @@ def text_index_sink_writer(prefix: str = "text_idx"):
         ).localCheckpoint()  # pin: read the doc table ONCE, pre-append
         if fresh.isEmpty():
             return  # full replay: everything already indexed
-        n_buckets = catalog_num_buckets(spark, f"{prefix}_post")
-        (
-            build_postings(fresh)
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "t")
-            .sortBy("t")
-            .saveAsTable(f"{prefix}_post")
+        append_bucketed(
+            build_postings(fresh), f"{prefix}_post", _INDEX_PARTS["post"]
         )
-        (
+        append_bucketed(
             # dl MUST come from the same tokenizer the postings use --
             # a hand-copied split() here would silently drift from
             # build_postings if the tokenizer ever changes
-            fresh.selectExpr("doc_id", f"size({_TOKS}) AS dl")
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "doc_id")
-            .sortBy("doc_id")
-            .saveAsTable(f"{prefix}_doc")
+            fresh.selectExpr("doc_id", f"size({_TOKS}) AS dl"),
+            f"{prefix}_doc",
+            _INDEX_PARTS["doc"],
         )
         (
             build_text_stats(fresh)

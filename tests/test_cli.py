@@ -100,32 +100,70 @@ def test_cli_daily_metrics_upsert(spark, sf_dir, tmp_path):
 
 def test_cli_index_lifecycle(spark, sf_dir):
     """Build-then-probe both persisted indexes through the CLI: the
-    build reports non-trivial sizes and the probe/search prints rows
-    shaped like the library calls' output."""
+    build reports non-trivial sizes, the probe/search prints rows
+    shaped like the library calls' output, and an id tombstoned
+    through the library is gone from the next probe/search."""
+    from real_time_fraud_detection_system_spark.operators.dedup import (
+        tombstone_dedup_index,
+    )
+    from real_time_fraud_detection_system_spark.operators.similarity import (
+        tombstone_ann_index,
+    )
+
     try:
         code, lines = _run(["--sf-dir", sf_dir, "ann-index", "build",
                             "--prefix", "t_cli_ann"])
         assert code == 0
         info = json.loads(lines[0])
         assert info["status"] == "ok" and info["members"] > 0
-        code, lines = _run(["--sf-dir", sf_dir, "ann-index", "search",
-                            "--prefix", "t_cli_ann"])
+        search = ["--sf-dir", sf_dir, "ann-index", "search",
+                  "--prefix", "t_cli_ann"]
+        code, lines = _run(search)
         assert code == 0
         assert {"q_id", "neighbor_id", "cosine", "rank"} <= set(
             json.loads(lines[0])
         )
+        dead = json.loads(lines[0])["neighbor_id"]
+        tombstone_ann_index(
+            spark, spark.createDataFrame([(dead,)], "vec_id bigint"),
+            prefix="t_cli_ann",
+        )
+        code, lines = _run(search)
+        assert code == 0
+        assert dead not in {json.loads(x)["neighbor_id"] for x in lines}
 
         code, lines = _run(["--sf-dir", sf_dir, "dedup-index", "build",
                             "--prefix", "t_cli_dd"])
         assert code == 0
         assert json.loads(lines[0])["signatures"] > 0
-        code, lines = _run(["--sf-dir", sf_dir, "dedup-index", "probe",
-                            "--prefix", "t_cli_dd"])
+        probe = ["--sf-dir", sf_dir, "dedup-index", "probe",
+                 "--prefix", "t_cli_dd"]
+        code, lines = _run(probe)
         assert code == 0
         assert {"a_id", "b_id", "jaccard"} <= set(json.loads(lines[0]))
+        # a printed endpoint that lives in the index (not in the shard)
+        indexed = {
+            r["doc_id"]
+            for r in spark.table("t_cli_dd_sig").select("doc_id").collect()
+        }
+        dead = next(
+            i for x in lines for i in (json.loads(x)["a_id"],
+                                       json.loads(x)["b_id"])
+            if i in indexed
+        )
+        tombstone_dedup_index(
+            spark, spark.createDataFrame([(dead,)], "doc_id bigint"),
+            prefix="t_cli_dd",
+        )
+        code, lines = _run(probe)
+        assert code == 0
+        assert all(
+            dead not in (json.loads(x)["a_id"], json.loads(x)["b_id"])
+            for x in lines
+        )
     finally:
-        for t in ("t_cli_ann_cents", "t_cli_ann_members",
-                  "t_cli_dd_sig", "t_cli_dd_band"):
+        for t in ("t_cli_ann_cents", "t_cli_ann_members", "t_cli_ann_tomb",
+                  "t_cli_dd_sig", "t_cli_dd_band", "t_cli_dd_tomb"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 

@@ -22,6 +22,16 @@ from real_time_fraud_detection_system_spark.ml.training import (
 from real_time_fraud_detection_system_spark.sources.generators import (
     training_frame,
 )
+from real_time_fraud_detection_system_spark.streaming.pipeline import (
+    parse_transactions,
+)
+
+
+def _parsed(spark, *payloads):
+    """The wire parse of JSON payloads: what score() sees on the stream."""
+    return parse_transactions(
+        spark.createDataFrame([(json.dumps(p),) for p in payloads], "value string")
+    )
 
 
 @pytest.fixture(scope="module")
@@ -57,12 +67,12 @@ def test_versioning_increments(spark, registry):
 def test_model_scoring_end_to_end(spark, registry):
     reg, _ = registry
     model, version = load_production(spark, reg)
-    df = spark.createDataFrame(
-        [
-            ("t1", 5.0, {"num_items": 1.0, "merchant_risk": 0.01, "hour": 12.0}),
-            ("t2", 9000.0, {"num_items": 9.0, "merchant_risk": 0.99, "hour": 2.0}),
-        ],
-        "transaction_id string, amount double, features map<string,double>",
+    df = _parsed(
+        spark,
+        {"transaction_id": "t1", "amount": 5.0,
+         "features": {"num_items": 1, "merchant_risk": 0.01, "hour": 12.0}},
+        {"transaction_id": "t2", "amount": 9000.0,
+         "features": {"num_items": 9, "merchant_risk": 0.99, "hour": 2.0}},
     )
     rows = {r["transaction_id"]: r for r in score(df, model, version).collect()}
     assert 0.0 <= rows["t1"]["proba"] <= 1.0
@@ -74,9 +84,10 @@ def test_model_scoring_end_to_end(spark, registry):
 
 def test_heuristic_fallback_no_model(spark):
     # P7: amount > 1000 -> 1.0 else 0.05 (main.py:100-104)
-    df = spark.createDataFrame(
-        [("a", 1500.0, None), ("b", 10.0, None)],
-        "transaction_id string, amount double, features map<string,double>",
+    df = _parsed(
+        spark,
+        {"transaction_id": "a", "amount": 1500.0},
+        {"transaction_id": "b", "amount": 10.0},
     )
     rows = {r["transaction_id"]: r for r in score(df, None).collect()}
     assert rows["a"]["proba"] == 1.0 and rows["a"]["prediction"] == 1
@@ -86,9 +97,10 @@ def test_heuristic_fallback_no_model(spark):
 
 def test_feature_defaults_and_extras(spark):
     # P3: missing keys -> 0.0; unknown keys ignored (main.py:64,107)
-    df = spark.createDataFrame(
-        [("x", None, {"merchant_risk": 0.5, "bogus_key": 9.9})],
-        "transaction_id string, amount double, features map<string,double>",
+    df = _parsed(
+        spark,
+        {"transaction_id": "x", "amount": None,
+         "features": {"merchant_risk": 0.5, "bogus_key": 9.9}},
     )
     from real_time_fraud_detection_system_spark.ml.scoring import (
         project_features,
@@ -112,36 +124,43 @@ def test_score_one_request_response(spark, registry):
             "amount": 42.0,
             "features": {"num_items": 2, "merchant_risk": 0.6, "hour": 14.0},
         },
+        version,
     )
     assert set(out) == {"prediction", "proba", "model_version"}
     assert out["prediction"] in (0, 1)
+    assert out["model_version"] == version
 
 
 _MISSING = object()
 
 
 @pytest.mark.parametrize(
-    "amount", [_MISSING, None, "abc", "12.5", 2000.0, True],
-    ids=["missing", "none", "abc", "numeric-string", "number", "bool"],
+    "amount, features",
+    [
+        pytest.param(_MISSING, {}, id="missing"),
+        pytest.param(None, {}, id="none"),
+        pytest.param("abc", {}, id="abc"),
+        pytest.param("12.5", {}, id="numeric-string"),
+        pytest.param(2000.0, {}, id="number"),
+        pytest.param(True, {}, id="bool"),
+        pytest.param(2000.0, {"merchant_risk": True}, id="feature-bool"),
+        pytest.param(2000.0, {"num_items": 2.7}, id="feature-float-int"),
+        pytest.param(2000.0, {"num_items": "3"}, id="feature-numeric-string"),
+    ],
 )
-def test_score_one_coerces_amount_like_score(spark, registry, amount):
-    # P5: whatever the amount is, a request scores exactly like the same
-    # payload arriving on the wire and scored by score()
-    from real_time_fraud_detection_system_spark.streaming.pipeline import (
-        parse_transactions,
-    )
-
+def test_score_one_coerces_amount_like_score(spark, registry, amount, features):
+    # P5: whatever the amount and features are, a request scores exactly
+    # like the same payload arriving on the wire and scored by score()
     tx = {
         "transaction_id": "t",
-        "features": {"num_items": 3, "merchant_risk": 0.7, "hour": 2.0},
+        "features": {"num_items": 3, "merchant_risk": 0.7, "hour": 2.0, **features},
         "event_time": "2024-01-01T00:00:00Z",
     }
     if amount is not _MISSING:
         tx["amount"] = amount
-    raw = spark.createDataFrame([(json.dumps(tx),)], "value string")
     model, _ = load_production(spark, registry[0])
     for m in (None, model):
-        ref = score(parse_transactions(raw), m).first()
+        ref = score(_parsed(spark, tx), m).first()
         out = score_one(spark, m, tx)
         assert out["prediction"] == ref["prediction"]
         assert out["proba"] == pytest.approx(ref["proba"], rel=1e-12)

@@ -7,13 +7,17 @@ from pyspark.sql import functions as F
 from real_time_fraud_detection_system_spark.plans.explain_checks import (
     count_exchanges,
 )
-from real_time_fraud_detection_system_spark.storage import (
-    bucketed_orders_lineitem,
-)
+from real_time_fraud_detection_system_spark.catalog import load_table
+from real_time_fraud_detection_system_spark.storage import write_bucketed
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    orders, lineitem = bucketed_orders_lineitem(spark, sf_dir, n_buckets=8)
+    orders = write_bucketed(
+        load_table(spark, sf_dir, "orders"), "orders_b", ["o_orderkey"]
+    )
+    lineitem = write_bucketed(
+        load_table(spark, sf_dir, "lineitem"), "lineitem_b", ["l_orderkey"]
+    )
     # merge hint: at this tiny SF the planner would broadcast (its own
     # exchange); the bucketing property under test is the SMJ path,
     # which is what survives when both sides are 100 TB
@@ -27,8 +31,6 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     assert count_exchanges(agg) == 0
 
     # correctness vs the unbucketed join
-    from real_time_fraud_detection_system_spark.catalog import load_table
-
     plain = (
         load_table(spark, sf_dir, "lineitem")
         .join(

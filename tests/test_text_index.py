@@ -461,31 +461,3 @@ def test_batch_topk_equals_per_query_runs(spark, sf_dir):
             for i, r in enumerate(_fresh_bm25(docs, terms).collect())
         ]
         assert got_q == want, f"query {qi} {terms}"
-
-
-def test_append_leg_preserves_custom_bucket_count(spark, sf_dir):
-    """An index persisted with a non-default n_buckets must keep its
-    layout across streaming appends: the writer reads the bucket
-    count from the catalog instead of assuming the default."""
-    from real_time_fraud_detection_system_spark.streaming.jobs import (
-        text_index_sink_writer,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    try:
-        persist_text_index(docs.filter("doc_id % 2 = 0"),
-                           prefix=PREFIX, n_buckets=4)
-        text_index_sink_writer(prefix=PREFIX)(
-            docs.filter("doc_id % 2 = 1"), 1
-        )
-        described = {
-            r["col_name"]: r["data_type"]
-            for r in spark.sql(
-                f"DESCRIBE TABLE EXTENDED {PREFIX}_post"
-            ).collect()
-        }
-        assert described["Num Buckets"] == "4"
-        got = bm25_search(spark, BM25_TERMS, prefix=PREFIX)
-        assert _rows(got) == _rows(bm25_topk(spark, sf_dir))
-    finally:
-        _drop_index(spark)
