@@ -88,7 +88,7 @@ def tombstone_ids(
 
 
 def live_index(
-    spark: SparkSession, prefix: str, parts, id_col: str
+    spark: SparkSession, prefix: str, parts: dict[str, list[str]], id_col: str
 ) -> tuple[DataFrame, ...]:
     """The part tables of ``prefix`` minus their tombstoned ids, in
     ``parts`` order. The anti-join's build side is the O(removed)-row

@@ -29,9 +29,8 @@ from real_time_fraud_detection_system_spark.streaming.pipeline import (
 
 def _parsed(spark, *payloads):
     """The wire parse of JSON payloads: what score() sees on the stream."""
-    return parse_transactions(
-        spark.createDataFrame([(json.dumps(p),) for p in payloads], "value string")
-    )
+    rows = [(json.dumps(p),) for p in payloads]
+    return parse_transactions(spark.createDataFrame(rows, "value string"))
 
 
 @pytest.fixture(scope="module")
@@ -153,7 +152,9 @@ def test_score_one_coerces_amount_like_score(spark, registry, amount, features):
     # like the same payload arriving on the wire and scored by score()
     tx = {
         "transaction_id": "t",
-        "features": {"num_items": 3, "merchant_risk": 0.7, "hour": 2.0, **features},
+        "features": {
+            "num_items": 3, "merchant_risk": 0.7, "hour": 2.0, **features
+        },
         "event_time": "2024-01-01T00:00:00Z",
     }
     if amount is not _MISSING:
