@@ -1433,16 +1433,6 @@ def _shard_pred_duck(col: str = "doc_id") -> str:
     )
 
 
-def update_signature_index(index: DataFrame, new_sigs: DataFrame) -> DataFrame:
-    """Append the shard's signature rows to the index, skipping doc_ids
-    already present (left-anti on the key): re-running the same shard
-    -- the crash-retry case -- adds nothing. With the index persisted
-    as doc_id-bucketed parquet, the anti-join is a map-side bucket
-    lookup and the append touches only new files."""
-    fresh = new_sigs.join(index.select("doc_id"), "doc_id", "left_anti")
-    return index.unionByName(fresh)
-
-
 def incremental_dedup_pairs(index: DataFrame, new_sigs: DataFrame) -> DataFrame:
     """Verified near-dup pairs TOUCHING the arriving shard: the shard's
     band keys equi-join the band keys of (index + shard); exact Jaccard
@@ -1507,11 +1497,16 @@ def persist_dedup_index(
     sig = signature_index(docs)
     sig_t = write_bucketed(sig, f"{prefix}_sig", _INDEX_PARTS["sig"])
     band_t = write_bucketed(
-        _band_table(sig).select("band", "bkey", "doc_id"),
-        f"{prefix}_band",
-        _INDEX_PARTS["band"],
+        _band_rows(sig), f"{prefix}_band", _INDEX_PARTS["band"]
     )
     return sig_t, band_t
+
+
+def _band_rows(sig: DataFrame) -> DataFrame:
+    """The lean (band, bkey, doc_id) rows of the ``{prefix}_band``
+    table for a signature frame: what persist_dedup_index writes and
+    the streaming sink appends."""
+    return _band_table(sig).select("band", "bkey", "doc_id")
 
 
 def incremental_dedup_pairs_indexed(
@@ -1596,7 +1591,7 @@ def live_dedup_index(
     persist_dedup_index property the plan tests pin."""
     from ..storage import live_index
 
-    return live_index(spark, prefix, _INDEX_PARTS, "doc_id")
+    return live_index(spark, prefix, _INDEX_PARTS)
 
 
 def compact_dedup_index(spark: SparkSession, prefix: str = "dedup_idx") -> dict:
@@ -1607,7 +1602,7 @@ def compact_dedup_index(spark: SparkSession, prefix: str = "dedup_idx") -> dict:
     n_tombstones)."""
     from ..storage import compact_index
 
-    return compact_index(spark, prefix, _INDEX_PARTS, "doc_id")
+    return compact_index(spark, prefix, _INDEX_PARTS)
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1619,9 +1614,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     without ever pairing the corpus against itself.
 
     One signature build feeds both sides (cached, dropped after the
-    pairs materialize); a real deployment reads the index from parquet
-    instead -- tests/test_dedup_incremental.py drives that
-    parquet-roundtrip + update_signature_index lifecycle.
+    pairs materialize); a real deployment persists the index once
+    (persist_dedup_index) and grows it per shard through
+    streaming.jobs.dedup_index_sink_writer, which probes the live
+    index with incremental_dedup_pairs_indexed --
+    tests/test_dedup_incremental.py drives that lifecycle.
 
     Measured at the 100x scale test (500k docs, 10% shard): the full
     corpus signature build is 23.9 s cold and dominates this

@@ -46,7 +46,11 @@ _DOT = (
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings widened to double with precomputed L2 norms."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
+    return _widen(spread(load_table(spark, sf_dir, "embeddings"), "vec_id"))
+
+
+def _widen(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding) rows as (vec_id, emb double[], norm)."""
     return emb.selectExpr(
         "vec_id",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb",
@@ -1079,17 +1083,25 @@ def persist_ann_index(
     )
     spark.sql(f"DROP TABLE IF EXISTS {prefix}_cents")
     cents_df.write.mode("overwrite").saveAsTable(f"{prefix}_cents")
+    members_t = write_bucketed(
+        _ann_members(vecs, cent_ids, cent_embs),
+        f"{prefix}_members",
+        _INDEX_PARTS["members"],
+    )
+    return spark.table(f"{prefix}_cents"), members_t
+
+
+def _ann_members(vecs: DataFrame, cent_ids, cent_embs) -> DataFrame:
+    """The (m_id, m_emb, m_norm, c_id) member rows of (vec_id, emb,
+    norm) vectors, each in its nearest centroid's cell: what
+    persist_ann_index writes and the streaming sink appends."""
     cells = _nearest_cells_udf(cent_ids, cent_embs, 1)
-    members = vecs.select(
+    return vecs.select(
         F.col("vec_id").alias("m_id"),
         F.col("emb").alias("m_emb"),
         F.col("norm").alias("m_norm"),
         F.explode(cells(F.col("emb"))).alias("c_id"),
     )
-    members_t = write_bucketed(
-        members, f"{prefix}_members", _INDEX_PARTS["members"]
-    )
-    return spark.table(f"{prefix}_cents"), members_t
 
 
 def tombstone_ann_index(
@@ -1121,7 +1133,7 @@ def live_ann_members(
     costs NPROBE cells plus the tombstone count, never the corpus."""
     from ..storage import live_index
 
-    return live_index(spark, prefix, _INDEX_PARTS, "m_id")[0]
+    return live_index(spark, prefix, _INDEX_PARTS)[0]
 
 
 def compact_ann_index(spark: SparkSession, prefix: str = "ann_idx") -> dict:
@@ -1133,7 +1145,7 @@ def compact_ann_index(spark: SparkSession, prefix: str = "ann_idx") -> dict:
     re-trains."""
     from ..storage import compact_index
 
-    return compact_index(spark, prefix, _INDEX_PARTS, "m_id")
+    return compact_index(spark, prefix, _INDEX_PARTS)
 
 
 def ann_search(

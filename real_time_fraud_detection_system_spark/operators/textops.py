@@ -1609,7 +1609,7 @@ def live_text_index(
     the corpus."""
     from ..storage import live_index
 
-    return live_index(spark, prefix, _INDEX_PARTS, "doc_id")
+    return live_index(spark, prefix, _INDEX_PARTS)
 
 
 def _live_text_stats(spark: SparkSession, prefix: str) -> DataFrame:
@@ -1667,22 +1667,22 @@ def compact_text_index(spark: SparkSession, prefix: str = "text_idx") -> dict:
     """Fold the tombstones into the persisted lexical index
     (``storage.compact_index``): rewrite postings and doc table
     without the tombstoned doc_ids, consolidate the stats append-log
-    to ONE live row, drop the tombstone table, and return the exact
-    row funnel. The live stats are priced before the rewrite (the dead
-    docs' dl lives in the doc table) and written after it, before the
-    tombstone table is dropped."""
+    to ONE row, drop the tombstone table, and return the exact row
+    funnel. The stats row is read off the REWRITTEN doc table
+    (count(*), sum(dl)), after the rewrite and before the tombstone
+    table is dropped: a crash after it leaves exact stats (no dead
+    rows remain to subtract), and a crash between the doc rewrite and
+    it is repaired by running the compaction again."""
     from ..storage import compact_index
-
-    live_stats = _live_text_stats(spark, prefix).collect()[0]
 
     def write_stats() -> None:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_stats")
-        spark.createDataFrame(
-            [(live_stats["n_docs"], live_stats["sum_dl"])],
-            "n_docs bigint, sum_dl bigint",
+        spark.table(f"{prefix}_doc").selectExpr(
+            "CAST(count(*) AS BIGINT) AS n_docs",
+            "CAST(sum(dl) AS BIGINT) AS sum_dl",
         ).write.format("parquet").saveAsTable(f"{prefix}_stats")
 
-    return compact_index(spark, prefix, _INDEX_PARTS, "doc_id", write_stats)
+    return compact_index(spark, prefix, _INDEX_PARTS, write_stats)
 
 
 QUERIES = {

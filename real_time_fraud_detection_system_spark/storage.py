@@ -13,8 +13,9 @@ partition pruning serves the time filters (SURVEY.md P12/P13), buckets
 serve the key joins.
 
 The three persisted index families (dedup, ANN, text) share one
-layout (INDEX_BUCKETS buckets, sorted on the bucket keys) and one
-tombstone lifecycle: tombstone_ids, live_index, compact_index.
+layout (INDEX_BUCKETS buckets, sorted on the bucket keys), one append
+gate (unindexed_rows) and one tombstone lifecycle: tombstone_ids,
+live_index, compact_index.
 """
 
 from __future__ import annotations
@@ -62,11 +63,11 @@ def write_bucketed(df: DataFrame, table: str, keys: list[str]) -> DataFrame:
 # The tombstone lifecycle of the persisted index families (dedup, ANN,
 # text). An index ``prefix`` owns bucketed part tables
 # ``{prefix}_{part}``, each carrying the family's id column, and one
-# ``{prefix}_tomb`` side table of removed ids. Removal only deletes
-# rows -- no surviving row depends on a removed one -- so an
-# O(removed)-row side table plus a probe-time anti-join is exact, and
-# compaction (the LSM trade) folds it into one rewrite when the
-# anti-join costs more than the rewrite.
+# ``{prefix}_tomb`` side table of removed ids (that id column alone).
+# Removal only deletes rows -- no surviving row depends on a removed
+# one -- so an O(removed)-row side table plus a probe-time anti-join is
+# exact, and compaction (the LSM trade) folds it into one rewrite when
+# the anti-join costs more than the rewrite.
 
 
 def tombstone_ids(
@@ -88,7 +89,7 @@ def tombstone_ids(
 
 
 def live_index(
-    spark: SparkSession, prefix: str, parts: dict[str, list[str]], id_col: str
+    spark: SparkSession, prefix: str, parts: dict[str, list[str]]
 ) -> tuple[DataFrame, ...]:
     """The part tables of ``prefix`` minus their tombstoned ids, in
     ``parts`` order. The anti-join's build side is the O(removed)-row
@@ -99,15 +100,44 @@ def live_index(
     tomb = f"{prefix}_tomb"
     if not spark.catalog.tableExists(tomb):
         return tables
-    dead = spark.table(tomb).select(id_col).distinct()
-    return tuple(t.join(dead, id_col, "left_anti") for t in tables)
+    dead = spark.table(tomb).distinct()
+    return tuple(t.join(dead, dead.columns, "left_anti") for t in tables)
+
+
+def unindexed_rows(
+    batch: DataFrame, prefix: str, member: str, id_col: str, compact
+) -> DataFrame:
+    """The rows of ``batch`` whose ``id_col`` the index ``prefix`` does
+    not hold yet: the one append gate of the index sinks, which then
+    append what it returns with ``append_bucketed``. In order:
+
+      1. fold first: if the batch carries an id in ``{prefix}_tomb``,
+         run the family's ``compact(spark, prefix)``. A tombstoned id
+         arriving again (removed, then restored or changed) would
+         otherwise pass as indexed and its new rows would never land,
+         while dropping its tombstone would resurrect its old rows;
+         after the fold the id is absent from every part;
+      2. anti-join the batch on ``id_col`` of the membership table
+         ``{prefix}_{member}`` (one row per indexed id), so a
+         re-delivered epoch yields nothing -- its ids are live members
+         by then, so it triggers no compaction either;
+      3. pin the result with localCheckpoint, so the tables are read
+         once, before the caller appends to them."""
+    spark = batch.sparkSession
+    tomb = f"{prefix}_tomb"
+    if spark.catalog.tableExists(tomb) and not batch.join(
+        spark.table(tomb), id_col, "left_semi"
+    ).isEmpty():
+        compact(spark, prefix)
+    return batch.join(
+        spark.table(f"{prefix}_{member}").select(id_col), id_col, "left_anti"
+    ).localCheckpoint()
 
 
 def compact_index(
     spark: SparkSession,
     prefix: str,
     parts: dict[str, list[str]],
-    id_col: str,
     before_drop=None,
 ) -> dict:
     """Fold the tombstones into the index: rewrite each part table
@@ -116,19 +146,21 @@ def compact_index(
     shape. The live rows are staged in a scratch parquet dir first
     (the bucketed rewrite cannot read the table it overwrites).
     ``before_drop()``, if given, runs after the rewrite and before the
-    tombstone table is dropped. Returns the exact row funnel:
-    ``prefix``, ``{part}_rows_before`` / ``_after`` / ``_dropped`` and
-    ``n_tombstones``."""
+    tombstone table is dropped; a crash between a finished part
+    rewrite and the drop is repaired by running the compaction again,
+    since the tombstones still filter every part. Returns the exact row
+    funnel: ``prefix``, ``{part}_rows_before`` / ``_after`` /
+    ``_dropped`` and ``n_tombstones``."""
     import tempfile
 
     funnel: dict = {"prefix": prefix}
     tomb = f"{prefix}_tomb"
     funnel["n_tombstones"] = (
-        spark.table(tomb).select(id_col).distinct().count()
+        spark.table(tomb).distinct().count()
         if spark.catalog.tableExists(tomb)
         else 0
     )
-    lives = live_index(spark, prefix, parts, id_col)
+    lives = live_index(spark, prefix, parts)
     scratch = tempfile.mkdtemp(prefix=f"{prefix}_compact_")
     try:
         for (part, keys), live in zip(parts.items(), lives):

@@ -18,7 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..storage import STORE_PARTITION_COL, append_bucketed, commit_epoch
+from ..storage import (
+    STORE_PARTITION_COL, append_bucketed, commit_epoch, unindexed_rows,
+)
 
 
 def daily_metrics_frame(predictions: DataFrame, days_filter=None) -> DataFrame:
@@ -345,126 +347,132 @@ def retention_sweep(
     return {"deleted": deleted, "kept": len(days) - len(deleted)}
 
 
-def ann_index_sink_writer(cents_table: str, members_table: str):
+def ann_index_sink_writer(prefix: str = "ann_idx"):
     """foreachBatch hook over an (vec_id, embedding) stream: each
-    arriving micro-batch assigns its vectors to the PERSISTED
-    centroids (the persist_ann_index set -- centroids stay fixed as
-    the corpus grows, the standard IVF practice; re-train them offline
-    when ivf_cell_stats says the balance drifted) and appends to the
-    c_id-bucketed members table, so ann_search sees new vectors at the
-    next query with no index rebuild.
+    arriving micro-batch assigns its NEW vectors to the persisted
+    centroids ``{prefix}_cents`` (the persist_ann_index set --
+    centroids stay fixed as the corpus grows, the standard IVF
+    practice; re-train them offline when ivf_cell_stats says the
+    balance drifted) and appends them to the c_id-bucketed
+    ``{prefix}_members``, so ann_search sees new vectors at the next
+    query with no index rebuild.
 
-    Replay-idempotent the dedup_index_sink_writer way: members enter
-    through a left-anti join on m_id pinned BEFORE the append, so an
-    at-least-once redelivery contributes zero rows. The append is
-    ``storage.append_bucketed`` on persist_ann_index's c_id key -- each
-    batch adds new bucket files, it never rewrites existing ones.
+    The new vectors are ``storage.unindexed_rows`` on m_id: a
+    re-delivered epoch contributes zero rows, and a tombstoned vec_id
+    arriving again folds the tombstones first (compact_ann_index), so
+    its new embedding replaces the old one. The append is
+    ``storage.append_bucketed`` on persist_ann_index's c_id key --
+    each batch adds new bucket files, it never rewrites existing ones.
 
     Visibility: a DIFFERENT SparkSession that already read the members
     table caches its file listing and will not see appended batches
-    until spark.catalog.refreshTable(members_table) -- standard Spark
-    managed-table behavior for out-of-band appends; the batch's own
-    session (and any fresh session) sees them immediately."""
+    until spark.catalog.refreshTable(f"{prefix}_members") -- standard
+    Spark managed-table behavior for out-of-band appends; the batch's
+    own session (and any fresh session) sees them immediately."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from ..operators.similarity import (
-            _DOT,
             _INDEX_PARTS,
-            _nearest_cells_udf,
+            _ann_members,
+            _widen,
+            compact_ann_index,
         )
 
         spark = batch_df.sparkSession
-        cent_rows = spark.table(cents_table).orderBy("c_id").collect()
-        cells = _nearest_cells_udf(
-            [r["c_id"] for r in cent_rows],
-            [r["c_emb"] for r in cent_rows],
-            1,
+        cents = spark.table(f"{prefix}_cents").orderBy("c_id").collect()
+        members = _ann_members(
+            _widen(batch_df),
+            [r["c_id"] for r in cents],
+            [r["c_emb"] for r in cents],
         )
-        vecs = batch_df.selectExpr(
-            "vec_id",
-            "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb",
-        ).withColumn(
-            "norm", F.expr("sqrt(" + _DOT.format(a="emb", b="emb") + ")")
+        fresh = unindexed_rows(
+            members, prefix, "members", "m_id", compact_ann_index
         )
-        members = vecs.select(
-            F.col("vec_id").alias("m_id"),
-            F.col("emb").alias("m_emb"),
-            F.col("norm").alias("m_norm"),
-            F.explode(cells(F.col("emb"))).alias("c_id"),
-        )
-        fresh = members.join(
-            spark.table(members_table).select("m_id"), "m_id", "left_anti"
-        ).localCheckpoint()  # pin: read the table once, pre-append
         if fresh.isEmpty():
             return  # full replay: every vector already indexed
-        append_bucketed(fresh, members_table, _INDEX_PARTS["members"])
+        append_bucketed(fresh, f"{prefix}_members", _INDEX_PARTS["members"])
 
     return write_batch
 
 
-def dedup_index_sink_writer(index_dir: str, pairs_dir: str):
+def dedup_index_sink_writer(pairs_dir: str, prefix: str = "dedup_idx"):
     """foreachBatch hook over a (doc_id, text) document stream (the
     dedup.py shard-vs-index path as a streaming job): each micro-batch
-    dedups against the persisted MinHash signature index, writes the
-    verified pairs its arrival adds under ``pairs_dir/epoch_id=N``,
-    then appends its signatures to the index.
+    probes the live persisted dedup index (live_dedup_index, with
+    incremental_dedup_pairs_indexed), writes the verified pairs its
+    arrival adds under ``pairs_dir/epoch_id=N``, then appends its
+    signature and band rows to ``{prefix}_sig`` / ``{prefix}_band``.
+    The first non-empty batch creates the (empty) tables; a corpus
+    indexed with persist_dedup_index is grown in place.
 
-    Exactly-once under replays: signatures enter the index through an
-    anti-join, so a full replay finds nothing fresh and writes nothing;
-    the pairs commit through ``storage.commit_epoch`` BEFORE the index
-    append, so a crash between the two replays the batch with the index
-    still pre-batch and the committed pairs are not written twice."""
+    Exactly-once under replays: the batch's new docs are
+    ``storage.unindexed_rows`` on the signature table's doc_id, so a
+    full replay finds nothing fresh and writes nothing, and a
+    tombstoned doc_id arriving again folds the tombstones first
+    (compact_dedup_index). A tombstoned doc never matches: the probe
+    reads the live index. The pairs commit through
+    ``storage.commit_epoch`` BEFORE the index append, so a crash
+    between the two replays the batch with the index still pre-batch
+    and the committed pairs are not written twice. The signature
+    table, the membership table, is appended last, so a crash between
+    the two appends replays the batch instead of leaving docs indexed
+    without their band rows."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         from ..operators.dedup import (
-            incremental_dedup_pairs,
+            _INDEX_PARTS,
+            _band_rows,
+            compact_dedup_index,
+            incremental_dedup_pairs_indexed,
+            live_dedup_index,
+            persist_dedup_index,
             signature_index,
         )
 
         spark = batch_df.sparkSession
-        new_sigs = signature_index(batch_df).cache()
-        try:
-            try:
-                index = spark.read.parquet(index_dir)
-                fresh = new_sigs.join(
-                    index.select("doc_id"), "doc_id", "left_anti"
-                )
-            except AnalysisException:  # first batch: no index yet
-                index = spark.createDataFrame([], new_sigs.schema)
-                fresh = new_sigs
-            fresh = fresh.localCheckpoint()  # pin: read index ONCE,
-            # before this batch mutates it
-            if fresh.isEmpty():
-                return  # full replay: everything already indexed
-            commit_epoch(
-                pairs_dir,
-                epoch_id,
-                incremental_dedup_pairs(index, fresh)
-                .withColumn("epoch_id", F.lit(int(epoch_id)))
-                .write.partitionBy("epoch_id")
-                .parquet,
+        if not spark.catalog.tableExists(f"{prefix}_sig"):
+            if batch_df.isEmpty():
+                return
+            # first batch: create the empty tables, then append as usual
+            persist_dedup_index(batch_df.limit(0), prefix)
+        fresh = unindexed_rows(
+            batch_df, prefix, "sig", "doc_id", compact_dedup_index
+        )
+        if fresh.isEmpty():
+            return  # full replay: everything already indexed
+        # pinned: the probe and both appends read the signatures
+        new_sigs = signature_index(fresh).localCheckpoint()
+        commit_epoch(
+            pairs_dir,
+            epoch_id,
+            incremental_dedup_pairs_indexed(
+                *live_dedup_index(spark, prefix), new_sigs
             )
-            fresh.write.mode("append").parquet(index_dir)
-        finally:
-            new_sigs.unpersist()
+            .withColumn("epoch_id", F.lit(int(epoch_id)))
+            .write.partitionBy("epoch_id")
+            .parquet,
+        )
+        append_bucketed(
+            _band_rows(new_sigs), f"{prefix}_band", _INDEX_PARTS["band"]
+        )
+        append_bucketed(new_sigs, f"{prefix}_sig", _INDEX_PARTS["sig"])
 
     return write_batch
 
 
-def ingest_census_sink_writer(index_dir: str, census_dir: str):
+def ingest_census_sink_writer(census_dir: str, prefix: str = "dedup_idx"):
     """foreachBatch hook over a (doc_id, source, text, n_chars)
     document stream: per micro-batch, append the per-(source, status)
-    ingest census against the persisted signature index -- status =
-    'added' (doc_id not yet indexed) or 'replayed' (already there) --
-    with doc and char counts. The STREAMING twin of
-    corpus_snapshot_diff's batch census: where the batch form prices a
-    whole dump after it lands, this writes the same triage row-by-row
-    as shards arrive, so an ingest dashboard sees a source's replay
-    mass or volume spike within one trigger instead of at the next
-    dump boundary. Usually composed with dedup_index_sink_writer over
-    the same stream (census first, then the index append).
+    ingest census against the persisted dedup index -- status =
+    'added' (doc_id not among the live ``{prefix}_sig`` doc_ids) or
+    'replayed' (already there) -- with doc and char counts. The
+    STREAMING twin of corpus_snapshot_diff's batch census: where the
+    batch form prices a whole dump after it lands, this writes the
+    same triage row-by-row as shards arrive, so an ingest dashboard
+    sees a source's replay mass or volume spike within one trigger
+    instead of at the next dump boundary. Usually composed with
+    dedup_index_sink_writer over the same stream and prefix (census
+    first, then the index append).
 
     VALUE-STABLE under at-least-once retry BY FIRST-WRITE-WINS: the
     census lands under ``census_dir/epoch_id=N`` through
@@ -476,22 +484,21 @@ def ingest_census_sink_writer(index_dir: str, census_dir: str):
     the committed census is still the truth. Consequence:
     intentionally RE-pricing an epoch re-delivered under the same
     epoch_id requires deleting its ``_epochs/N`` marker and
-    ``epoch_id=N`` partition first. The membership anti-join
-    probes only the index's doc_id column -- with the index persisted
-    doc_id-bucketed, a shard's census costs the shard, not the
-    corpus."""
+    ``epoch_id=N`` partition first. The membership join probes only
+    the doc_id-bucketed signature table's doc_id column, so a shard's
+    census costs the shard, not the corpus."""
 
     def write(batch_df: DataFrame, epoch_id: int, staging: str) -> None:
-        from pyspark.errors import AnalysisException
+        from ..operators.dedup import live_dedup_index
 
         spark = batch_df.sparkSession
         docs = batch_df.select("doc_id", "source", "n_chars")
-        try:
-            idx_ids = spark.read.parquet(index_dir).select("doc_id")
+        if spark.catalog.tableExists(f"{prefix}_sig"):
+            known = live_dedup_index(spark, prefix)[0].select("doc_id")
             tagged = docs.join(
-                idx_ids.withColumn("_known", F.lit(1)), "doc_id", "left"
+                known.withColumn("_known", F.lit(1)), "doc_id", "left"
             )
-        except AnalysisException:  # first batch: no index yet
+        else:  # first batch: no index yet
             tagged = docs.withColumn("_known", F.lit(None).cast("int"))
         census = (
             tagged.selectExpr(
@@ -526,28 +533,17 @@ def text_index_sink_writer(prefix: str = "text_idx"):
     row to the ``{prefix}_stats`` append-log -- so bm25_search /
     hybrid_search see a landed shard within one trigger, with the
     index family's uniform lifecycle (this append leg + the
-    tombstone/compact legs).
+    tombstone/compact legs). The first non-empty batch persists the
+    index (persist_text_index).
 
-    Replay-idempotent BY MEMBERSHIP: new docs are anti-joined against
-    the doc table's doc_id column (its bucket layout makes that a
-    shard-cost probe) and pinned via localCheckpoint BEFORE any
-    append, so a re-delivered epoch adds nothing -- the
-    dedup_index_sink_writer discipline. Membership is checked against
-    the table INCLUDING tombstoned rows, so a doc_id that was
-    tombstoned (removed/changed) and then RE-INGESTED before
-    compaction would be silently skipped and its new content never
-    indexed (ADVICE r12); dropping the tombstone instead would
-    resurrect the doc's OLD posting rows alongside the new ones. The
-    only append-only-exact resolution is to fold first: a batch
-    carrying a tombstoned doc_id triggers compact_text_index (the
-    rewrite the tombstones were waiting for -- rare in practice:
-    takedown-then-restore inside one compaction cycle), after which
-    the doc is genuinely absent and re-indexes with its new content.
-    Replays stay no-ops: a re-delivered epoch's docs are live members
-    by then, not tombstoned, so no compaction re-triggers. Empty
-    batches no-op. Appends go through ``storage.append_bucketed`` on
-    the persisted keys, so the probe plans keep their bucket-pruned
-    shape across appends."""
+    The new docs are ``storage.unindexed_rows`` on the doc table's
+    doc_id (its bucket layout makes that a shard-cost probe): a
+    re-delivered epoch adds nothing, and a doc_id that was tombstoned
+    (removed/changed) and then RE-INGESTED before compaction folds the
+    tombstones first (compact_text_index), after which the doc is
+    genuinely absent and re-indexes with its new content. Appends go
+    through ``storage.append_bucketed`` on the persisted keys, so the
+    probe plans keep their bucket-pruned shape across appends."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from ..operators.textops import (
@@ -555,33 +551,18 @@ def text_index_sink_writer(prefix: str = "text_idx"):
             _TOKS,
             build_postings,
             build_text_stats,
+            compact_text_index,
+            persist_text_index,
         )
 
         spark = batch_df.sparkSession
         if not spark.catalog.tableExists(f"{prefix}_doc"):
-            from ..operators.textops import persist_text_index
-
-            if batch_df.isEmpty():
-                return
-            persist_text_index(batch_df, prefix=prefix)
+            if not batch_df.isEmpty():
+                persist_text_index(batch_df, prefix=prefix)
             return
-        tomb = f"{prefix}_tomb"
-        if spark.catalog.tableExists(tomb):
-            conflicted = batch_df.join(
-                spark.table(tomb), "doc_id", "left_semi"
-            )
-            if not conflicted.isEmpty():
-                # tombstoned doc re-ingested before compaction: fold
-                # the tombstones NOW (see docstring) so the new
-                # content indexes instead of being silently skipped
-                from ..operators.textops import compact_text_index
-
-                compact_text_index(spark, prefix)
-        fresh = batch_df.join(
-            spark.table(f"{prefix}_doc").select("doc_id"),
-            "doc_id",
-            "left_anti",
-        ).localCheckpoint()  # pin: read the doc table ONCE, pre-append
+        fresh = unindexed_rows(
+            batch_df, prefix, "doc", "doc_id", compact_text_index
+        )
         if fresh.isEmpty():
             return  # full replay: everything already indexed
         append_bucketed(

@@ -12,7 +12,6 @@ from real_time_fraud_detection_system_spark.operators.dedup import (
     dedup_minhash_lsh,
     incremental_dedup_pairs,
     signature_index,
-    update_signature_index,
 )
 
 
@@ -46,32 +45,47 @@ def test_incremental_equals_full_lsh_restricted_to_shard(spark, sf_dir):
 
 
 def test_index_roundtrip_and_idempotent_update(spark, sf_dir, tmp_path):
-    """Drive the real deployment shape: index persisted to parquet,
-    shard signatures computed fresh, pairs off the stored index, then
-    update_signature_index -- applied twice, the second run is a
-    no-op."""
+    """Drive the real deployment shape: the corpus index persisted as
+    the bucketed catalog tables, then the shard streamed through
+    dedup_index_sink_writer -- its committed pairs are the incremental
+    pair set, and the sink applied twice, the second run is a no-op."""
+    from real_time_fraud_detection_system_spark.operators.dedup import (
+        persist_dedup_index,
+    )
+    from real_time_fraud_detection_system_spark.streaming.jobs import (
+        dedup_index_sink_writer,
+    )
+
     docs = load_table(spark, sf_dir, "documents")
     is_new = F.expr(_shard_pred_spark())
     corpus, shard = docs.filter(~is_new), docs.filter(is_new)
+    pairs_dir = str(tmp_path / "pairs")
+    try:
+        sig_t, _ = persist_dedup_index(corpus, prefix="t_rt_idx")
+        n_index = sig_t.count()
+        n_new = signature_index(shard).count()
+        writer = dedup_index_sink_writer(pairs_dir, prefix="t_rt_idx")
 
-    idx_path = str(tmp_path / "sig_index")
-    signature_index(corpus).write.parquet(idx_path)
-    index = spark.read.parquet(idx_path)
-    new_sigs = signature_index(shard)
-
-    from_disk = _pairs_set(incremental_dedup_pairs(index, new_sigs))
-    assert from_disk == _pairs_set(dedup_incremental(spark, sf_dir))
-
-    n_index = index.count()
-    n_new = new_sigs.count()
-    once = update_signature_index(index, new_sigs)
-    assert once.count() == n_index + n_new
-    twice = update_signature_index(once, new_sigs)
-    assert twice.count() == n_index + n_new  # re-run adds nothing
-    # after the update the shard IS indexed: every signature exactly once
-    assert (
-        twice.groupBy("doc_id").count().filter("count > 1").count() == 0
-    )
+        writer(shard, 0)
+        from_disk = _pairs_set(
+            spark.read.parquet(pairs_dir).drop("epoch_id")
+        )
+        assert from_disk == _pairs_set(dedup_incremental(spark, sf_dir))
+        once = spark.table("t_rt_idx_sig")
+        assert once.count() == n_index + n_new
+        writer(shard, 1)
+        twice = spark.table("t_rt_idx_sig")
+        assert twice.count() == n_index + n_new  # re-run adds nothing
+        # after the update the shard IS indexed: every signature exactly once
+        assert (
+            twice.groupBy("doc_id").count().filter("count > 1").count() == 0
+        )
+        assert _pairs_set(
+            spark.read.parquet(pairs_dir).drop("epoch_id")
+        ) == from_disk
+    finally:
+        for t in ("t_rt_idx_sig", "t_rt_idx_band"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_dedup_index_sink_stream_and_replay(spark, sf_dir, tmp_path):
@@ -92,41 +106,46 @@ def test_dedup_index_sink_stream_and_replay(spark, sf_dir, tmp_path):
     docs.filter(is_b0).coalesce(1).write.parquet(str(src / "b0"))
     docs.filter(~is_b0).coalesce(1).write.parquet(str(src / "b1"))
 
-    index_dir = str(tmp_path / "index")
     pairs_dir = str(tmp_path / "pairs")
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(dedup_index_sink_writer(index_dir, pairs_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
+    try:
+        q = (
+            stream.writeStream.outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .foreachBatch(dedup_index_sink_writer(pairs_dir, "t_sink_idx"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(240)
 
-    pairs = spark.read.parquet(pairs_dir)
-    want = _pairs_set(dedup_minhash_lsh(spark, sf_dir))
-    assert _pairs_set(pairs.drop("epoch_id")) == want
-    assert want, "corpus must contain at least one verified pair"
-    assert (
-        pairs.groupBy("a_id", "b_id").count().filter("count > 1").count()
-        == 0
-    ), "a pair must land in exactly one epoch partition"
-    assert pairs.select("epoch_id").distinct().count() >= 2
+        pairs = spark.read.parquet(pairs_dir)
+        want = _pairs_set(dedup_minhash_lsh(spark, sf_dir))
+        assert _pairs_set(pairs.drop("epoch_id")) == want
+        assert want, "corpus must contain at least one verified pair"
+        assert (
+            pairs.groupBy("a_id", "b_id").count().filter("count > 1").count()
+            == 0
+        ), "a pair must land in exactly one epoch partition"
+        assert pairs.select("epoch_id").distinct().count() >= 2
 
-    idx = spark.read.parquet(index_dir)
-    n_docs = docs.count()
-    assert idx.count() == n_docs  # every doc signed exactly once
+        idx = spark.table("t_sink_idx_sig")
+        n_docs = docs.count()
+        assert idx.count() == n_docs  # every doc signed exactly once
 
-    # replay an already-processed batch: index AND pairs unchanged
-    writer = dedup_index_sink_writer(index_dir, pairs_dir)
-    writer(docs.filter(is_b0), 999)
-    assert spark.read.parquet(index_dir).count() == n_docs
-    assert _pairs_set(spark.read.parquet(pairs_dir).drop("epoch_id")) == want
+        # replay an already-processed batch: index AND pairs unchanged
+        writer = dedup_index_sink_writer(pairs_dir, "t_sink_idx")
+        writer(docs.filter(is_b0), 999)
+        assert spark.table("t_sink_idx_sig").count() == n_docs
+        assert _pairs_set(
+            spark.read.parquet(pairs_dir).drop("epoch_id")
+        ) == want
+    finally:
+        for t in ("t_sink_idx_sig", "t_sink_idx_band"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_indexed_incremental_matches_and_skips_index_shuffle(spark, sf_dir):
@@ -183,20 +202,100 @@ def test_indexed_incremental_matches_and_skips_index_shuffle(spark, sf_dir):
 
 def test_dedup_index_sink_tolerates_empty_batch(spark, sf_dir, tmp_path):
     """foreachBatch hands over empty micro-batches on idle triggers;
-    the sink must no-op (no index dir created, no crash) and a
+    the sink must no-op (no index table created, no crash) and a
     subsequent real batch must still work."""
     from real_time_fraud_detection_system_spark.streaming.jobs import (
         dedup_index_sink_writer,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    writer = dedup_index_sink_writer(
-        str(tmp_path / "index"), str(tmp_path / "pairs")
+    writer = dedup_index_sink_writer(str(tmp_path / "pairs"), "t_empty_idx")
+    try:
+        writer(docs.limit(0), 0)  # empty: must not throw
+        assert not spark.catalog.tableExists("t_empty_idx_sig")
+        writer(docs, 1)
+        assert spark.table("t_empty_idx_sig").count() == docs.count()
+    finally:
+        for t in ("t_empty_idx_sig", "t_empty_idx_band"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_dedup_sink_skips_tombstoned_doc_and_reindexes_it(
+    spark, sf_dir, tmp_path
+):
+    """A doc tombstoned through tombstone_sink_writer must not match a
+    near-duplicate that streams in afterwards (the sink probes the
+    LIVE index), and the same doc_id arriving again with new content
+    folds the tombstones first, so it is indexed once with its new
+    signature. Replays of either epoch stay no-ops."""
+    from real_time_fraud_detection_system_spark.operators.dedup import (
+        live_dedup_index,
+        persist_dedup_index,
     )
-    writer(docs.limit(0), 0)  # empty: must not throw
-    writer(docs, 1)
-    idx = spark.read.parquet(str(tmp_path / "index"))
-    assert idx.count() == docs.count()
+    from real_time_fraud_detection_system_spark.streaming.jobs import (
+        dedup_index_sink_writer,
+        tombstone_sink_writer,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    pair = dedup_minhash_lsh(spark, sf_dir).first()  # the dead doc's
+    # live partner keeps the arrival's pair set non-empty
+    dead = docs.filter(F.col("doc_id") == pair["a_id"]).first()
+    new_id = docs.selectExpr("max(doc_id) + 1 AS m").collect()[0]["m"]
+    near_dup = spark.createDataFrame(
+        [(new_id, dead["text"])], "doc_id long, text string"
+    )
+    # non-vacuous: against a live copy of the doc, the arrival pairs
+    assert (dead["doc_id"], new_id) in {
+        (a, b)
+        for a, b, _ in _pairs_set(
+            incremental_dedup_pairs(
+                signature_index(
+                    docs.filter(F.col("doc_id") == dead["doc_id"])
+                ),
+                signature_index(near_dup),
+            )
+        )
+    }
+    pairs_dir = str(tmp_path / "pairs")
+    writer = dedup_index_sink_writer(pairs_dir, "t_reidx")
+    try:
+        n_sig = persist_dedup_index(docs, prefix="t_reidx")[0].count()
+        tombstone_sink_writer(prefix="t_reidx")(
+            docs.filter(F.col("doc_id") == dead["doc_id"]).select("doc_id"), 0
+        )
+
+        writer(near_dup, 0)
+        writer(near_dup, 0)  # replayed epoch: no-op
+        got = _pairs_set(spark.read.parquet(pairs_dir).drop("epoch_id"))
+        assert (pair["b_id"], new_id) in {(a, b) for a, b, _ in got}
+        assert all(dead["doc_id"] not in (a, b) for a, b, _ in got)
+        sig_t, _ = live_dedup_index(spark, "t_reidx")
+        assert sig_t.count() == n_sig  # one doc dead, one arrived
+
+        # the dead id arrives again with new content: fold, then index
+        changed = spark.createDataFrame(
+            [(dead["doc_id"], "an entirely rewritten body of plain words "
+              "that shares no phrase with any other document here")],
+            "doc_id long, text string",
+        )
+        writer(changed, 1)
+        assert not spark.catalog.tableExists("t_reidx_tomb")
+        rows = spark.table("t_reidx_sig").filter(
+            F.col("doc_id") == dead["doc_id"]
+        ).collect()
+        want = signature_index(changed).collect()
+        assert len(rows) == 1 and len(want) == 1
+        assert rows[0]["min_md5"] == want[0]["min_md5"]
+        assert set(rows[0]["hsh"]) == set(want[0]["hsh"])
+        writer(changed, 1)  # replayed epoch: no-op
+        assert spark.table("t_reidx_sig").count() == n_sig + 1
+        assert _pairs_set(
+            spark.read.parquet(pairs_dir).drop("epoch_id")
+        ) == got
+    finally:
+        for t in ("t_reidx_sig", "t_reidx_band", "t_reidx_tomb"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_tombstone_live_probe_and_compaction(spark, sf_dir):

@@ -87,28 +87,34 @@ def test_day2_incremental_ingest_runbook(spark, tmp_path):
 
     # the streaming index path sees the same added docs and grows the
     # persisted signature index to exactly the union, once per doc
+    from real_time_fraud_detection_system_spark.operators.dedup import (
+        persist_dedup_index,
+    )
     from real_time_fraud_detection_system_spark.streaming.jobs import (
         dedup_index_sink_writer,
     )
 
-    idx_dir = str(tmp_path / "sig_index")
-    signature_index(base).write.parquet(idx_dir)
-    writer = dedup_index_sink_writer(idx_dir, str(tmp_path / "pairs"))
-    writer(added, 0)
-    grown = spark.read.parquet(idx_dir)
-    assert grown.count() == docs.count()
-    assert grown.select("doc_id").distinct().count() == docs.count()
-    # replay of the same batch adds nothing (crash-retry idempotence)
-    writer(added, 1)
-    assert spark.read.parquet(idx_dir).count() == docs.count()
+    try:
+        persist_dedup_index(base, prefix="t_day2_idx")
+        writer = dedup_index_sink_writer(str(tmp_path / "pairs"), "t_day2_idx")
+        writer(added, 0)
+        grown = spark.table("t_day2_idx_sig")
+        assert grown.count() == docs.count()
+        assert grown.select("doc_id").distinct().count() == docs.count()
+        # replay of the same batch adds nothing (crash-retry idempotence)
+        writer(added, 1)
+        assert spark.table("t_day2_idx_sig").count() == docs.count()
+    finally:
+        for t in ("t_day2_idx_sig", "t_day2_idx_band"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_ingest_census_sink_streams_and_replays(spark, tmp_path):
     """The streaming census twin: two file micro-batches of docs
     arrive against a growing persisted index -- batch 0 is all 'added'
     (empty index), batch 1 splits added/replayed after the index
-    absorbed batch 0; re-delivering an epoch overwrites its own
-    partition instead of double-counting."""
+    absorbed batch 0; a re-delivered epoch keeps its first committed
+    census instead of double-counting."""
     from real_time_fraud_detection_system_spark.streaming.jobs import (
         dedup_index_sink_writer,
         ingest_census_sink_writer,
@@ -118,65 +124,67 @@ def test_ingest_census_sink_streams_and_replays(spark, tmp_path):
     b0 = docs.filter("doc_id % 3 = 0")
     b1 = docs.filter("doc_id % 3 <= 1")  # overlaps b0 on doc_id % 3 = 0
 
-    idx_dir = str(tmp_path / "idx")
     census_dir = str(tmp_path / "census")
-    census = ingest_census_sink_writer(idx_dir, census_dir)
-    index = dedup_index_sink_writer(idx_dir, str(tmp_path / "pairs"))
+    census = ingest_census_sink_writer(census_dir, "t_census_idx")
+    index = dedup_index_sink_writer(str(tmp_path / "pairs"), "t_census_idx")
+    try:
+        census(b0, 0)
+        index(b0, 0)
+        census(b1, 1)
+        index(b1, 1)
 
-    census(b0, 0)
-    index(b0, 0)
-    census(b1, 1)
-    index(b1, 1)
+        got = spark.read.parquet(census_dir)
+        n_e0_rows = got.filter("epoch_id = 0").count()
+        e0 = got.filter("epoch_id = 0").groupBy("status").agg(
+            F.sum("n_docs").alias("n")
+        )
+        assert {(r["status"], r["n"]) for r in e0.collect()} == {
+            ("added", b0.count())
+        }
+        e1 = {
+            r["status"]: r["n"]
+            for r in got.filter("epoch_id = 1")
+            .groupBy("status")
+            .agg(F.sum("n_docs").alias("n"))
+            .collect()
+        }
+        n_overlap = docs.filter("doc_id % 3 = 0").count()
+        assert e1 == {
+            "added": b1.count() - n_overlap,
+            "replayed": n_overlap,
+        }
 
-    got = spark.read.parquet(census_dir)
-    n_e0_rows = got.filter("epoch_id = 0").count()
-    e0 = got.filter("epoch_id = 0").groupBy("status").agg(
-        F.sum("n_docs").alias("n")
-    )
-    assert {(r["status"], r["n"]) for r in e0.collect()} == {
-        ("added", b0.count())
-    }
-    e1 = {
-        r["status"]: r["n"]
-        for r in got.filter("epoch_id = 1")
-        .groupBy("status")
-        .agg(F.sum("n_docs").alias("n"))
-        .collect()
-    }
-    n_overlap = docs.filter("doc_id % 3 = 0").count()
-    assert e1 == {
-        "added": b1.count() - n_overlap,
-        "replayed": n_overlap,
-    }
-
-    # re-delivery of epoch 1 (now everything is indexed): first write
-    # wins -- the committed census keeps its ORIGINAL added/replayed
-    # split even though the index has since absorbed the epoch's docs
-    # (ADVICE r10: a crash-retry straddling the composed index append
-    # must not erase the epoch's 'added' mass)
-    census(b1, 1)
-    again = {
-        r["status"]: r["n"]
-        for r in spark.read.parquet(census_dir)
-        .filter("epoch_id = 1")
-        .groupBy("status")
-        .agg(F.sum("n_docs").alias("n"))
-        .collect()
-    }
-    assert again == e1
-    # epoch 0 rows untouched by the replay
-    assert (
-        spark.read.parquet(census_dir).filter("epoch_id = 0").count()
-        == n_e0_rows
-    )
-    # a NEW epoch against the fully-absorbed index still prices fresh
-    census(docs.filter("doc_id % 3 = 2"), 2)
-    e2 = {
-        r["status"]: r["n"]
-        for r in spark.read.parquet(census_dir)
-        .filter("epoch_id = 2")
-        .groupBy("status")
-        .agg(F.sum("n_docs").alias("n"))
-        .collect()
-    }
-    assert e2 == {"added": docs.filter("doc_id % 3 = 2").count()}
+        # re-delivery of epoch 1 (now everything is indexed): first write
+        # wins -- the committed census keeps its ORIGINAL added/replayed
+        # split even though the index has since absorbed the epoch's docs
+        # (ADVICE r10: a crash-retry straddling the composed index append
+        # must not erase the epoch's 'added' mass)
+        census(b1, 1)
+        again = {
+            r["status"]: r["n"]
+            for r in spark.read.parquet(census_dir)
+            .filter("epoch_id = 1")
+            .groupBy("status")
+            .agg(F.sum("n_docs").alias("n"))
+            .collect()
+        }
+        assert again == e1
+        # epoch 0 rows untouched by the replay
+        assert (
+            spark.read.parquet(census_dir).filter("epoch_id = 0").count()
+            == n_e0_rows
+        )
+        # a NEW epoch against the fully-absorbed index still prices fresh
+        census(docs.filter("doc_id % 3 = 2"), 2)
+        e2 = {
+            r["status"]: r["n"]
+            for r in spark.read.parquet(census_dir)
+            .filter("epoch_id = 2")
+            .groupBy("status")
+            .agg(F.sum("n_docs").alias("n"))
+            .collect()
+        }
+        assert e2 == {"added": docs.filter("doc_id % 3 = 2").count()}
+    finally:
+        for t in ("t_census_idx_sig", "t_census_idx_band"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")

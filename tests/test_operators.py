@@ -899,7 +899,7 @@ def test_ann_index_sink_grows_index_and_ignores_replays(spark, sf_dir, tmp_path)
         q = (
             stream.writeStream.outputMode("append")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .foreachBatch(ann_index_sink_writer("t_grow_cents", "t_grow_members"))
+            .foreachBatch(ann_index_sink_writer("t_grow"))
             .trigger(availableNow=True)
             .start()
         )
@@ -921,12 +921,57 @@ def test_ann_index_sink_grows_index_and_ignores_replays(spark, sf_dir, tmp_path)
         )
 
         # manual replay of an already-appended batch: a no-op
-        writer = ann_index_sink_writer("t_grow_cents", "t_grow_members")
+        writer = ann_index_sink_writer("t_grow")
         writer(odd.filter("vec_id % 4 = 1"), 999)
         assert spark.table("t_grow_members").count() == emb.count()
     finally:
         spark.sql("DROP TABLE IF EXISTS t_grow_cents")
         spark.sql("DROP TABLE IF EXISTS t_grow_members")
+
+
+def test_ann_index_sink_reindexes_tombstoned_vector(spark, sf_dir):
+    """A vec_id tombstoned and then streamed again with a NEW embedding
+    must not be skipped as already indexed: the sink folds the
+    tombstones first, so the live members hold exactly one row for it,
+    with the new embedding. A replay of the same epoch stays a no-op."""
+    from pyspark.sql import functions as F
+
+    from real_time_fraud_detection_system_spark.catalog import load_table
+    from real_time_fraud_detection_system_spark.operators.similarity import (
+        live_ann_members,
+        persist_ann_index,
+        tombstone_ann_index,
+    )
+    from real_time_fraud_detection_system_spark.streaming.jobs import (
+        ann_index_sink_writer,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    vid = emb.selectExpr("min(vec_id) AS m").collect()[0]["m"]
+    changed = emb.filter(F.col("vec_id") == vid).select(
+        "vec_id", F.reverse("embedding").alias("embedding")
+    )
+    new_emb = [float(x) for x in changed.collect()[0]["embedding"]]
+    try:
+        persist_ann_index(spark, sf_dir, prefix="t_ann_re")
+        n_members = spark.table("t_ann_re_members").count()
+        old_emb = live_ann_members(spark, "t_ann_re").filter(
+            F.col("m_id") == vid
+        ).collect()[0]["m_emb"]
+        assert old_emb != new_emb  # non-vacuous: the content changes
+        assert tombstone_ann_index(spark, changed, prefix="t_ann_re") == 1
+
+        writer = ann_index_sink_writer("t_ann_re")
+        for _ in range(2):  # the first delivery, then a replayed epoch
+            writer(changed, 0)
+            rows = live_ann_members(spark, "t_ann_re").filter(
+                F.col("m_id") == vid
+            ).collect()
+            assert [r["m_emb"] for r in rows] == [new_emb]
+            assert spark.table("t_ann_re_members").count() == n_members
+    finally:
+        for part in ("cents", "members", "tomb"):
+            spark.sql(f"DROP TABLE IF EXISTS t_ann_re_{part}")
 
 
 def test_supplier_pagerank_invariants(spark, sf_dir):

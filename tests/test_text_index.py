@@ -241,6 +241,47 @@ def test_tombstone_live_compact_lifecycle(spark, sf_dir):
         _drop_index(spark)
 
 
+def test_compaction_rerun_repairs_a_crash_after_the_doc_rewrite(
+    spark, sf_dir, monkeypatch
+):
+    """Crash consistency of compact_text_index: the doc-part rewrite
+    completes and then the process dies, before the stats log is
+    consolidated. Running the compaction again must leave the stats
+    equal to build_text_stats of the live docs and bm25_search equal
+    to a fresh BM25 over them."""
+    import real_time_fraud_detection_system_spark.storage as storage
+
+    docs = load_table(spark, sf_dir, "documents")
+    removed = docs.filter("doc_id % 5 = 0").select("doc_id")
+    live_docs = docs.filter("doc_id % 5 <> 0")
+    real_write = storage.write_bucketed
+
+    def crash_after_doc_rewrite(df, table, keys):
+        out = real_write(df, table, keys)
+        if table == f"{PREFIX}_doc":
+            raise RuntimeError("crash after the doc rewrite")
+        return out
+
+    try:
+        persist_text_index(docs, prefix=PREFIX)
+        assert tombstone_text_index(spark, removed, prefix=PREFIX) > 0
+        monkeypatch.setattr(storage, "write_bucketed", crash_after_doc_rewrite)
+        with pytest.raises(RuntimeError, match="crash after the doc rewrite"):
+            compact_text_index(spark, prefix=PREFIX)
+        monkeypatch.setattr(storage, "write_bucketed", real_write)
+
+        compact_text_index(spark, prefix=PREFIX)
+        assert _rows(spark.table(f"{PREFIX}_stats")) == _rows(
+            build_text_stats(live_docs)
+        )
+        assert spark.table(f"{PREFIX}_doc").count() == live_docs.count()
+        assert _rows(bm25_search(spark, BM25_TERMS, prefix=PREFIX)) == _rows(
+            _fresh_bm25(live_docs, BM25_TERMS)
+        )
+    finally:
+        _drop_index(spark)
+
+
 def test_hybrid_search_fuses_both_persisted_indexes(spark, sf_dir):
     """hybrid_search == hand-RRF of its two component probes (the
     test_hybrid_retrieval discipline applied to the persisted form),

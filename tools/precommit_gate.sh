@@ -8,14 +8,24 @@
 #   operators/_memo.py
 #   functions/text.py
 #   operators/similarity.py (the _sem_labels / IVF index builders)
+#   operators/textops.py (the persisted lexical index)
+#   storage.py (the index append gate, tombstone and compaction steps)
+#   streaming/jobs.py (the index sinks)
 #
-# It runs the hand-reference + memo test block (< 2 min): every test
-# that pins an index artifact's values to a hand-computed reference,
-# plus the memo layer's invalidation/eviction contract.
+# It runs the hand-reference + memo test block: every test that pins
+# an index artifact's values to a hand-computed reference, plus the
+# memo layer's invalidation/eviction contract; then the sink,
+# tombstone and compaction tests of the three persisted index
+# families (dedup, text, ANN).
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/test_memo.py -q --no-header
 python -m pytest tests/test_operators.py tests/test_properties.py \
     -k "hand_reference or memo or fingerprint or signature or minhash or simhash" \
+    -q --no-header
+python -m pytest tests/test_dedup_incremental.py tests/test_text_index.py \
+    -q --no-header
+python -m pytest tests/test_operators.py \
+    -k "persisted_ann_index or ann_index_sink or ann_tombstone or ann_index_stats" \
     -q --no-header
 echo "precommit gate: GREEN"
