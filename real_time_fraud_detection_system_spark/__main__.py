@@ -297,6 +297,7 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
             live_ann_members,
             persist_ann_index,
         )
+        from .storage import index_table
 
         if args.action == "build":
             cents, members = persist_ann_index(
@@ -315,7 +316,7 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
         )
         _print_df(
             ann_search(
-                eng.spark.table(f"{args.prefix}_cents"),
+                index_table(eng.spark, f"{args.prefix}_cents"),
                 live_ann_members(eng.spark, args.prefix),
                 queries,
             ),
@@ -328,7 +329,7 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
         from .catalog import load_table
         from .operators.dedup import (
             _shard_pred_spark,
-            incremental_dedup_pairs_indexed,
+            incremental_dedup_pairs,
             live_dedup_index,
             persist_dedup_index,
             signature_index,
@@ -350,7 +351,7 @@ def main(argv: list[str] | None = None, out=sys.stdout) -> int:
                 F.expr(_shard_pred_spark())
             )
         _print_df(
-            incremental_dedup_pairs_indexed(
+            incremental_dedup_pairs(
                 *live_dedup_index(eng.spark, args.prefix),
                 signature_index(shard),
             ),

@@ -86,6 +86,7 @@ def _incremental_labels(
     byte-identical in tests/test_corpus_pipeline.py for add-only,
     changed, and removed+changed+added dumps."""
     from .operators.dedup import (
+        _band_rows,
         _lsh_pairs,
         _sig_table,
         incremental_dedup_pairs,
@@ -111,7 +112,7 @@ def _incremental_labels(
         dead_ids, "doc_id", "left_anti"
     )
     new_pairs = incremental_dedup_pairs(
-        live_base_sigs, signature_index(new_docs)
+        live_base_sigs, _band_rows(live_base_sigs), signature_index(new_docs)
     ).select("a_id", "b_id")
     base_pairs = (
         _lsh_pairs(spark, base_snapshot)

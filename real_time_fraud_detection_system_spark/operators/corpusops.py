@@ -1510,7 +1510,8 @@ def dsir_importance_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     best-of-2 at the 100x replica: 13.4 -> 6.8 s. Round-14 (ADVICE
     r13): the r13 note claimed 4 -> 2 checkpoint scans but the plan
     still held 3 (tot re-aggregated bstats from its own scan); bstats
-    is now cache()d ({DSIR_B} rows, bounded), making it exactly 2."""
+    is now localCheckpoint()ed ({DSIR_B} rows, bounded), making it
+    exactly 2, with nothing left cached in the session."""
     from ..functions.text import hex16_expr
 
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -1523,19 +1524,19 @@ def dsir_importance_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .localCheckpoint()
     )
-    # cache(): bstats is DSIR_B rows (bounded), and BOTH the tot
-    # aggregate and the model projection consume it -- uncached, each
-    # subtree re-aggregated bstats from its own scan of the 16M-row
-    # checkpoint, so the round-13 "4 -> 2 scans" claim was really 3
-    # (ADVICE r14 -- sic r13 #3; plan-verified: 3 Scan ExistingRDD
-    # nodes). With the bounded cache the checkpoint is scanned exactly
-    # twice: once building bstats, once in the per-doc reduce.
+    # localCheckpoint(): bstats is DSIR_B rows (bounded), and BOTH the
+    # tot aggregate and the model projection consume it -- unpinned,
+    # each subtree re-aggregated bstats from its own scan of the
+    # 16M-row checkpoint (plan-verified: 3 Scan ExistingRDD nodes).
+    # Pinned like g, the checkpoint is scanned exactly twice: once
+    # building bstats, once in the per-doc reduce. A cache() did the
+    # same but stayed in the session's cache after the query.
     bstats = g.groupBy("b").agg(
         F.sum("n").alias("cr"),
         F.sum(
             F.expr(f"CASE WHEN source = '{DSIR_TARGET}' THEN n ELSE 0 END")
         ).alias("ct"),
-    ).cache()
+    ).localCheckpoint()
     tot = bstats.agg(
         F.sum("cr").alias("nr"),
         F.sum("ct").alias("nt"),

@@ -376,7 +376,7 @@ def _sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _band_table(sig: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
+def _band_table(sig: DataFrame) -> DataFrame:
     """LSH band keys: each signature row fans out to LSH_BANDS
     (band, md5(sig-slice)) rows, carrying the 60-bit shingle-hash
     array so the equi-join can verify Jaccard inline."""
@@ -393,10 +393,9 @@ def _band_table(sig: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
         "doc_id",
         "hsh",
         F.size("hsh").alias("n_sh"),
-        *extra,
         F.explode(F.array(*band_structs)).alias("bk"),
     ).select(
-        "doc_id", "hsh", "n_sh", *extra,
+        "doc_id", "hsh", "n_sh",
         F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"),
     )
 
@@ -1433,47 +1432,6 @@ def _shard_pred_duck(col: str = "doc_id") -> str:
     )
 
 
-def incremental_dedup_pairs(index: DataFrame, new_sigs: DataFrame) -> DataFrame:
-    """Verified near-dup pairs TOUCHING the arriving shard: the shard's
-    band keys equi-join the band keys of (index + shard); exact Jaccard
-    over the carried 60-bit shingle-hash sets verifies inline, so
-    candidate losers never materialize. Index-vs-index pairs are never
-    formed (only shard rows sit on the probe side), and shard-vs-shard
-    pairs are taken once via the a < b rule while shard-vs-index pairs
-    accept either order and normalize to (least, greatest).
-
-    At scale the index side's band keys are themselves persisted
-    (they're a projection of the signature table), making a run's cost
-    |shard| x LSH_BANDS probe rows against a bucketed band table."""
-    both = index.withColumn("is_new", F.lit(False)).unionByName(
-        new_sigs.withColumn("is_new", F.lit(True))
-    )
-    a = _band_table(new_sigs).alias("a")
-    b = _band_table(both, extra=("is_new",)).alias("b")
-    n_inter = F.size(F.array_intersect(F.col("a.hsh"), F.col("b.hsh")))
-    n_union = F.col("a.n_sh") + F.col("b.n_sh") - n_inter
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (
-                ~F.col("b.is_new")
-                | (F.col("a.doc_id") < F.col("b.doc_id"))
-            ),
-        )
-        .filter((n_inter / n_union) >= JACCARD_THRESHOLD)
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("a_id"),
-            F.greatest("a.doc_id", "b.doc_id").alias("b_id"),
-            F.round(n_inter / n_union, 6).alias("jaccard"),
-        )
-        .distinct()
-        .orderBy("a_id", "b_id")
-    )
-
-
 # part table -> bucket keys of the persisted dedup index
 _INDEX_PARTS = {"sig": ["doc_id"], "band": ["band", "bkey"]}
 
@@ -1491,15 +1449,13 @@ def persist_dedup_index(
     pre-shuffle: every per-shard run after this probes both tables
     with ZERO index-side exchange (plan-asserted in
     tests/test_dedup_incremental.py), so a shard's cost scales with
-    the SHARD at any corpus size."""
-    from ..storage import write_bucketed
+    the SHARD at any corpus size. Replaces every ``{prefix}_*`` table,
+    tombstones included (``storage.persist_index``)."""
+    from ..storage import persist_index
 
     sig = signature_index(docs)
-    sig_t = write_bucketed(sig, f"{prefix}_sig", _INDEX_PARTS["sig"])
-    band_t = write_bucketed(
-        _band_rows(sig), f"{prefix}_band", _INDEX_PARTS["band"]
-    )
-    return sig_t, band_t
+    frames = {"sig": sig, "band": _band_rows(sig)}
+    return tuple(persist_index(prefix, frames, _INDEX_PARTS))
 
 
 def _band_rows(sig: DataFrame) -> DataFrame:
@@ -1509,56 +1465,65 @@ def _band_rows(sig: DataFrame) -> DataFrame:
     return _band_table(sig).select("band", "bkey", "doc_id")
 
 
-def incremental_dedup_pairs_indexed(
-    sig_table: DataFrame, band_table: DataFrame, new_sigs: DataFrame
+def incremental_dedup_pairs(
+    sig: DataFrame, band: DataFrame, new_sigs: DataFrame
 ) -> DataFrame:
-    """``incremental_dedup_pairs`` against the PERSISTED bucketed
-    index from ``persist_dedup_index`` -- value-identical output,
-    index-side-shuffle-free plan. Three stages:
+    """Verified near-dup pairs TOUCHING the arriving shard ``new_sigs``
+    against an index given as its signature frame ``sig`` and its band
+    rows ``band`` (``_band_rows(sig)``): the persisted bucketed tables
+    of ``persist_dedup_index`` / ``live_dedup_index``, or in-memory
+    frames. With the persisted tables the plan shuffles only the shard
+    side. Two stages, run once against the index and once against the
+    shard itself:
 
-      1. candidate probe: shard band keys equi-join the (band, bkey)-
-         clustered band table -- only the |shard| x LSH_BANDS probe
-         rows shuffle (into the bucket layout); candidates dedup on
-         the bare (shard_id, index_id) long pair, never on an array;
-      2. verification: candidate index ids join the doc_id-clustered
-         signature table for their hsh sets (again only the candidate
-         side moves); shard hsh sets ride a broadcast;
-      3. shard-vs-shard pairs reuse the in-memory band join against an
-         empty index (the a < b rule), disjoint from stage 2 by
-         construction."""
-    spark = new_sigs.sparkSession
-    a = _band_table(new_sigs).select("doc_id", "band", "bkey").alias("a")
-    b = band_table.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("s_id"),
-            F.col("b.doc_id").alias("i_id"),
-        )
-        .distinct()
-    )
+      1. candidate probe: shard band keys equi-join the band rows --
+         only the |shard| x LSH_BANDS probe rows shuffle (into the
+         bucket layout); candidates dedup on the bare (shard_id,
+         other_id) long pair, never on an array;
+      2. verification: candidate ids join the signature rows for their
+         hsh sets (again only the candidate side moves); shard hsh
+         sets ride a broadcast, and exact Jaccard decides.
+
+    Index-vs-index pairs are never formed (only shard rows probe).
+    Shard-vs-shard pairs are taken once by the a < b rule; they are
+    disjoint from the shard-vs-index pairs as long as the shard's ids
+    are not in the index (the sinks gate on that)."""
+    a = _band_rows(new_sigs).alias("a")
     s = new_sigs.select(F.col("doc_id").alias("s_id"), F.col("hsh").alias("s_hsh"))
-    i = sig_table.select(F.col("doc_id").alias("i_id"), F.col("hsh").alias("i_hsh"))
     n_inter = F.size(F.array_intersect(F.col("s_hsh"), F.col("i_hsh")))
     n_union = F.size("s_hsh") + F.size("i_hsh") - n_inter
-    cross = (
-        cand.join(F.broadcast(s), "s_id")
-        .join(i, "i_id")
-        .filter((n_inter / n_union) >= JACCARD_THRESHOLD)
-        .select(
-            F.least("s_id", "i_id").alias("a_id"),
-            F.greatest("s_id", "i_id").alias("b_id"),
-            F.round(n_inter / n_union, 6).alias("jaccard"),
+
+    def verified(sig: DataFrame, band: DataFrame, keep) -> DataFrame:
+        b = band.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bkey") == F.col("b.bkey"))
+                & keep(F.col("a.doc_id"), F.col("b.doc_id")),
+            )
+            .select(
+                F.col("a.doc_id").alias("s_id"),
+                F.col("b.doc_id").alias("i_id"),
+            )
+            .distinct()
         )
-    )
-    within = incremental_dedup_pairs(
-        spark.createDataFrame([], new_sigs.schema), new_sigs
-    )
+        i = sig.select(
+            F.col("doc_id").alias("i_id"), F.col("hsh").alias("i_hsh")
+        )
+        return (
+            cand.join(F.broadcast(s), "s_id")
+            .join(i, "i_id")
+            .filter((n_inter / n_union) >= JACCARD_THRESHOLD)
+            .select(
+                F.least("s_id", "i_id").alias("a_id"),
+                F.greatest("s_id", "i_id").alias("b_id"),
+                F.round(n_inter / n_union, 6).alias("jaccard"),
+            )
+        )
+
+    cross = verified(sig, band, lambda x, y: x != y)
+    within = verified(new_sigs, _band_rows(new_sigs), lambda x, y: x < y)
     return cross.unionByName(within).orderBy("a_id", "b_id")
 
 
@@ -1617,7 +1582,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs materialize); a real deployment persists the index once
     (persist_dedup_index) and grows it per shard through
     streaming.jobs.dedup_index_sink_writer, which probes the live
-    index with incremental_dedup_pairs_indexed --
+    index with the same incremental_dedup_pairs --
     tests/test_dedup_incremental.py drives that lifecycle.
 
     Measured at the 100x scale test (500k docs, 10% shard): the full
@@ -1634,7 +1599,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     index = sig.filter(~F.col("is_new")).drop("is_new")
     new_sigs = sig.filter(F.col("is_new")).drop("is_new")
-    out = incremental_dedup_pairs(index, new_sigs).localCheckpoint()
+    out = incremental_dedup_pairs(
+        index, _band_rows(index), new_sigs
+    ).localCheckpoint()
     sig.unpersist()
     return out
 

@@ -392,68 +392,18 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _nearest_cells_udf); the final candidate ranking stays on the
     rounded cosine + id tie-break as before.
 
+    Builds the index frames persist_ann_index writes (``_ivf_index``)
+    and searches them with ann_search, the one IVF probe.
+
     Scale shape: the centroid set is a deterministic sqrt(n)-rate hash
     sample, so the driver collect is dims-bounded and SUBLINEAR (the
     embedding_outliers precedent: K*dims*8B ~ 16 MB at n = 1e9) and
     rides into every executor inside the kernel closure. Assignment is
     then a single shuffle-free scan; the only corpus-sized shuffle
     left is the cell-keyed candidate join."""
-    # One cheap aggregate (parquet row-count metadata) to size the
-    # sampling rate; bounded single-row result, not a data collect.
-    n = load_table(spark, sf_dir, "embeddings").count()
-    m = centroid_modulus(n)
-    vecs = _vectors(spark, sf_dir)
-    cent_ids, cent_embs = _ivf_centroids(vecs, m)
-
-    def nearest_cells(side: DataFrame, id_col: str, n: int) -> DataFrame:
-        cells = _nearest_cells_udf(cent_ids, cent_embs, n)
-        return side.withColumn("c_id", F.explode(cells(F.col("emb"))))
-
-    assigned = nearest_cells(vecs, "vec_id", 1).select(
-        F.col("vec_id").alias("m_id"),
-        F.col("emb").alias("m_emb"),
-        F.col("norm").alias("m_norm"),
-        "c_id",
-    )
-    probes = nearest_cells(
-        vecs.filter(F.col("vec_id") < N_QUERIES), "vec_id", NPROBE
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        "c_id",
-    )
-    scored = (
-        # Broadcast the PROBES side: it is N_QUERIES x NPROBE rows (15)
-        # while `assigned` is the full corpus assignment. Left to the
-        # planner, the size estimate picked BuildRight and broadcast
-        # the corpus (200k rows x 64-dim doubles at the 100x replica)
-        # through the driver -- a build side that scales with n.
-        F.broadcast(probes)
-        .join(assigned, "c_id")
-        .filter(F.col("m_id") != F.col("q_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(_DOT.format(a="q_emb", b="m_emb"))
-                / (F.col("q_norm") * F.col("m_norm")),
-                6,
-            ),
-        )
-        .select("q_id", F.col("m_id").alias("neighbor_id"), "cosine")
-        # NO distinct: every index vector is assigned to EXACTLY one
-        # cell (explode of the n=1 nearest-cell array) and a probe's
-        # NPROBE cell ids are distinct, so a (q_id, m_id) pair can only
-        # arise in the single cell holding the member -- the
-        # ann_knn_join proof. The oracle keeps its DISTINCT and the
-        # gate pins row counts, so a violation cannot pass silently.
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .orderBy("q_id", "rank")
-    )
+    cents, members = _ivf_index(spark, sf_dir)
+    queries = _vectors(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES)
+    return ann_search(cents, members, queries)
 
 
 ANN_IVF_TOPK_SQL = f"""
@@ -1060,6 +1010,25 @@ def ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INDEX_PARTS = {"members": ["c_id"]}
 
 
+def _ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF index frames over the embeddings table: the centroid
+    frame (c_id, c_emb) of the sqrt(n)-rate sample and the member
+    frame (``_ann_members``) that assigns every vector to its nearest
+    centroid's cell."""
+    # One cheap aggregate (parquet row-count metadata) to size the
+    # sampling rate; bounded single-row result, not a data collect.
+    n = load_table(spark, sf_dir, "embeddings").count()
+    vecs = _vectors(spark, sf_dir)
+    cent_ids, cent_embs = _ivf_centroids(vecs, centroid_modulus(n))
+    cents = spark.createDataFrame(
+        list(zip(cent_ids, [list(e) for e in cent_embs])),
+        "c_id bigint, c_emb array<double>",
+    )
+    return cents, _ann_members(vecs, cent_ids, cent_embs)
+
+
 def persist_ann_index(
     spark: SparkSession, sf_dir: str, prefix: str = "ann_idx"
 ) -> tuple[DataFrame, DataFrame]:
@@ -1070,25 +1039,14 @@ def persist_ann_index(
     member-side shuffle -- the cell-keyed candidate join reads matching
     buckets directly (the dedup persist_dedup_index pattern applied to
     ANN; this is what 'build the index once, query it all day' means
-    on an engine with no index structures)."""
-    from ..storage import write_bucketed
+    on an engine with no index structures). Replaces every
+    ``{prefix}_*`` table, tombstones included
+    (``storage.persist_index``)."""
+    from ..storage import persist_index
 
-    n = load_table(spark, sf_dir, "embeddings").count()
-    m = centroid_modulus(n)
-    vecs = _vectors(spark, sf_dir)
-    cent_ids, cent_embs = _ivf_centroids(vecs, m)
-    cents_df = spark.createDataFrame(
-        list(zip(cent_ids, [list(e) for e in cent_embs])),
-        "c_id bigint, c_emb array<double>",
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {prefix}_cents")
-    cents_df.write.mode("overwrite").saveAsTable(f"{prefix}_cents")
-    members_t = write_bucketed(
-        _ann_members(vecs, cent_ids, cent_embs),
-        f"{prefix}_members",
-        _INDEX_PARTS["members"],
-    )
-    return spark.table(f"{prefix}_cents"), members_t
+    cents, members = _ivf_index(spark, sf_dir)
+    frames = {"cents": cents, "members": members}
+    return tuple(persist_index(prefix, frames, _INDEX_PARTS))
 
 
 def _ann_members(vecs: DataFrame, cent_ids, cent_embs) -> DataFrame:
@@ -1151,13 +1109,15 @@ def compact_ann_index(spark: SparkSession, prefix: str = "ann_idx") -> dict:
 def ann_search(
     cents: DataFrame, members: DataFrame, queries: DataFrame
 ) -> DataFrame:
-    """Top-{TOPK} search against a persisted index from
-    ``persist_ann_index``: queries (vec_id, emb array<double>) probe
+    """Top-{TOPK} search against IVF index frames -- the persisted
+    tables of ``persist_ann_index`` (``{prefix}_cents`` and
+    ``live_ann_members``) or ann_ivf_topk's fresh ones: queries
+    (vec_id, emb array<double>) probe
     their {NPROBE} nearest cells via the same Arrow kernel (centroids
     are a bounded collect off the tiny table), then the candidate join
     touches ONLY the probed cells' buckets -- per-query work is
-    NPROBE * cell size regardless of corpus size, and value-identical
-    to ann_ivf_topk run fresh over the same corpus."""
+    NPROBE * cell size regardless of corpus size. The distinct
+    guards callers that pass duplicate query ids."""
     cent_rows = cents.orderBy("c_id").collect()
     cent_ids = [r["c_id"] for r in cent_rows]
     cent_embs = [r["c_emb"] for r in cent_rows]
@@ -1170,7 +1130,11 @@ def ann_search(
     )
     probes = q.withColumn("c_id", F.explode(cells(F.col("q_emb"))))
     scored = (
-        probes.join(members, "c_id")
+        # broadcast the request-sized PROBES side: left to the planner,
+        # an in-memory member frame (ann_ivf_topk) was the build side,
+        # a corpus-sized broadcast through the driver
+        F.broadcast(probes)
+        .join(members, "c_id")
         .filter(F.col("m_id") != F.col("q_id"))
         .withColumn(
             "cosine",
@@ -2708,46 +2672,21 @@ def hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary, and ties break by doc_id.
 
     Scale shape: both input rankings are already top-K frames (the
-    BM25 TakeOrdered and the IVF probe's per-query top-{TOPK}), so
-    the fusion itself is a full-outer join of two constant-size
-    frames -- free at any corpus size. The corpus-sized work is
+    BM25 scorer's and the IVF probe's per-query top-k), so the fusion
+    (``_rrf_fuse``) is a full-outer join of two constant-size frames --
+    free at any corpus size. The corpus-sized work is
     exactly the two components' own audited plans; in production the
     semantic side swaps for ann_search over the persisted IVF index
     (persist_ann_index) and pays no assignment pass at all."""
-    from pyspark.sql.window import Window
+    from .textops import _bm25_fresh
 
-    from .textops import bm25_topk
-
-    lex = bm25_topk(spark, sf_dir)
-    w = Window.orderBy(F.desc("score_fp"), F.asc("doc_id"))
-    lex_r = lex.select(
-        "doc_id", F.row_number().over(w).alias("lex_rank")
+    lex_r = _bm25_fresh(spark, sf_dir).selectExpr(
+        "q_id", "doc_id", "rank AS lex_rank"
     )
-    sem_r = (
-        ann_ivf_topk(spark, sf_dir)
-        .filter(F.col("q_id") == HYBRID_QVEC)
-        .select(
-            F.col("neighbor_id").alias("doc_id"),
-            F.col("rank").alias("sem_rank"),
-        )
-    )
-    rrf = (
-        f"CASE WHEN lex_rank IS NULL THEN 0"
-        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + lex_rank) END"
-        f" + CASE WHEN sem_rank IS NULL THEN 0"
-        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + sem_rank) END"
-    )
-    return (
-        lex_r.join(sem_r, "doc_id", "full_outer")
-        .selectExpr(
-            "doc_id",
-            "CAST(COALESCE(lex_rank, 0) AS INT) AS lex_rank",
-            "CAST(COALESCE(sem_rank, 0) AS INT) AS sem_rank",
-            f"CAST({rrf} AS BIGINT) AS rrf_fp",
-        )
-        .orderBy(F.desc("rrf_fp"), F.asc("doc_id"))
-        .limit(HYBRID_TOPK)
-    )
+    sem_r = ann_ivf_topk(spark, sf_dir).filter(
+        F.col("q_id") == HYBRID_QVEC
+    ).selectExpr("0 AS q_id", "neighbor_id AS doc_id", "rank AS sem_rank")
+    return _rrf_fuse(lex_r, sem_r, HYBRID_TOPK).drop("q_id")
 
 
 def _hybrid_topk_sql() -> str:
@@ -2787,6 +2726,36 @@ LIMIT {HYBRID_TOPK}
 """
 
 
+def _rrf_fuse(lex_r: DataFrame, sem_r: DataFrame, k: int) -> DataFrame:
+    """Integer-exact reciprocal-rank fusion, per q_id, of a lexical
+    (q_id, doc_id, lex_rank) and a semantic (q_id, doc_id, sem_rank)
+    ranking: each ranking contributes 1000000 DIV ({HYBRID_RRF_K} +
+    rank) and a doc absent from one contributes 0 from it. Returns the
+    top-k (q_id, doc_id, lex_rank, sem_rank, rrf_fp) rows per q_id
+    (absent ranks read 0), ties broken by doc_id."""
+    rrf = (
+        f"CASE WHEN lex_rank IS NULL THEN 0"
+        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + lex_rank) END"
+        f" + CASE WHEN sem_rank IS NULL THEN 0"
+        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + sem_rank) END"
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("rrf_fp"), F.asc("doc_id"))
+    return (
+        lex_r.join(sem_r, ["q_id", "doc_id"], "full_outer")
+        .selectExpr(
+            "q_id",
+            "doc_id",
+            "CAST(COALESCE(lex_rank, 0) AS INT) AS lex_rank",
+            "CAST(COALESCE(sem_rank, 0) AS INT) AS sem_rank",
+            f"CAST({rrf} AS BIGINT) AS rrf_fp",
+        )
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+        .orderBy("q_id", F.desc("rrf_fp"), F.asc("doc_id"))
+    )
+
+
 def hybrid_search(
     spark: SparkSession,
     terms: tuple[str, ...] | list[str],
@@ -2797,56 +2766,19 @@ def hybrid_search(
 ) -> DataFrame:
     """hybrid_topk's PRODUCTION form: reciprocal-rank fusion of an
     arbitrary term query against the persisted lexical index
-    (textops.bm25_search over persist_text_index) and an arbitrary
-    query vector against the persisted IVF index (ann_search over
-    persist_ann_index's live members) -- both sides zero-rescan
-    probes, both sides tombstone-aware, so a takedown disappears from
-    hybrid retrieval within one tombstone append on each index.
-    Fusion is the same integer-exact RRF as the registry query
-    (1000000 DIV ({HYBRID_RRF_K} + rank), absence contributes 0, ties
-    break by doc_id) over two constant-size top-K frames -- per-query
-    cost is the two index probes, independent of corpus size."""
-    from pyspark.sql.window import Window
-
-    from .textops import BM25_TOPK, bm25_search
-
-    lex = bm25_search(spark, terms, k=BM25_TOPK, prefix=text_prefix)
-    w = Window.orderBy(F.desc("score_fp"), F.asc("doc_id"))
-    lex_r = lex.select(
-        "doc_id", F.row_number().over(w).alias("lex_rank")
-    )
+    (persist_text_index) and an arbitrary query vector against the
+    persisted IVF index (persist_ann_index's live members) -- both
+    sides zero-rescan probes, both sides tombstone-aware, so a
+    takedown disappears from hybrid retrieval within one tombstone
+    append on each index. It is ``hybrid_search_batch`` on a one-row
+    request (q_id 0), returned without the q_id column."""
     q = spark.createDataFrame(
-        [(-1, [float(x) for x in query_emb])],
-        "vec_id bigint, emb array<double>",
+        [(0, list(terms), [float(x) for x in query_emb])],
+        "q_id bigint, terms array<string>, emb array<double>",
     )
-    sem_r = (
-        ann_search(
-            spark.table(f"{ann_prefix}_cents"),
-            live_ann_members(spark, ann_prefix),
-            q,
-        )
-        .select(
-            F.col("neighbor_id").alias("doc_id"),
-            F.col("rank").alias("sem_rank"),
-        )
-    )
-    rrf = (
-        f"CASE WHEN lex_rank IS NULL THEN 0"
-        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + lex_rank) END"
-        f" + CASE WHEN sem_rank IS NULL THEN 0"
-        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + sem_rank) END"
-    )
-    return (
-        lex_r.join(sem_r, "doc_id", "full_outer")
-        .selectExpr(
-            "doc_id",
-            "CAST(COALESCE(lex_rank, 0) AS INT) AS lex_rank",
-            "CAST(COALESCE(sem_rank, 0) AS INT) AS sem_rank",
-            f"CAST({rrf} AS BIGINT) AS rrf_fp",
-        )
-        .orderBy(F.desc("rrf_fp"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return hybrid_search_batch(
+        spark, q, k, text_prefix=text_prefix, ann_prefix=ann_prefix
+    ).drop("q_id")
 
 
 def hybrid_search_batch(
@@ -2856,17 +2788,15 @@ def hybrid_search_batch(
     text_prefix: str = "text_idx",
     ann_prefix: str = "ann_idx",
 ) -> DataFrame:
-    """Batched ``hybrid_search``: a REQUEST FRAME of queries --
-    (q_id BIGINT, terms ARRAY<STRING>, emb ARRAY<DOUBLE>) -- answered
-    in ONE pass over each persisted index instead of one probe pair
-    per query. Per q_id the output is row-identical to
-    ``hybrid_search(terms, emb)`` (equality test-pinned): the lexical
-    side scores the live postings once for the UNION of all query
-    terms (the bm25_batch_topk amortization applied to the catalog
-    index, tombstone-aware stats included), the semantic side hands
+    """Hybrid retrieval for a REQUEST FRAME of queries -- (q_id BIGINT,
+    terms ARRAY<STRING>, emb ARRAY<DOUBLE>) -- answered in ONE pass
+    over each persisted index instead of one probe pair per query:
+    the lexical side scores the live postings once for the UNION of
+    all query terms with the BM25 scorer (``textops._bm25_rank``,
+    tombstone-aware stats included), the semantic side hands
     ann_search ALL query vectors at once (one kernel cell-assignment
-    pass, one bucketed candidate join), and the integer-exact RRF
-    fuses per (q_id, doc_id).
+    pass, one bucketed candidate join), and ``_rrf_fuse`` fuses per
+    (q_id, doc_id).
 
     Scale shape: the term union and the query vectors are
     request-sized (they ride broadcasts), both index probes stay
@@ -2877,83 +2807,31 @@ def hybrid_search_batch(
     probe the index under the reserved negative range -1-q_id, so a
     query can never be mistaken for an indexed member and
     self-excluded)."""
-    from .textops import BM25_TOPK, _live_text_stats, live_text_index
+    from ..storage import index_table
+    from .textops import (
+        BM25_TOPK,
+        _bm25_rank,
+        _live_text_stats,
+        live_text_index,
+    )
 
-    qterms = queries.select(
-        "q_id", F.explode("terms").alias("t")
-    ).distinct()
-    term_union = [
-        r["t"] for r in qterms.select("t").distinct().collect()
-    ]
+    qterms = queries.select("q_id", F.explode("terms").alias("t")).distinct()
+    terms = [r["t"] for r in qterms.select("t").distinct().collect()]
     post_t, _doc_t = live_text_index(spark, text_prefix)
-    tf = post_t.filter(F.col("t").isin(term_union))
-    dfc = tf.groupBy("t").agg(F.count("*").alias("df"))
-    stats = _live_text_stats(spark, text_prefix).selectExpr(
-        "CAST(n_docs AS DOUBLE) AS n_docs",
-        "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl",
+    lex_r = _bm25_rank(
+        post_t.filter(F.col("t").isin(terms)),
+        qterms,
+        _live_text_stats(spark, text_prefix),
+        BM25_TOPK,
+    ).selectExpr("q_id", "doc_id", "rank AS lex_rank")
+    sem_r = ann_search(
+        index_table(spark, f"{ann_prefix}_cents"),
+        live_ann_members(spark, ann_prefix),
+        queries.selectExpr("-1 - q_id AS vec_id", "emb"),
+    ).selectExpr(
+        "-1 - q_id AS q_id", "neighbor_id AS doc_id", "rank AS sem_rank"
     )
-    from .textops import BM25_B, BM25_K1
-
-    lex_scored = (
-        tf.join(F.broadcast(qterms), "t")
-        .join(F.broadcast(dfc), "t")
-        .crossJoin(F.broadcast(stats))
-        .selectExpr(
-            "q_id",
-            "doc_id",
-            f"""CAST(round(
-                 ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                 * (tf * ({BM25_K1} + 1.0))
-                 / (tf + {BM25_K1} * (1.0 - {BM25_B}
-                    + {BM25_B} * dl / avgdl))
-                 * 1000000, 0) AS BIGINT) AS term_score_fp""",
-        )
-        .groupBy("q_id", "doc_id")
-        .agg(F.sum("term_score_fp").alias("score_fp"))
-    )
-    wq = Window.partitionBy("q_id").orderBy(
-        F.desc("score_fp"), F.asc("doc_id")
-    )
-    lex_r = (
-        lex_scored.withColumn("lex_rank", F.row_number().over(wq))
-        .filter(F.col("lex_rank") <= BM25_TOPK)
-        .select("q_id", "doc_id", "lex_rank")
-    )
-    sem_r = (
-        ann_search(
-            spark.table(f"{ann_prefix}_cents"),
-            live_ann_members(spark, ann_prefix),
-            queries.selectExpr("-1 - q_id AS vec_id", "emb"),
-        )
-        .selectExpr(
-            "-1 - q_id AS q_id",
-            "neighbor_id AS doc_id",
-            "rank AS sem_rank",
-        )
-    )
-    rrf = (
-        f"CASE WHEN lex_rank IS NULL THEN 0"
-        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + lex_rank) END"
-        f" + CASE WHEN sem_rank IS NULL THEN 0"
-        f" ELSE 1000000 DIV ({HYBRID_RRF_K} + sem_rank) END"
-    )
-    wf = Window.partitionBy("q_id").orderBy(
-        F.desc("rrf_fp"), F.asc("doc_id")
-    )
-    return (
-        lex_r.join(sem_r, ["q_id", "doc_id"], "full_outer")
-        .selectExpr(
-            "q_id",
-            "doc_id",
-            "CAST(COALESCE(lex_rank, 0) AS INT) AS lex_rank",
-            "CAST(COALESCE(sem_rank, 0) AS INT) AS sem_rank",
-            f"CAST({rrf} AS BIGINT) AS rrf_fp",
-        )
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("q_id", F.desc("rrf_fp"), F.asc("doc_id"))
-    )
+    return _rrf_fuse(lex_r, sem_r, k)
 
 
 QUERIES = {

@@ -975,37 +975,51 @@ BM25_B = 0.75
 BM25_TOPK = 20
 
 
-def _bm25_rank(tf: DataFrame, stats: DataFrame, k: int) -> DataFrame:
-    """The BM25 scoring core shared by every lexical entry point
-    (fresh bm25_topk, the memoized bm25_indexed_topk, the persisted
-    bm25_search): rank the matching postings.
+def _bm25_rank(
+    post: DataFrame, qmap: DataFrame, stats: DataFrame, k: int
+) -> DataFrame:
+    """The one BM25 scorer, behind every lexical entry point (fresh
+    bm25_topk, the memoized registry forms, the persisted bm25_search
+    and the lexical side of hybrid_search_batch): the top-k documents
+    of each query.
 
-    tf:    (doc_id, t, dl, tf) -- postings ALREADY restricted to the
+    post:  (t, doc_id, tf, dl) postings ALREADY restricted to the
            query terms (the caller's scan predicate / bucket prune);
-    stats: one row (n_docs DOUBLE, avgdl DOUBLE) over the SAME corpus
-           the postings describe.
+    qmap:  (q_id, t) -- the terms of each query, broadcast;
+    stats: one row (n_docs BIGINT, sum_dl BIGINT) over the SAME corpus
+           the postings describe (avgdl = CAST(sum_dl AS DOUBLE) /
+           n_docs).
 
     df per term is derived from the postings slice itself (a doc
     containing t contributes one posting row for t, so the slice IS
     the df evidence) -- which is what keeps the persisted index's
     append and tombstone legs consistent for free: filter the
     postings and df follows. df rides a count(*) OVER (PARTITION BY t)
-    on the slice rather than a groupBy+join-back: the join form made
-    Catalyst evaluate the caller's whole tf subtree twice, once per
-    join side -- for the fresh entry points that is a SECOND full
-    corpus token explode (plan-verified on bm25_topk/hybrid_topk: two
-    Generate chains -> one; guide 2.4). The slice itself is
-    O(matching postings), so the window is trivially small. idf uses
+    on the slice, before the qmap fan-out, rather than a groupBy +
+    join-back: the join form made Catalyst evaluate the caller's
+    whole postings subtree twice, once per join side -- for the fresh
+    entry points that is a SECOND full corpus token explode. idf uses
     the standard ln(1 + (N - df + 0.5)/(df + 0.5)) form; per-(doc,
     term) scores quantize to 1e-6 fixed point BEFORE the per-doc sum
     (the dsir/bigram integer-log convention), so ranking compares
-    identical integers on both engines, doc_id breaking ties."""
+    identical integers on both engines, doc_id breaking ties.
+
+    Returns (q_id, rank, doc_id, score_fp) rows with rank <= k,
+    ordered by q_id and rank. The per-q_id row_number <= k plans as a
+    partial WindowGroupLimit before the q_id shuffle, so no query's
+    scored docs are ever sorted whole."""
     from pyspark.sql.window import Window
 
+    stats = stats.selectExpr(
+        "CAST(n_docs AS DOUBLE) AS n_docs",
+        "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl",
+    )
     scored = (
-        tf.withColumn("df", F.count("*").over(Window.partitionBy("t")))
+        post.withColumn("df", F.count("*").over(Window.partitionBy("t")))
+        .join(F.broadcast(qmap), "t")
         .crossJoin(F.broadcast(stats))
         .selectExpr(
+            "q_id",
             "doc_id",
             f"""CAST(round(
                  ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
@@ -1014,13 +1028,37 @@ def _bm25_rank(tf: DataFrame, stats: DataFrame, k: int) -> DataFrame:
                     + {BM25_B} * dl / avgdl))
                  * 1000000, 0) AS BIGINT) AS term_score_fp""",
         )
-        .groupBy("doc_id")
+        .groupBy("q_id", "doc_id")
         .agg(F.sum("term_score_fp").alias("score_fp"))
     )
+    w = Window.partitionBy("q_id").orderBy(F.desc("score_fp"), F.asc("doc_id"))
     return (
-        scored.orderBy(F.desc("score_fp"), F.asc("doc_id"))
-        .limit(k)
-        .selectExpr("doc_id", "score_fp")
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", "doc_id", "score_fp")
+        .orderBy("q_id", "rank")
+    )
+
+
+def _bm25_terms(
+    post: DataFrame, terms, stats: DataFrame, k: int = BM25_TOPK
+) -> DataFrame:
+    """``_bm25_rank`` for ONE term query (q_id 0), the postings
+    filtered to ``terms`` at the scan."""
+    qmap = post.sparkSession.createDataFrame(
+        [(0, t) for t in terms], "q_id int, t string"
+    )
+    terms_only = post.filter(F.col("t").isin(list(terms)))
+    return _bm25_rank(terms_only, qmap, stats, k)
+
+
+def _bm25_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """bm25_topk's ranking with its q_id and rank columns (hybrid_topk
+    fuses on the rank): postings and stats built fresh from the
+    documents table."""
+    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    return _bm25_terms(
+        build_postings(docs), BM25_TERMS, build_text_stats(docs)
     )
 
 
@@ -1033,31 +1071,16 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the docs about X'). Scoring semantics live in ``_bm25_rank``.
 
     Scale shape: one token explode filtered to the |query| terms
-    IMMEDIATELY (the scan's predicate -- everything downstream is
-    O(matching postings), not corpus-sized), per-(doc, term) tf
-    aggregate, N / df / avgdl as one bounded global aggregate joined
-    back broadcast, final TakeOrdered top-{BM25_TOPK}. The per-doc
-    length rides the same scan as a projection. This self-contained
-    form pays one corpus token scan PER CALL; repeated audits go
-    through the persisted postings instead (persist_text_index /
-    bm25_search, or the memo-backed bm25_indexed_topk registry
-    twin)."""
-    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    terms = ", ".join(f"'{t}'" for t in BM25_TERMS)
-    tok = docs.selectExpr(
-        "doc_id", f"size({_TOKS}) AS dl", f"explode({_TOKS}) AS t"
-    )
-    tf = (
-        tok.filter(f"t IN ({terms})")
-        .groupBy("doc_id", "t", "dl")
-        .agg(F.count("*").alias("tf"))
-    )
-    stats = docs.selectExpr(
-        "CAST(count(*) AS DOUBLE) AS n_docs",
-        f"CAST(sum(size({_TOKS})) AS DOUBLE)"
-        " / count(*) AS avgdl",
-    )
-    return _bm25_rank(tf, stats, BM25_TOPK)
+    IMMEDIATELY (the filter pushes below the postings aggregate --
+    everything downstream is O(matching postings), not corpus-sized),
+    per-(doc, term) tf aggregate, N / sum_dl as one bounded global
+    aggregate joined back broadcast, per-query top-{BM25_TOPK}. The
+    per-doc length rides the same scan as a projection. This
+    self-contained form pays one corpus token scan PER CALL; repeated
+    audits go through the persisted postings instead
+    (persist_text_index / bm25_search, or the memo-backed
+    bm25_indexed_topk registry twin)."""
+    return _bm25_fresh(spark, sf_dir).select("doc_id", "score_fp")
 
 
 BM25_TOPK_SQL = f"""
@@ -1187,14 +1210,11 @@ def bm25_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference between one corpus pass PER AUDIT QUERY
     (bm25_topk's honest self-contained form) and one postings build
     per corpus snapshot amortized over every audit."""
-    tf = _postings_table(spark, sf_dir).filter(
-        F.col("t").isin(list(BM25_TERMS))
-    )
-    stats = _text_stats_table(spark, sf_dir).selectExpr(
-        "CAST(n_docs AS DOUBLE) AS n_docs",
-        "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl",
-    )
-    return _bm25_rank(tf, stats, BM25_TOPK)
+    return _bm25_terms(
+        _postings_table(spark, sf_dir),
+        BM25_TERMS,
+        _text_stats_table(spark, sf_dir),
+    ).select("doc_id", "score_fp")
 
 
 # Fixture batch: three term queries with mixed df profiles (dup ~5%
@@ -1215,58 +1235,24 @@ def bm25_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     then scores from its own (q_id, t) slice of that shared frame, so
     Q queries cost one postings probe + O(Q x matching docs)
     arithmetic instead of Q corpus passes -- the amortization
-    argument of the persisted index extended across queries. Scoring
-    is _bm25_rank's exact integer form (1e-6 fixed point per (doc,
-    term), integer per-doc sum); ranks break ties by doc_id.
+    argument of the persisted index extended across queries. It is
+    ``_bm25_rank`` on the whole batch.
 
     Scale shape: postings filtered to the term union at the scan
-    (pushed In-filter / bucket prune), ONE per-term df aggregate, a
+    (pushed In-filter / bucket prune), ONE per-term df window, a
     broadcast (q_id, t) map fanning each posting to the queries using
     its term, per-(q_id, doc) integer sums, then a q_id-partitioned
     top-{BM25_TOPK} window over O(matching docs) rows per query --
     never corpus-sized, never a global window."""
     queries = [
-        (qi, t)
-        for qi, terms in enumerate(BM25_BATCH_QUERIES)
-        for t in terms
+        (qi, t) for qi, terms in enumerate(BM25_BATCH_QUERIES) for t in terms
     ]
-    all_terms = sorted({t for _qi, t in queries})
-    qmap = spark.createDataFrame(queries, "q_id int, t string")
-    tf = _postings_table(spark, sf_dir).filter(
-        F.col("t").isin(all_terms)
-    )
-    dfc = tf.groupBy("t").agg(F.count("*").alias("df"))
-    stats = _text_stats_table(spark, sf_dir).selectExpr(
-        "CAST(n_docs AS DOUBLE) AS n_docs",
-        "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl",
-    )
-    scored = (
-        tf.join(F.broadcast(qmap), "t")
-        .join(F.broadcast(dfc), "t")
-        .crossJoin(F.broadcast(stats))
-        .selectExpr(
-            "q_id",
-            "doc_id",
-            f"""CAST(round(
-                 ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                 * (tf * ({BM25_K1} + 1.0))
-                 / (tf + {BM25_K1} * (1.0 - {BM25_B}
-                    + {BM25_B} * dl / avgdl))
-                 * 1000000, 0) AS BIGINT) AS term_score_fp""",
-        )
-        .groupBy("q_id", "doc_id")
-        .agg(F.sum("term_score_fp").alias("score_fp"))
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score_fp"), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_TOPK)
-        .select("q_id", "rank", "doc_id", "score_fp")
-        .orderBy("q_id", "rank")
+    post = _postings_table(spark, sf_dir)
+    return _bm25_rank(
+        post.filter(F.col("t").isin(sorted({t for _qi, t in queries}))),
+        spark.createDataFrame(queries, "q_id int, t string"),
+        _text_stats_table(spark, sf_dir),
+        BM25_TOPK,
     )
 
 
@@ -1343,30 +1329,24 @@ def bm25_discovered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-literal query can express.
 
     Scale shape: the memoized postings scanned once for the per-term
-    df aggregate (map-side-combinable, term-keyed), a
-    {BM25_DISC_TERMS_K}-row TakeOrdered term pick, then the probe
-    joins postings against the BROADCAST picked-term frame (the
-    dynamic-term analogue of the pushed In-filter) -- everything
-    after the df aggregate is O(matching postings)."""
+    df aggregate (map-side-combinable, term-keyed) and a
+    {BM25_DISC_TERMS_K}-row TakeOrdered term pick, collected to the
+    driver; the probe is then bm25_indexed_topk's, with the picked
+    terms as its pushed In-filter -- O(matching postings)."""
     post = _postings_table(spark, sf_dir)
-    stats_int = _text_stats_table(spark, sf_dir)
-    dfc = post.groupBy("t").agg(F.count("*").alias("df"))
+    stats = _text_stats_table(spark, sf_dir)
     picked = (
-        dfc.crossJoin(F.broadcast(stats_int.select("n_docs")))
-        .selectExpr(
-            "t",
-            f"abs(df - n_docs DIV {BM25_DISC_DF_DIV}) AS dist",
-        )
+        post.groupBy("t")
+        .agg(F.count("*").alias("df"))
+        .crossJoin(F.broadcast(stats.select("n_docs")))
+        .selectExpr("t", f"abs(df - n_docs DIV {BM25_DISC_DF_DIV}) AS dist")
         .orderBy(F.asc("dist"), F.asc("t"))
         .limit(BM25_DISC_TERMS_K)
-        .select("t")
+        .collect()
     )
-    tf = post.join(F.broadcast(picked), "t")
-    stats = stats_int.selectExpr(
-        "CAST(n_docs AS DOUBLE) AS n_docs",
-        "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl",
+    return _bm25_terms(post, [r["t"] for r in picked], stats).select(
+        "doc_id", "score_fp"
     )
-    return _bm25_rank(tf, stats, BM25_TOPK)
 
 
 def _bm25_discovered_topk_sql() -> str:
@@ -1563,23 +1543,17 @@ def persist_text_index(
                      BIGINT deltas; probes SUM it (O(#appends) rows)
                      so appends never rewrite anything.
 
-    Returns (postings table, doc table)."""
-    from ..storage import write_bucketed
+    Replaces every ``{prefix}_*`` table, tombstones included
+    (``storage.persist_index``). Returns (postings table, doc
+    table)."""
+    from ..storage import persist_index
 
-    spark = docs.sparkSession
-    post_t = write_bucketed(
-        build_postings(docs), f"{prefix}_post", _INDEX_PARTS["post"]
-    )
-    doc_t = write_bucketed(
-        docs.selectExpr("doc_id", f"size({_TOKS}) AS dl"),
-        f"{prefix}_doc",
-        _INDEX_PARTS["doc"],
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {prefix}_stats")
-    build_text_stats(docs).write.format("parquet").saveAsTable(
-        f"{prefix}_stats"
-    )
-    return post_t, doc_t
+    frames = {
+        "post": build_postings(docs),
+        "doc": docs.selectExpr("doc_id", f"size({_TOKS}) AS dl"),
+        "stats": build_text_stats(docs),
+    }
+    return tuple(persist_index(prefix, frames, _INDEX_PARTS)[:2])
 
 
 def tombstone_text_index(
@@ -1617,16 +1591,20 @@ def _live_text_stats(spark: SparkSession, prefix: str) -> DataFrame:
     stats append-log summed, minus the tombstoned docs' exact mass
     (their count and dl come from the doc_id-bucketed doc table -- an
     O(removed)-row lookup, never a postings scan)."""
-    base = spark.table(f"{prefix}_stats").agg(
+    from ..storage import index_table
+
+    base = index_table(spark, f"{prefix}_stats").agg(
         F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
     )
-    tomb = f"{prefix}_tomb"
-    if spark.catalog.tableExists(tomb):
+    dead = index_table(spark, f"{prefix}_tomb")
+    if dead is not None:
         dead = (
-            spark.table(tomb)
-            .select("doc_id")
+            dead.select("doc_id")
             .distinct()
-            .join(spark.table(f"{prefix}_doc"), "doc_id")
+            .join(
+                index_table(spark, f"{prefix}_doc", _INDEX_PARTS["doc"]),
+                "doc_id",
+            )
             .agg(
                 F.count("*").alias("d_docs"),
                 F.coalesce(F.sum("dl"), F.lit(0)).alias("d_dl"),
@@ -1652,15 +1630,12 @@ def bm25_search(
     Value-identical to bm25_topk rebuilt fresh over the index's live
     document set (plan + equality asserted in
     tests/test_text_index.py). This is the 'probe it all day' half of
-    persist_text_index; hybrid_search fuses it with the persisted ANN
-    index's ann_search."""
+    persist_text_index, scored by ``_bm25_rank``; hybrid_search fuses
+    the same scorer's ranking with the persisted ANN index's
+    ann_search."""
     post_t, _doc_t = live_text_index(spark, prefix)
-    tf = post_t.filter(F.col("t").isin(list(terms)))
-    stats = _live_text_stats(spark, prefix).selectExpr(
-        "CAST(n_docs AS DOUBLE) AS n_docs",
-        "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl",
-    )
-    return _bm25_rank(tf, stats, k)
+    stats = _live_text_stats(spark, prefix)
+    return _bm25_terms(post_t, terms, stats, k).select("doc_id", "score_fp")
 
 
 def compact_text_index(spark: SparkSession, prefix: str = "text_idx") -> dict:
@@ -1673,14 +1648,15 @@ def compact_text_index(spark: SparkSession, prefix: str = "text_idx") -> dict:
     table is dropped: a crash after it leaves exact stats (no dead
     rows remain to subtract), and a crash between the doc rewrite and
     it is repaired by running the compaction again."""
-    from ..storage import compact_index
+    from ..storage import compact_index, index_table, write_bucketed
 
     def write_stats() -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_stats")
-        spark.table(f"{prefix}_doc").selectExpr(
+        doc = index_table(spark, f"{prefix}_doc", _INDEX_PARTS["doc"])
+        stats = doc.selectExpr(
             "CAST(count(*) AS BIGINT) AS n_docs",
             "CAST(sum(dl) AS BIGINT) AS sum_dl",
-        ).write.format("parquet").saveAsTable(f"{prefix}_stats")
+        )
+        write_bucketed(stats, f"{prefix}_stats", ())
 
     return compact_index(spark, prefix, _INDEX_PARTS, write_stats)
 

@@ -13,9 +13,10 @@ partition pruning serves the time filters (SURVEY.md P12/P13), buckets
 serve the key joins.
 
 The three persisted index families (dedup, ANN, text) share one
-layout (INDEX_BUCKETS buckets, sorted on the bucket keys), one append
-gate (unindexed_rows) and one tombstone lifecycle: tombstone_ids,
-live_index, compact_index.
+layout (INDEX_BUCKETS buckets, sorted on the bucket keys), one table
+resolver (index_table: the indexes survive a restart), one build
+(persist_index), one append gate (unindexed_rows) and one tombstone
+lifecycle: tombstone_ids, live_index, compact_index.
 """
 
 from __future__ import annotations
@@ -29,45 +30,113 @@ from pyspark.sql import DataFrame, SparkSession
 INDEX_BUCKETS = 8  # bucket count of every persisted index table
 
 
+def _warehouse_dir(spark: SparkSession, table: str) -> str:
+    from urllib.parse import urlparse
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    return os.path.abspath(f"{warehouse}/{table}")
+
+
+def index_table(
+    spark: SparkSession, table: str, keys: list[str] = ()
+) -> DataFrame | None:
+    """The persisted index table ``table``, or None if there is none.
+    The session catalog is in-memory, so a new process does not know
+    the tables an earlier one wrote, but their warehouse dirs survive:
+    a table missing from the catalog whose dir holds parquet files is
+    registered over that dir, columns from the parquet schema and
+    bucketed on ``keys`` if given (the part tables). A swap that
+    write_bucketed left half done, old dir gone and
+    ``{table}__new`` complete, is finished first. Every read, append
+    and existence check of an index table goes through here."""
+    if not spark.catalog.tableExists(table):
+        path = _warehouse_dir(spark, table)
+        if not os.path.isdir(path) and os.path.exists(
+            f"{path}__new/_SUCCESS"
+        ):
+            os.rename(f"{path}__new", path)
+        if not os.path.isdir(path) or not any(
+            f.endswith(".parquet") for f in os.listdir(path)
+        ):
+            return None
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in spark.read.parquet(path).schema
+        )
+        k = ", ".join(keys)
+        spec = (
+            f" CLUSTERED BY ({k}) SORTED BY ({k}) INTO {INDEX_BUCKETS} BUCKETS"
+            if keys
+            else ""
+        )
+        spark.sql(
+            f"CREATE TABLE {table} ({cols}) USING parquet{spec}"
+            f" LOCATION '{path}'"
+        )
+    return spark.table(table)
+
+
+def drop_index_table(spark: SparkSession, table: str) -> None:
+    """Drop ``table`` and delete its warehouse dir: DROP keeps the
+    files of a table index_table registered, and a later index_table
+    would bring them back."""
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(_warehouse_dir(spark, table), ignore_errors=True)
+
+
 def append_bucketed(df: DataFrame, table: str, keys: list[str]) -> None:
-    """Append df to a catalog table hash-clustered and sorted by keys
-    into INDEX_BUCKETS bucket files (creating the table if absent).
-    Each append adds bucket files and never rewrites existing ones, so
-    joins and aggregations keyed on ``keys`` keep skipping their
-    shuffle (and sort) across appends."""
-    (
-        df.write.mode("append")
-        .format("parquet")
-        .bucketBy(INDEX_BUCKETS, *keys)
-        .sortBy(*keys)
-        .saveAsTable(table)
-    )
+    """Append df to the index table ``table`` (resolved through
+    index_table first, created if absent), hash-clustered and sorted by
+    keys into INDEX_BUCKETS bucket files; with no keys, plain parquet
+    (the tombstone and stats side tables). Each append adds files and
+    never rewrites existing ones, so joins and aggregations keyed on
+    ``keys`` keep skipping their shuffle (and sort) across appends."""
+    index_table(df.sparkSession, table, keys)
+    w = df.write.mode("append").format("parquet")
+    if keys:
+        w = w.bucketBy(INDEX_BUCKETS, *keys).sortBy(*keys)
+    w.saveAsTable(table)
 
 
 def write_bucketed(df: DataFrame, table: str, keys: list[str]) -> DataFrame:
     """Replace ``table`` with df in the append_bucketed layout; returns
-    the catalog-backed table."""
+    the catalog-backed table. The rows are written to the sibling
+    table ``{table}__new`` first and swapped in only once complete
+    (drop the old table, rename), so df may read ``table`` itself and
+    a failed write leaves the old table whole."""
     spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # the in-memory catalog forgets tables across sessions but their
-    # warehouse directories survive -- clear any orphaned location
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
-    append_bucketed(df, table, keys)
+    drop_index_table(spark, f"{table}__new")
+    append_bucketed(df, f"{table}__new", keys)
+    drop_index_table(spark, table)
+    spark.sql(f"ALTER TABLE {table}__new RENAME TO {table}")
     return spark.table(table)
 
 
 # --------------------------------------------------------------------------
-# The tombstone lifecycle of the persisted index families (dedup, ANN,
-# text). An index ``prefix`` owns bucketed part tables
-# ``{prefix}_{part}``, each carrying the family's id column, and one
-# ``{prefix}_tomb`` side table of removed ids (that id column alone).
+# The lifecycle of the persisted index families (dedup, ANN, text). An
+# index ``prefix`` owns part tables ``{prefix}_{part}`` (bucketed on
+# the family's ``parts[part]`` keys, each carrying the family's id
+# column), optional plain side tables (centroids, stats) and one
+# ``{prefix}_tomb`` table of removed ids (that id column alone).
 # Removal only deletes rows -- no surviving row depends on a removed
 # one -- so an O(removed)-row side table plus a probe-time anti-join is
 # exact, and compaction (the LSM trade) folds it into one rewrite when
 # the anti-join costs more than the rewrite.
+
+
+def persist_index(
+    prefix: str, frames: dict[str, DataFrame], parts: dict[str, list[str]]
+) -> list[DataFrame]:
+    """Replace the whole index ``prefix``: each ``frames[part]`` becomes
+    ``{prefix}_{part}`` (bucketed on ``parts.get(part)``), then the
+    tombstone table is dropped, since a rebuilt index has no removed
+    rows. Returns the tables in ``frames`` order."""
+    tables = [
+        write_bucketed(df, f"{prefix}_{part}", parts.get(part, ()))
+        for part, df in frames.items()
+    ]
+    drop_index_table(tables[0].sparkSession, f"{prefix}_tomb")
+    return tables
 
 
 def tombstone_ids(
@@ -79,12 +148,13 @@ def tombstone_ids(
     reads the table once. Returns the number of NEW tombstones."""
     tomb = f"{prefix}_tomb"
     ids = ids.select(id_col).distinct()
-    if spark.catalog.tableExists(tomb):
-        ids = ids.join(spark.table(tomb), id_col, "left_anti")
+    dead = index_table(spark, tomb)
+    if dead is not None:
+        ids = ids.join(dead, id_col, "left_anti")
     ids = ids.localCheckpoint()  # pin: read the table once, pre-append
     n_new = ids.count()
     if n_new:
-        ids.write.mode("append").format("parquet").saveAsTable(tomb)
+        append_bucketed(ids, tomb, ())
     return n_new
 
 
@@ -96,20 +166,31 @@ def live_index(
     tombstone table (AQE broadcasts it at size), so each part still
     scans its buckets with zero exchange and a probe costs the probe
     plus the tombstone count, never the index."""
-    tables = tuple(spark.table(f"{prefix}_{part}") for part in parts)
-    tomb = f"{prefix}_tomb"
-    if not spark.catalog.tableExists(tomb):
+    # a missing part raises the catalog's TABLE_OR_VIEW_NOT_FOUND
+    tables = tuple(
+        index_table(spark, f"{prefix}_{part}", keys)
+        or spark.table(f"{prefix}_{part}")
+        for part, keys in parts.items()
+    )
+    dead = index_table(spark, f"{prefix}_tomb")
+    if dead is None:
         return tables
-    dead = spark.table(tomb).distinct()
+    dead = dead.distinct()
     return tuple(t.join(dead, dead.columns, "left_anti") for t in tables)
 
 
 def unindexed_rows(
-    batch: DataFrame, prefix: str, member: str, id_col: str, compact
+    batch: DataFrame,
+    prefix: str,
+    member: tuple[str, list[str]],
+    id_col: str,
+    compact,
 ) -> DataFrame:
     """The rows of ``batch`` whose ``id_col`` the index ``prefix`` does
     not hold yet: the one append gate of the index sinks, which then
-    append what it returns with ``append_bucketed``. In order:
+    append what it returns with ``append_bucketed``. ``member`` is the
+    membership part (one row per indexed id) and its bucket keys. In
+    order:
 
       1. fold first: if the batch carries an id in ``{prefix}_tomb``,
          run the family's ``compact(spark, prefix)``. A tombstoned id
@@ -118,19 +199,21 @@ def unindexed_rows(
          while dropping its tombstone would resurrect its old rows;
          after the fold the id is absent from every part;
       2. anti-join the batch on ``id_col`` of the membership table
-         ``{prefix}_{member}`` (one row per indexed id), so a
-         re-delivered epoch yields nothing -- its ids are live members
-         by then, so it triggers no compaction either;
+         ``{prefix}_{part}``, so a re-delivered epoch yields nothing --
+         its ids are live members by then, so it triggers no
+         compaction either;
       3. pin the result with localCheckpoint, so the tables are read
          once, before the caller appends to them."""
     spark = batch.sparkSession
-    tomb = f"{prefix}_tomb"
-    if spark.catalog.tableExists(tomb) and not batch.join(
-        spark.table(tomb), id_col, "left_semi"
+    dead = index_table(spark, f"{prefix}_tomb")
+    if dead is not None and not batch.join(
+        dead, id_col, "left_semi"
     ).isEmpty():
         compact(spark, prefix)
+    part, keys = member
+    members = index_table(spark, f"{prefix}_{part}", keys)
     return batch.join(
-        spark.table(f"{prefix}_{member}").select(id_col), id_col, "left_anti"
+        members.select(id_col), id_col, "left_anti"
     ).localCheckpoint()
 
 
@@ -143,39 +226,26 @@ def compact_index(
     """Fold the tombstones into the index: rewrite each part table
     ``{prefix}_{part}`` as its live_index view, re-bucketed on its
     ``parts[part]`` keys, so probe plans keep their zero-exchange
-    shape. The live rows are staged in a scratch parquet dir first
-    (the bucketed rewrite cannot read the table it overwrites).
-    ``before_drop()``, if given, runs after the rewrite and before the
-    tombstone table is dropped; a crash between a finished part
-    rewrite and the drop is repaired by running the compaction again,
-    since the tombstones still filter every part. Returns the exact row
-    funnel: ``prefix``, ``{part}_rows_before`` / ``_after`` /
+    shape. write_bucketed swaps each part in only once its rewrite is
+    complete, so a failure leaves every part whole, and the tombstones
+    still filter it. ``before_drop()``, if given, runs after the
+    rewrite and before the tombstone table is dropped; a crash before
+    the drop is repaired by running the compaction again. Returns the
+    exact row funnel: ``prefix``, ``{part}_rows_before`` / ``_after`` /
     ``_dropped`` and ``n_tombstones``."""
-    import tempfile
-
     funnel: dict = {"prefix": prefix}
-    tomb = f"{prefix}_tomb"
-    funnel["n_tombstones"] = (
-        spark.table(tomb).distinct().count()
-        if spark.catalog.tableExists(tomb)
-        else 0
-    )
+    dead = index_table(spark, f"{prefix}_tomb")
+    funnel["n_tombstones"] = 0 if dead is None else dead.distinct().count()
     lives = live_index(spark, prefix, parts)
-    scratch = tempfile.mkdtemp(prefix=f"{prefix}_compact_")
-    try:
-        for (part, keys), live in zip(parts.items(), lives):
-            n_before = spark.table(f"{prefix}_{part}").count()
-            live.write.parquet(f"{scratch}/{part}")
-            staged = spark.read.parquet(f"{scratch}/{part}")
-            n_after = write_bucketed(staged, f"{prefix}_{part}", keys).count()
-            funnel[f"{part}_rows_before"] = n_before
-            funnel[f"{part}_rows_after"] = n_after
-            funnel[f"{part}_rows_dropped"] = n_before - n_after
-        if before_drop is not None:
-            before_drop()
-        spark.sql(f"DROP TABLE IF EXISTS {tomb}")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    for (part, keys), live in zip(parts.items(), lives):
+        n_before = index_table(spark, f"{prefix}_{part}", keys).count()
+        n_after = write_bucketed(live, f"{prefix}_{part}", keys).count()
+        funnel[f"{part}_rows_before"] = n_before
+        funnel[f"{part}_rows_after"] = n_after
+        funnel[f"{part}_rows_dropped"] = n_before - n_after
+    if before_drop is not None:
+        before_drop()
+    drop_index_table(spark, f"{prefix}_tomb")
     return funnel
 
 

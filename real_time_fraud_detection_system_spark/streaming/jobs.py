@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..storage import (
-    STORE_PARTITION_COL, append_bucketed, commit_epoch, unindexed_rows,
+    STORE_PARTITION_COL, append_bucketed, commit_epoch, index_table,
+    unindexed_rows,
 )
 
 
@@ -379,14 +380,15 @@ def ann_index_sink_writer(prefix: str = "ann_idx"):
         )
 
         spark = batch_df.sparkSession
-        cents = spark.table(f"{prefix}_cents").orderBy("c_id").collect()
+        cents = index_table(spark, f"{prefix}_cents").orderBy("c_id").collect()
         members = _ann_members(
             _widen(batch_df),
             [r["c_id"] for r in cents],
             [r["c_emb"] for r in cents],
         )
+        member = ("members", _INDEX_PARTS["members"])
         fresh = unindexed_rows(
-            members, prefix, "members", "m_id", compact_ann_index
+            members, prefix, member, "m_id", compact_ann_index
         )
         if fresh.isEmpty():
             return  # full replay: every vector already indexed
@@ -399,11 +401,12 @@ def dedup_index_sink_writer(pairs_dir: str, prefix: str = "dedup_idx"):
     """foreachBatch hook over a (doc_id, text) document stream (the
     dedup.py shard-vs-index path as a streaming job): each micro-batch
     probes the live persisted dedup index (live_dedup_index, with
-    incremental_dedup_pairs_indexed), writes the verified pairs its
+    incremental_dedup_pairs), writes the verified pairs its
     arrival adds under ``pairs_dir/epoch_id=N``, then appends its
     signature and band rows to ``{prefix}_sig`` / ``{prefix}_band``.
     The first non-empty batch creates the (empty) tables; a corpus
-    indexed with persist_dedup_index is grown in place.
+    indexed with persist_dedup_index, in this process or an earlier
+    one (``storage.index_table``), is grown in place.
 
     Exactly-once under replays: the batch's new docs are
     ``storage.unindexed_rows`` on the signature table's doc_id, so a
@@ -423,20 +426,21 @@ def dedup_index_sink_writer(pairs_dir: str, prefix: str = "dedup_idx"):
             _INDEX_PARTS,
             _band_rows,
             compact_dedup_index,
-            incremental_dedup_pairs_indexed,
+            incremental_dedup_pairs,
             live_dedup_index,
             persist_dedup_index,
             signature_index,
         )
 
         spark = batch_df.sparkSession
-        if not spark.catalog.tableExists(f"{prefix}_sig"):
+        member = ("sig", _INDEX_PARTS["sig"])
+        if index_table(spark, f"{prefix}_sig", member[1]) is None:
             if batch_df.isEmpty():
                 return
             # first batch: create the empty tables, then append as usual
             persist_dedup_index(batch_df.limit(0), prefix)
         fresh = unindexed_rows(
-            batch_df, prefix, "sig", "doc_id", compact_dedup_index
+            batch_df, prefix, member, "doc_id", compact_dedup_index
         )
         if fresh.isEmpty():
             return  # full replay: everything already indexed
@@ -445,9 +449,7 @@ def dedup_index_sink_writer(pairs_dir: str, prefix: str = "dedup_idx"):
         commit_epoch(
             pairs_dir,
             epoch_id,
-            incremental_dedup_pairs_indexed(
-                *live_dedup_index(spark, prefix), new_sigs
-            )
+            incremental_dedup_pairs(*live_dedup_index(spark, prefix), new_sigs)
             .withColumn("epoch_id", F.lit(int(epoch_id)))
             .write.partitionBy("epoch_id")
             .parquet,
@@ -489,11 +491,12 @@ def ingest_census_sink_writer(census_dir: str, prefix: str = "dedup_idx"):
     census costs the shard, not the corpus."""
 
     def write(batch_df: DataFrame, epoch_id: int, staging: str) -> None:
-        from ..operators.dedup import live_dedup_index
+        from ..operators.dedup import _INDEX_PARTS, live_dedup_index
 
         spark = batch_df.sparkSession
         docs = batch_df.select("doc_id", "source", "n_chars")
-        if spark.catalog.tableExists(f"{prefix}_sig"):
+        sig_t = index_table(spark, f"{prefix}_sig", _INDEX_PARTS["sig"])
+        if sig_t is not None:
             known = live_dedup_index(spark, prefix)[0].select("doc_id")
             tagged = docs.join(
                 known.withColumn("_known", F.lit(1)), "doc_id", "left"
@@ -556,12 +559,13 @@ def text_index_sink_writer(prefix: str = "text_idx"):
         )
 
         spark = batch_df.sparkSession
-        if not spark.catalog.tableExists(f"{prefix}_doc"):
+        member = ("doc", _INDEX_PARTS["doc"])
+        if index_table(spark, f"{prefix}_doc", member[1]) is None:
             if not batch_df.isEmpty():
                 persist_text_index(batch_df, prefix=prefix)
             return
         fresh = unindexed_rows(
-            batch_df, prefix, "doc", "doc_id", compact_text_index
+            batch_df, prefix, member, "doc_id", compact_text_index
         )
         if fresh.isEmpty():
             return  # full replay: everything already indexed
@@ -576,12 +580,7 @@ def text_index_sink_writer(prefix: str = "text_idx"):
             f"{prefix}_doc",
             _INDEX_PARTS["doc"],
         )
-        (
-            build_text_stats(fresh)
-            .write.mode("append")
-            .format("parquet")
-            .saveAsTable(f"{prefix}_stats")
-        )
+        append_bucketed(build_text_stats(fresh), f"{prefix}_stats", ())
 
     return write_batch
 

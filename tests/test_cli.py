@@ -388,3 +388,101 @@ def test_cli_snapshot_lifecycle(spark, tmp_path):
     assert code == 0 and json.loads(lines[0])["rows"] > 0
     code, lines = _run(["snapshot", "expire", "--table-dir", t])
     assert json.loads(lines[0])["dropped_manifests"] == 1
+
+
+RESTART_SCRIPT = r"""
+import io, json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from real_time_fraud_detection_system_spark.__main__ import main
+from real_time_fraud_detection_system_spark.catalog import load_table
+from real_time_fraud_detection_system_spark.operators.dedup import (
+    _shard_pred_spark,
+)
+from real_time_fraud_detection_system_spark.session import get_spark
+from real_time_fraud_detection_system_spark.streaming.jobs import (
+    dedup_index_sink_writer,
+)
+
+sf_dir, pairs_dir = {sf_dir!r}, {pairs_dir!r}
+out = {{}}
+for name, argv in (
+    ("ann", ["ann-index", "search", "--prefix", "t_rs_ann"]),
+    ("probe", ["dedup-index", "probe", "--prefix", "t_rs_dd"]),
+):
+    buf = io.StringIO()
+    assert main(["--sf-dir", sf_dir, "--limit", "1000", *argv], out=buf) == 0
+    out[name] = [json.loads(x) for x in buf.getvalue().splitlines()]
+spark = get_spark()
+shard = load_table(spark, sf_dir, "documents").filter(
+    F.expr(_shard_pred_spark())
+)
+dedup_index_sink_writer(pairs_dir, "t_rs_dd")(shard, 0)
+print(json.dumps(out))
+"""
+
+
+def test_persisted_indexes_survive_a_restart(spark, sf_dir, tmp_path):
+    """A second process sees the indexes this one persisted: it
+    searches the ANN index and probes the dedup index through the CLI,
+    then streams the shard into the dedup index through the sink,
+    which must grow the persisted index rather than start a new one.
+    The in-memory session catalog does not carry over, so this runs
+    only if the tables are found again from their warehouse dirs."""
+    import subprocess
+    import sys
+    from urllib.parse import urlparse
+
+    from pyspark.sql import functions as F
+
+    from real_time_fraud_detection_system_spark.catalog import load_table
+    from real_time_fraud_detection_system_spark.operators.dedup import (
+        _shard_pred_spark,
+        persist_dedup_index,
+    )
+    from real_time_fraud_detection_system_spark.operators.similarity import (
+        persist_ann_index,
+    )
+    from real_time_fraud_detection_system_spark.storage import (
+        drop_index_table,
+    )
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    assert os.path.basename(warehouse) == "spark-warehouse"
+    docs = load_table(spark, sf_dir, "documents")
+    is_new = F.expr(_shard_pred_spark())
+    tables = ("t_rs_ann_cents", "t_rs_ann_members", "t_rs_dd_sig",
+              "t_rs_dd_band")
+    pairs_dir = str(tmp_path / "pairs")
+    try:
+        persist_ann_index(spark, sf_dir, prefix="t_rs_ann")
+        persist_dedup_index(docs.filter(~is_new), prefix="t_rs_dd")
+        before = {t: spark.table(t).count() for t in tables}
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = RESTART_SCRIPT.format(
+            repo=repo, sf_dir=sf_dir, pairs_dir=pairs_dir
+        )
+        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+                   SPARK_GRAFT_CPUS="2")
+        proc = subprocess.run(
+            [sys.executable, "-c", script], cwd=os.path.dirname(warehouse),
+            env=env, capture_output=True, text=True, timeout=900,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["ann"] and {"q_id", "neighbor_id"} <= set(out["ann"][0])
+        assert out["probe"]
+        for t in tables:
+            spark.catalog.refreshTable(t)
+        after = {t: spark.table(t).count() for t in tables}
+        assert all(after[t] >= before[t] for t in tables), (before, after)
+        n_shard = docs.filter(is_new).count()
+        assert after["t_rs_dd_sig"] == before["t_rs_dd_sig"] + n_shard
+        # the sink probed the same surviving index the CLI probed
+        sunk = spark.read.parquet(pairs_dir).collect()
+        assert {(r["a_id"], r["b_id"]) for r in sunk} == {
+            (r["a_id"], r["b_id"]) for r in out["probe"]
+        }
+    finally:
+        for t in tables:
+            drop_index_table(spark, t)

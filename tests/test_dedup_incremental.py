@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_spark.catalog import load_table
 from real_time_fraud_detection_system_spark.operators.dedup import (
+    _band_rows,
     _shard_pred_spark,
     dedup_incremental,
     dedup_minhash_lsh,
@@ -155,7 +156,7 @@ def test_indexed_incremental_matches_and_skips_index_shuffle(spark, sf_dir):
     signature table are pre-shuffled at persist time."""
     from real_time_fraud_detection_system_spark.operators.dedup import (
         _band_table,
-        incremental_dedup_pairs_indexed,
+        incremental_dedup_pairs,
         persist_dedup_index,
     )
     from real_time_fraud_detection_system_spark.plans.explain_checks import (
@@ -169,7 +170,7 @@ def test_indexed_incremental_matches_and_skips_index_shuffle(spark, sf_dir):
         sig_t, band_t = persist_dedup_index(corpus, prefix="t_dedup_idx")
         new_sigs = signature_index(shard)
 
-        got = incremental_dedup_pairs_indexed(sig_t, band_t, new_sigs)
+        got = incremental_dedup_pairs(sig_t, band_t, new_sigs)
         assert _pairs_set(got) == _pairs_set(dedup_incremental(spark, sf_dir))
 
         # band probe: joining adds exactly ONE exchange over the shard
@@ -246,14 +247,12 @@ def test_dedup_sink_skips_tombstoned_doc_and_reindexes_it(
         [(new_id, dead["text"])], "doc_id long, text string"
     )
     # non-vacuous: against a live copy of the doc, the arrival pairs
+    live = signature_index(docs.filter(F.col("doc_id") == dead["doc_id"]))
     assert (dead["doc_id"], new_id) in {
         (a, b)
         for a, b, _ in _pairs_set(
             incremental_dedup_pairs(
-                signature_index(
-                    docs.filter(F.col("doc_id") == dead["doc_id"])
-                ),
-                signature_index(near_dup),
+                live, _band_rows(live), signature_index(near_dup)
             )
         )
     }
@@ -308,7 +307,7 @@ def test_tombstone_live_probe_and_compaction(spark, sf_dir):
     results are unchanged."""
     from real_time_fraud_detection_system_spark.operators.dedup import (
         compact_dedup_index,
-        incremental_dedup_pairs_indexed,
+        incremental_dedup_pairs,
         live_dedup_index,
         persist_dedup_index,
         tombstone_dedup_index,
@@ -335,12 +334,12 @@ def test_tombstone_live_probe_and_compaction(spark, sf_dir):
 
         sig_t, band_t = live_dedup_index(spark, "t_tomb_idx")
         new_sigs = signature_index(shard)
-        got = incremental_dedup_pairs_indexed(sig_t, band_t, new_sigs)
+        got = incremental_dedup_pairs(sig_t, band_t, new_sigs)
 
         want_sig, want_band = persist_dedup_index(
             live_corpus, prefix="t_tomb_want"
         )
-        want = incremental_dedup_pairs_indexed(
+        want = incremental_dedup_pairs(
             want_sig, want_band, new_sigs
         )
         assert _pairs_set(got) == _pairs_set(want)
@@ -366,7 +365,7 @@ def test_tombstone_live_probe_and_compaction(spark, sf_dir):
         assert not spark.catalog.tableExists("t_tomb_idx_tomb")
 
         sig2, band2 = live_dedup_index(spark, "t_tomb_idx")
-        got2 = incremental_dedup_pairs_indexed(sig2, band2, new_sigs)
+        got2 = incremental_dedup_pairs(sig2, band2, new_sigs)
         assert _pairs_set(got2) == _pairs_set(want)
     finally:
         for t in (

@@ -45,6 +45,61 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
+def test_repersist_replaces_every_index_table(spark, sf_dir):
+    """Persisting an index again rebuilds it whole: a tombstone
+    recorded against the old build must not filter the new one, for
+    each of the three index families."""
+    from real_time_fraud_detection_system_spark.operators.dedup import (
+        live_dedup_index,
+        persist_dedup_index,
+        tombstone_dedup_index,
+    )
+    from real_time_fraud_detection_system_spark.operators.similarity import (
+        live_ann_members,
+        persist_ann_index,
+        tombstone_ann_index,
+    )
+    from real_time_fraud_detection_system_spark.operators.textops import (
+        live_text_index,
+        persist_text_index,
+        tombstone_text_index,
+    )
+    from real_time_fraud_detection_system_spark.storage import (
+        drop_index_table,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    families = (
+        (lambda: persist_dedup_index(docs, "t_rp_dd"),
+         lambda ids: tombstone_dedup_index(spark, ids, "t_rp_dd"),
+         lambda: live_dedup_index(spark, "t_rp_dd")[0], "doc_id"),
+        (lambda: persist_text_index(docs, "t_rp_tx"),
+         lambda ids: tombstone_text_index(spark, ids, "t_rp_tx"),
+         lambda: live_text_index(spark, "t_rp_tx")[1], "doc_id"),
+        (lambda: persist_ann_index(spark, sf_dir, "t_rp_ann"),
+         lambda ids: tombstone_ann_index(spark, ids, "t_rp_ann"),
+         lambda: live_ann_members(spark, "t_rp_ann"), "m_id"),
+    )
+    try:
+        for persist, tombstone, live, id_col in families:
+            persist()
+            n = live().count()
+            first = live().selectExpr(f"min({id_col}) AS id").first()["id"]
+            id_name = "vec_id" if id_col == "m_id" else "doc_id"
+            assert tombstone(
+                spark.createDataFrame([(first,)], f"{id_name} bigint")
+            ) == 1
+            assert live().count() == n - 1
+            persist()
+            assert live().count() == n
+    finally:
+        for t in ("t_rp_dd_sig", "t_rp_dd_band", "t_rp_dd_tomb",
+                  "t_rp_tx_post", "t_rp_tx_doc", "t_rp_tx_stats",
+                  "t_rp_tx_tomb", "t_rp_ann_cents", "t_rp_ann_members",
+                  "t_rp_ann_tomb"):
+            drop_index_table(spark, t)
+
+
 def test_stream_static_enrichment(spark, tmp_path):
     from real_time_fraud_detection_system_spark.sources.generators import (
         transactions_batch,

@@ -43,11 +43,12 @@ def _fresh_bm25(docs, terms, k=BM25_TOPK):
     """bm25_topk's exact pipeline over an arbitrary docs frame -- the
     ground truth the index probe must reproduce bit-for-bit."""
     tf = build_postings(docs).filter(F.col("t").isin(list(terms)))
-    stats = build_text_stats(docs).selectExpr(
-        "CAST(n_docs AS DOUBLE) AS n_docs",
-        "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl",
+    qmap = docs.sparkSession.createDataFrame(
+        [(0, t) for t in terms], "q_id int, t string"
     )
-    return _bm25_rank(tf, stats, k)
+    return _bm25_rank(tf, qmap, build_text_stats(docs), k).select(
+        "doc_id", "score_fp"
+    )
 
 
 def test_indexed_topk_equals_fresh(spark, sf_dir):
@@ -502,3 +503,43 @@ def test_batch_topk_equals_per_query_runs(spark, sf_dir):
             for i, r in enumerate(_fresh_bm25(docs, terms).collect())
         ]
         assert got_q == want, f"query {qi} {terms}"
+
+
+def test_failed_compaction_rewrite_keeps_the_part_table(
+    spark, sf_dir, monkeypatch
+):
+    """A compaction whose rewrite of the doc part fails must leave that
+    part whole: the live index still answers from it, and running the
+    compaction again finishes the fold."""
+    import real_time_fraud_detection_system_spark.storage as storage
+
+    docs = load_table(spark, sf_dir, "documents")
+    removed = docs.filter("doc_id % 5 = 0").select("doc_id")
+    live_docs = docs.filter("doc_id % 5 <> 0")
+    real_append = storage.append_bucketed
+
+    def failing_doc_append(df, table, keys):
+        if table.startswith(f"{PREFIX}_doc"):
+            raise RuntimeError("doc append failed")
+        return real_append(df, table, keys)
+
+    try:
+        persist_text_index(docs, prefix=PREFIX)
+        assert tombstone_text_index(spark, removed, prefix=PREFIX) > 0
+        monkeypatch.setattr(storage, "append_bucketed", failing_doc_append)
+        with pytest.raises(RuntimeError, match="doc append failed"):
+            compact_text_index(spark, prefix=PREFIX)
+        monkeypatch.setattr(storage, "append_bucketed", real_append)
+
+        assert live_text_index(spark, PREFIX)[1].count() == live_docs.count()
+        assert _rows(bm25_search(spark, BM25_TERMS, prefix=PREFIX)) == _rows(
+            _fresh_bm25(live_docs, BM25_TERMS)
+        )
+        funnel = compact_text_index(spark, prefix=PREFIX)
+        assert funnel["doc_rows_after"] == live_docs.count()
+        assert not spark.catalog.tableExists(f"{PREFIX}_tomb")
+        assert _rows(bm25_search(spark, BM25_TERMS, prefix=PREFIX)) == _rows(
+            _fresh_bm25(live_docs, BM25_TERMS)
+        )
+    finally:
+        _drop_index(spark)

@@ -92,15 +92,13 @@ ALLOWLIST: dict[str, frozenset[str]] = {
     # so no scalar-aggregate exchange exists; the corpus-sized work
     # is the term-filtered postings scan.
     "bm25_indexed_topk": frozenset({"NLJ"}),
-    # bm25_discovered_topk: the same scalar-anchor NLJs -- the 1-row
-    # (n_docs) frame beside the per-term df distances in the term
-    # pick, and the 1-row stats anchor inside _bm25_rank; the picked
-    # term set itself is a BM25_DISC_TERMS_K-row hash-joinable
-    # broadcast, not an NLJ.
+    # bm25_discovered_topk: the same scalar-anchor NLJ -- the 1-row
+    # stats anchor inside _bm25_rank; the term pick runs as its own
+    # BM25_DISC_TERMS_K-row collect before the probe is planned.
     "bm25_discovered_topk": frozenset({"NLJ"}),
     # bm25_batch_topk: the same pre-aggregated 1-row stats broadcast
-    # (scalar-anchor NLJ); the (q_id, t) query map and per-term df
-    # joins are broadcast HASH joins, and the top-k window is
+    # (scalar-anchor NLJ); the (q_id, t) query map is a broadcast HASH
+    # join, df a t-partitioned window, and the top-k window is
     # q_id-partitioned -- corpus-sized work is the one term-filtered
     # postings scan shared by all queries.
     "bm25_batch_topk": frozenset({"NLJ"}),
@@ -112,11 +110,10 @@ ALLOWLIST: dict[str, frozenset[str]] = {
     # memoized postings scan.
     "text_index_stats": frozenset({"NLJ", "1PART"}),
     # hybrid_topk: inherits bm25_topk's scalar-anchor NLJ/1PART; the
-    # GLOBALWIN is the un-partitioned row_number over the BM25
-    # TakeOrdered output -- a CONSTANT {BM25_TOPK}=20-row frame at any
-    # corpus size (the fusion join itself is two top-K frames). The
+    # lexical ranks come from the BM25 scorer's q_id-partitioned
+    # window, and the fusion join itself is two top-K frames. The
     # corpus-sized work is the two components' own audited plans.
-    "hybrid_topk": frozenset({"NLJ", "1PART", "GLOBALWIN"}),
+    "hybrid_topk": frozenset({"NLJ", "1PART"}),
     # top_session_paths: the 1PART is the total-sessions window over
     # the O(distinct paths) rollup -- the source_mixture_plan
     # near-scalar pattern; the corpus-sized work is the user-keyed

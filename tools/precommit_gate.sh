@@ -16,7 +16,8 @@
 # an index artifact's values to a hand-computed reference, plus the
 # memo layer's invalidation/eviction contract; then the sink,
 # tombstone and compaction tests of the three persisted index
-# families (dedup, text, ANN).
+# families (dedup, text, ANN), the re-persist test and the restart
+# test (a second process finds the persisted indexes again).
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/test_memo.py -q --no-header
@@ -24,6 +25,9 @@ python -m pytest tests/test_operators.py tests/test_properties.py \
     -k "hand_reference or memo or fingerprint or signature or minhash or simhash" \
     -q --no-header
 python -m pytest tests/test_dedup_incremental.py tests/test_text_index.py \
+    -q --no-header
+python -m pytest tests/test_storage.py::test_repersist_replaces_every_index_table \
+    tests/test_cli.py::test_persisted_indexes_survive_a_restart \
     -q --no-header
 python -m pytest tests/test_operators.py \
     -k "persisted_ann_index or ann_index_sink or ann_tombstone or ann_index_stats" \
