@@ -86,6 +86,20 @@ ROCKSDB_PROVIDER = (
 )
 
 
+# Streaming checkpoint files (offsets, commits, state-store deltas and
+# their checksums) are written through Hadoop's FileContext by default.
+# Without libhadoop, FileContext on the local file system shells out to
+# `chmod` for every file and directory it creates and to `readlink` on
+# every rename: 200+ short-lived child processes per streaming run,
+# each spawned by the multi-GB JVM. The FileSystem-based manager writes
+# a temp file and renames it with one rename(2) call, which is atomic
+# on local disks and HDFS, and spawns less than half as many children.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 def rocksdb_state_conf() -> dict[str, str]:
     return {
         "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
@@ -118,6 +132,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config(NANOS_AS_LONG, "true")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
