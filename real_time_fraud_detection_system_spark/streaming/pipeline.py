@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import conf_override
+
 TRANSACTION_SCHEMA = T.StructType(
     [
         T.StructField("transaction_id", T.StringType()),
@@ -253,10 +255,11 @@ def run_pipeline_with_registry(
     mid-stream operator swap, so the pragmatic equivalent (SURVEY.md
     section 7 'what's hard') is scoring inside ``foreachBatch`` and
     re-resolving the Production pointer every epoch: a batch DataFrame
-    can be transformed by a freshly loaded model, the streaming plan
-    itself never changes. ``load_production`` memoizes the load, so an
-    epoch under an unchanged Production pays one pointer read and one
-    stat. Dedup stays stream-side (it is stateful); scoring moves
+    can be scored by a freshly loaded model, the streaming plan itself
+    never changes. ``load_production`` memoizes the load and ``score``
+    compiles each loaded model once, so an epoch under an unchanged
+    Production pays one pointer read, one stat and one projection.
+    Dedup stays stream-side (it is stateful); scoring moves
     batch-side."""
     # resolved at call time, so tests and tracers can patch score,
     # load_production and prediction_sink_writer on their modules
@@ -279,7 +282,17 @@ def run_pipeline_with_registry(
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     else:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    # Dedup emits rows only when data arrives, and its watermark filter
+    # drops a late row whether or not expired state is gone yet, so a
+    # no-data micro-batch would only evict state one batch early (an
+    # empty batch at the end of every drain). The query clones the
+    # session at start(), so the setting reaches this query only.
+    with conf_override(
+        transactions.sparkSession,
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "false",
+    ):
+        return writer.start()
 
 
 def windowed_counts(transactions: DataFrame) -> DataFrame:

@@ -1,14 +1,25 @@
 """M2-M8 training + scoring tests (SURVEY.md section 2.8)."""
 
 import json
+import math
 import os
+import random
 import shutil
 import threading
+import time
+import uuid
 
 import pytest
+from pyspark.ml import Pipeline
+from pyspark.ml.classification import LogisticRegression
+from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.functions import vector_to_array
+from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_spark.ml import training
 from real_time_fraud_detection_system_spark.ml.scoring import (
+    _request_features,
+    compiled,
     score,
     score_one,
 )
@@ -20,6 +31,7 @@ from real_time_fraud_detection_system_spark.ml.training import (
     train_and_register,
 )
 from real_time_fraud_detection_system_spark.sources.generators import (
+    FEATURE_ORDER,
     training_frame,
 )
 from real_time_fraud_detection_system_spark.streaming.pipeline import (
@@ -101,15 +113,11 @@ def test_feature_defaults_and_extras(spark):
         {"transaction_id": "x", "amount": None,
          "features": {"merchant_risk": 0.5, "bogus_key": 9.9}},
     )
-    from real_time_fraud_detection_system_spark.ml.scoring import (
-        project_features,
-    )
-
-    row = project_features(df).first()
+    row = score(df, None).first()
     assert row["amount"] == 0.0  # P5 default
     assert row["num_items"] == 0.0 and row["hour"] == 0.0
     assert row["merchant_risk"] == 0.5
-    assert "bogus_key" not in project_features(df).columns
+    assert "bogus_key" not in score(df, None).columns
 
 
 def test_score_one_request_response(spark, registry):
@@ -165,6 +173,214 @@ def test_score_one_coerces_amount_like_score(spark, registry, amount, features):
         out = score_one(spark, m, tx)
         assert out["prediction"] == ref["prediction"]
         assert out["proba"] == pytest.approx(ref["proba"], rel=1e-12)
+
+
+def _stream_payloads(n, seed):
+    """n wire payloads with the stream's marginals; about one feature in
+    five is missing or null, and some amounts and feature objects are."""
+    rng = random.Random(seed)
+    out = []
+    for i in range(n):
+        features = {
+            "num_items": rng.randint(1, 6),
+            "merchant_risk": rng.random(),
+            "hour": float(rng.randrange(24)),
+        }
+        for name in list(features):
+            r = rng.random()
+            if r < 0.1:
+                del features[name]
+            elif r < 0.2:
+                features[name] = None
+        amount = round(math.exp(rng.gauss(3.0, 1.0)), 2)
+        if rng.random() < 0.05:
+            amount = round(amount * rng.uniform(5.0, 60.0), 2)
+        tx = {"transaction_id": f"p{i}", "amount": amount, "features": features}
+        r = rng.random()
+        if r < 0.05:
+            del tx["amount"]
+        elif r < 0.1:
+            tx["amount"] = None
+        elif r < 0.12:
+            tx["features"] = None
+        elif r < 0.14:
+            del tx["features"]
+        out.append(tx)
+    return out
+
+
+@pytest.fixture(scope="module")
+def stream_rows(spark):
+    return _parsed(spark, *_stream_payloads(10_000, seed=5)).cache()
+
+
+@pytest.fixture(scope="module")
+def constant_feature_model(spark):
+    """The registry's model shape trained with ``hour`` constant, so the
+    scaler's std for it is 0."""
+    df = training_frame(spark, 3000, seed=11).withColumn("hour", F.lit(5.0))
+    model, _ = training.train(df, seed=11)
+    return model
+
+
+def _mllib_gap(model, scored):
+    """(max relative error of proba against MLlib's probability[1],
+    prediction flips) over a score() output."""
+    ref = vector_to_array(F.col("probability")).getItem(1)
+    return model.transform(
+        scored.withColumnRenamed("prediction", "compiled_prediction")
+    ).select(
+        F.max(F.abs(F.col("proba") - ref) / ref),
+        F.sum((F.col("compiled_prediction") != (ref >= 0.5).cast("int")).cast("int")),
+    ).first()
+
+
+def test_compiled_score_matches_mllib_transform(
+    spark, registry, stream_rows, constant_feature_model
+):
+    model, version = load_production(spark, registry[0])
+    assert constant_feature_model.stages[1].std[FEATURE_ORDER.index("hour")] == 0.0
+    assert stream_rows.filter(F.col("features.hour").isNull()).count() > 0
+    assert stream_rows.filter(F.col("amount").isNull()).count() > 0
+    for m in (model, constant_feature_model):
+        assert compiled(m) is not None
+        rel, flips = _mllib_gap(m, score(stream_rows, m, version))
+        assert rel <= 1e-12 and flips == 0
+
+
+def test_other_pipeline_shape_scores_through_transform(spark, registry, stream_rows):
+    no_scaler = Pipeline(stages=[
+        VectorAssembler(inputCols=list(FEATURE_ORDER), outputCol="vec"),
+        LogisticRegression(featuresCol="vec", maxIter=50),
+    ]).fit(training_frame(spark, 2000, seed=5))
+    assert compiled(no_scaler) is None
+    model, _ = load_production(spark, registry[0])
+    got = score(stream_rows, no_scaler, "x")
+    assert got.dtypes == score(stream_rows, model, "x").dtypes
+    lr = no_scaler.stages[1]
+    coef, b = lr.coefficients.toArray(), lr.intercept
+    rows = got.limit(2000).collect()
+    for r in rows:
+        margin = b + sum(c * r[name] for c, name in zip(coef, FEATURE_ORDER))
+        assert r["proba"] == pytest.approx(1.0 / (1.0 + math.exp(-margin)), rel=1e-9)
+        assert r["prediction"] == int(r["proba"] >= 0.5)
+        assert r["model_version"] == "x"
+
+
+def test_heuristic_scores_every_row(stream_rows):
+    got = score(stream_rows, None)
+    want = F.when(F.col("amount") > 1000, 1.0).otherwise(0.05)
+    assert got.filter(F.col("amount") > 1000).count() > 0
+    assert got.filter(
+        (F.col("proba") != want)
+        | (F.col("prediction") != (F.col("proba") >= 0.5).cast("int"))
+        | F.col("model_version").isNotNull()
+    ).count() == 0
+
+
+def _request_corpus(n, seed):
+    """n request payloads; each field is a clean value three times in
+    four and otherwise one the wire parse has to coerce, null or skip."""
+    rng = random.Random(seed)
+    odd_double = [True, False, "12.5", "abc", "NaN", "Infinity", "-Infinity",
+                  "", float("nan"), float("inf"), -float("inf"), 10**400,
+                  1e308, -1e308, 2**63 + 1, [], {}]
+    odd_int = [2.7, 3.0, -1.5, 2**31, -(2**31) - 1, 2**31 - 1, -(2**31),
+               10**20, True, "3", "NaN", [1]]
+    odd_features = [_MISSING, None, [], "x", 5, True, {}, {"bogus_key": 9.9}]
+
+    def double(clean):
+        if rng.random() < 0.75:
+            return rng.choice([clean, None, _MISSING, rng.randint(-5, 10**6)])
+        return rng.choice(odd_double)
+
+    out = []
+    for i in range(n):
+        features = {}
+        for name, value in (
+            ("num_items",
+             rng.randint(0, 9) if rng.random() < 0.75 else rng.choice(odd_int)),
+            ("merchant_risk", double(rng.random())),
+            ("hour", double(float(rng.randrange(24)))),
+        ):
+            if value is not _MISSING:
+                features[name] = value
+        if rng.random() < 0.15:
+            features = rng.choice(odd_features)
+        tx = {"seq": i, "transaction_id": f"r{i}",
+              "event_time": "2024-01-01T00:00:00Z"}
+        amount = double(round(math.exp(rng.gauss(3.0, 1.5)), 2))
+        for key, value in (("amount", amount), ("features", features)):
+            if value is not _MISSING:
+                tx[key] = value
+        r = rng.random()
+        if r < 0.03:
+            tx["Amount"] = tx.pop("amount", 1e6)
+        elif r < 0.06:
+            tx["event_time"] = "not a time"
+        elif r < 0.09:
+            tx["transaction_id"] = i
+        out.append(tx)
+    return out
+
+
+def test_score_one_matches_score_on_a_request_corpus(spark, registry):
+    # S9/P5: every payload -- clean ones answered in Python, the rest by
+    # the engine -- scores as score() scores the same wire payload
+    corpus = _request_corpus(1000, seed=2024)
+    wire = [json.dumps(tx) for tx in corpus]
+    typed = sum(_request_features(json.loads(w)) is not None for w in wire)
+    assert 300 < typed < 700, "the corpus mixes both request paths"
+    parsed = _parsed(spark, *corpus)
+    model, version = load_production(spark, registry[0])
+    # the heuristic shares both request paths; a quarter of the corpus
+    # keeps its coerced payloads' engine round trips to a few seconds
+    for m, v, step in ((model, version, 1), (None, None, 4)):
+        ref = {
+            r["raw_payload"]: r
+            for r in score(parsed, m, v)
+            .select("raw_payload", "prediction", "proba", "model_version")
+            .collect()
+        }
+        for tx, w in zip(corpus[::step], wire[::step]):
+            out, want = score_one(spark, m, tx, v), ref[w]
+            assert out["prediction"] == want["prediction"], w
+            assert out["proba"] == pytest.approx(
+                want["proba"], rel=1e-12, nan_ok=True
+            ), w
+            assert out["model_version"] == want["model_version"]
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs started while fn runs, read from the status tracker."""
+    sc = spark.sparkContext
+    group, marker = f"counted-{uuid.uuid4()}", f"marker-{uuid.uuid4()}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(marker, "marker")
+        spark.range(10).selectExpr("sum(id)").collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the tracker is fed in event order: once the marker job is in it,
+    # every job fn started is too
+    deadline = time.time() + 60
+    while not sc.statusTracker().getJobIdsForGroup(marker):
+        assert time.time() < deadline, "marker job never reached the tracker"
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_score_one_runs_no_spark_job(spark, registry):
+    model, version = load_production(spark, registry[0])
+    clean = {"transaction_id": "c", "amount": 42.0,
+             "features": {"num_items": 2, "merchant_risk": 0.6, "hour": 14.0}}
+    coerced = {"transaction_id": "e", "amount": "12.5",
+               "features": {"num_items": 2.7, "merchant_risk": True}}
+    assert _request_features(clean) is not None
+    assert _request_features(coerced) is None
+    for tx in (clean, coerced):
+        assert _jobs_run_by(spark, lambda: score_one(spark, model, tx, version)) == 0
 
 
 @pytest.fixture

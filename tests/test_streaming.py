@@ -3,13 +3,16 @@ end-to-end hot path into the partitioned sink (SURVEY.md section 5.4)."""
 
 import glob
 import json
+import os
 
 
 from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_spark.streaming.pipeline import (
+    file_drop_source,
     parse_transactions,
     run_pipeline_with_registry,
+    valid_transactions,
 )
 from real_time_fraud_detection_system_spark.sources.generators import (
     transactions_stream,
@@ -221,3 +224,52 @@ def test_file_drop_source_end_to_end(spark, tmp_path):
     assert got["parsed"] == 40
     assert got["corrupt"] == 1
     assert got["scored"] == 40
+
+
+def test_drain_runs_no_empty_batch_and_keeps_dedup_state(spark, tmp_path):
+    """An availableNow drain runs one micro-batch per landed file and no
+    empty one at the end; the dedup state it leaves in the checkpoint
+    still drops an exact redelivery in the next drain."""
+    landing, out, ckpt = tmp_path / "landing", tmp_path / "out", tmp_path / "ckpt"
+    landing.mkdir()
+
+    def payload(i):
+        return json.dumps({
+            "transaction_id": f"s{i}",
+            "amount": 10.0 + i,
+            "features": {"num_items": 1 + i % 3, "merchant_risk": 0.5, "hour": 3.0},
+            "event_time": f"2024-01-01T10:{i:02d}:00Z",
+        })
+
+    def land(k, ids):
+        path = landing / f"part-{k}.json"
+        path.write_text("\n".join(payload(i) for i in ids) + "\n")
+        os.utime(path, (1_700_000_000 + k, 1_700_000_000 + k))
+
+    def drain():
+        q = run_pipeline_with_registry(
+            valid_transactions(file_drop_source(spark, str(landing), 1)),
+            str(out),
+            str(ckpt),
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+        return q.recentProgress
+
+    land(0, range(0, 10))
+    land(1, range(10, 20))
+    first = drain()
+    # id 15 is inside the 10-minute watermark (max event 10:19), so its
+    # redelivery must hit the dedup state, not the late-row filter
+    land(2, [*range(20, 30), 15])
+    second = drain()
+    assert [p["numInputRows"] for p in first + second] == [10, 10, 11]
+    dropped = sum(
+        op["customMetrics"]["numDroppedDuplicateRows"]
+        for p in second
+        for op in p["stateOperators"]
+    )
+    assert dropped == 1
+    store = spark.read.parquet(str(out))
+    assert store.count() == 30
+    assert store.select("transaction_id").distinct().count() == 30
